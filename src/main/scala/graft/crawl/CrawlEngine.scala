@@ -53,14 +53,21 @@ final case class CrawlConfig(
   * or map-side (SURVEY.md §4.2) — the claim's merge-on-read resolution
   * runs as a broadcast anti-join against the bounded since-compaction
   * delta keys (SnapshotTable.readStates fast path), and the dedup
-  * gate's candidate side reuses the first-occurrence agg partitioning. All state lives in SnapshotTables — resumable from
-  * any committed snapshot (C6).
+  * gate verifies only cuckoo positives, map-side against the resident
+  * key cache. All state lives in SnapshotTables — resumable from any
+  * committed snapshot (C6).
   *
   * Action budget per batch (driver-loop latency is the sandbox
-  * bottleneck, so it is engineered): claim-count, processing-commit,
-  * process-materialize, terminal-commit, payload-commit, maxSeq (prop
-  * read, zero jobs), enqueue (gate-count, seen-commit, append-commit)
-  * ≈ 9 Spark actions — but the batch's WALL time is the critical path,
+  * bottleneck, so it is engineered), for a batch-bounded claim (≤
+  * DriverRankMaxRows): claim-count, processing-commit, process-collect
+  * (the ok rows' (seq, outlinks): discovery ranking, entries, first
+  * occurrence and the cuckoo tier then run on the driver),
+  * terminal-commit, payload-commit, maxSeq and next-batch (prop reads,
+  * zero jobs), enqueue (one verify job over the filter positives —
+  * none when there are none — then seen-commit + append-commit only
+  * when something survives) ≈ 6–8 Spark actions plus hygiene; larger
+  * claim waves add the distributed discovery rank and the Spark gate.
+  * The batch's WALL time is the critical path,
   * not the sum: commits ride a single-thread commit lane that overlaps
   * compute wherever the crash-safety order allows. Per batch:
   *   [claim ∥ previous tail] → [processing-commit ∥ process] →
@@ -343,10 +350,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       }.flatten.toSeq
     }
     val base = currentMaxSeq + 1
-    val seeds = spark.createDataset(expanded.zipWithIndex.map { case (u, i) =>
+    // the expansion is already on the driver: the batch-bounded gate
+    val n = enqueueLocal(expanded.toSeq.zipWithIndex.map { case (u, i) =>
       SeedUrl(u, Frontier.NormalPriority, base + i.toLong)
-    }.toSeq)
-    val n = enqueue(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed), batchNo = 0L)
+    }, batchNo = 0L)
     keywords.commitUpsert(
       spark.createDataset(claimed.map { case (q, s) => (q, s, "searched") }.toSeq)
         .toDF("query", "seq", "state"))
@@ -393,10 +400,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       .withColumn("seq", lit(base) + col("__rn") - 1)
       .withColumn("priority", lit(Frontier.NormalPriority))
       .select("url", "priority", "seq").as[SeedUrl]
-    // boundedCandidates stays OFF: this is the unbounded-backlog path
-    // (a million-query expansion), exactly the caller dedupGate's
-    // broadcast-candidates contract excludes — the plain anti-join
-    // shuffles but never materializes the candidate set on the driver
+    // the Spark gate: this is the unbounded-backlog path (a
+    // million-query expansion), whose candidates never reach the driver
     val n = enqueue(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed),
       batchNo = 0L)
     keywords.commitUpsert(claimed
@@ -434,39 +439,23 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     n
   }
 
-  /** `boundedCandidates`: true when the candidate set is O(one batch)
-    * — discovery waves, keyword expansions — which lets the exact dedup
-    * tier broadcast the candidates instead of shuffling the key table
-    * (Frontier.dedupGate). Bulk seeding paths pass false. */
-  private def enqueue(entries: DataFrame, batchNo: Long,
-                      boundedCandidates: Boolean = false): Long = {
+  /** Spark-side enqueue: the gate for candidate sets that are not on
+    * the driver (bulk seeding, the executor-side keyword expansion,
+    * claim waves past DriverRankMaxRows). Batch-bounded candidates
+    * already on the driver take `enqueueLocal`. */
+  private[graft] def enqueue(entries: DataFrame, batchNo: Long): Long = {
     // broadcast path: ONE collect per batch shared by probe+insert;
     // join path (design scale): no collect at all — probe/insert
     // co-partition with the shard table instead
     val shardSnapshot = phase("enqueue-probe")(
       if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
     val firstOcc = Frontier.firstOccurrence(entries)
-    // all keys live in base files (appends introduce every key; deltas
-    // only revise them) — a raw single-column scan, no merge resolution.
-    // CACHE-RESIDENT between base-set changes: the gate verifies against
-    // this set every batch, but the base-file set only changes on an
-    // append or a compaction — at steady state (saturated discovery)
-    // that is once per compaction cycle, so the per-batch key scan
-    // becomes an in-memory columnar read instead of re-decoding every
-    // base file. The same structure at design scale is the cluster-
-    // resident verify set a 1000-executor crawl keeps pinned (8 B/key).
-    val keys = cachedKeys()
-    val bigKeyTable = frontier.currentManifest
-      .exists(_.files.iterator.map(_.bytes).sum > CrawlEngine.BigKeyTableBytes)
-    val useBcastGate = boundedCandidates && bigKeyTable
-    // cache only on the broadcast-gate path, where dedupGate consumes
-    // the probed candidates twice (hit-set build + final join); the
-    // default plan is linear and reads them exactly once — a cache there
-    // is a pure extra materialization per batch
-    val probed0 = seen.probe(firstOcc, shardSnapshot)
-    val probed = if (useBcastGate) probed0.cache() else probed0
-    val fresh = Frontier.dedupGate(probed, keys,
-      broadcastCandidates = useBcastGate).cache()
+    val probed = seen.probe(firstOcc, shardSnapshot)
+    // verified against the cache-resident key set (cachedKeys): all
+    // keys live in base files (appends introduce every key; deltas only
+    // revise them), and the base-file set only changes on an append or
+    // a compaction
+    val fresh = Frontier.dedupGate(probed, cachedKeys()).cache()
     // ONE action materializes the gate AND reads the survivors' stats:
     // count (the n>0 decision + metrics) and max seq (parity: the
     // oracle assigns the next batch's seq base from surviving rows
@@ -475,22 +464,65 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val stats = phase("enqueue-gate")(
       fresh.agg(count(lit(1)), max("seq")).head)
     val n = stats.getLong(0)
-    if (useBcastGate) probed.unpersist()
-    if (n > 0) {
-      val newMax = math.max(currentMaxSeq,
-        if (stats.isNullAt(1)) -1L else stats.getLong(1))
-      phase("seen-commit")(
-        seen.insert(fresh.select("fp"), Map("batch" -> batchNo.toDouble), shardSnapshot))
-      // coalesce(1): a few-thousand-row append across 32 shuffle
-      // partitions would write 32 tiny files whose footers the manifest
-      // then reads; one writer task over the cached rows is cheaper
-      // than the per-file fixed costs it saves
-      phase("append-commit")(frontier.commitAppend(fresh.coalesce(1), Map(
-        "batch" -> batchNo.toDouble, "enqueued" -> n.toDouble),
-        props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
-    }
+    if (n > 0)
+      commitFresh(fresh, n, if (stats.isNullAt(1)) -1L else stats.getLong(1),
+        batchNo, shardSnapshot)
     fresh.unpersist()
     n
+  }
+
+  /** Driver-side enqueue of a batch-bounded candidate list already on
+    * the driver (a discovery wave of at most DriverRankMaxRows claimed
+    * urls, a keyword expansion). Entries, first occurrence and the
+    * cuckoo tier-1 verdict run on the driver; only the filter POSITIVES
+    * reach Spark, in ONE map-side verify job over the resident key
+    * cache (Frontier.verifyHits) — the key table is never shuffled or
+    * broadcast, and a batch with no positive runs no gate job at all.
+    * Under the join seen path the driver holds no shard bytes: every
+    * candidate is verified and the insert co-partitions as usual.
+    * Output (fresh rows, seen-shard bytes) is identical to
+    * `enqueue(toEntries(...))` — GatePathSpec feeds both the same
+    * adversarial list. */
+  private[graft] def enqueueLocal(seeds: Seq[SeedUrl], batchNo: Long): Long = {
+    val (shardSnapshot, cands, positives) = phase("enqueue-probe") {
+      val snap = if (seen.useJoinPath) None else Some(seen.snapshotBytes())
+      val cs = Frontier.firstOccurrenceLocal(Frontier.toEntriesLocal(seeds, batchNo, cfg.seed))
+      val maybeSeen = snap.map(seen.probeLocal).getOrElse((_: Long) => true)
+      (snap, cs, cs.iterator.map(_.fp).filter(maybeSeen).toArray)
+    }
+    val fresh = phase("enqueue-gate") {
+      if (positives.isEmpty) cands
+      else {
+        java.util.Arrays.sort(positives)
+        val bc = spark.sparkContext.broadcast(positives)
+        val hits =
+          try Frontier.verifyHits(cachedKeys(), bc).as[Long].collect().toSet
+          finally bc.destroy()
+        cands.filterNot(e => hits.contains(e.fp))
+      }
+    }
+    if (fresh.nonEmpty)
+      commitFresh(spark.createDataset(fresh).toDF(), fresh.size.toLong,
+        fresh.iterator.map(_.seq).max, batchNo, shardSnapshot)
+    fresh.size.toLong
+  }
+
+  /** Commit `n` gate survivors (max seq `freshMaxSeq`): seen-insert
+    * strictly BEFORE the frontier append — the filter must be a
+    * superset of frontier keys, or a crash between the two turns the
+    * tier-1 fast path into duplicate appends. */
+  private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
+                          shardSnapshot: Option[Map[Int, Array[Byte]]]): Unit = {
+    val newMax = math.max(currentMaxSeq, freshMaxSeq)
+    phase("seen-commit")(
+      seen.insert(fresh.select("fp"), Map("batch" -> batchNo.toDouble), shardSnapshot))
+    // coalesce(1): a few-thousand-row append across 32 shuffle
+    // partitions would write 32 tiny files whose footers the manifest
+    // then reads; one writer task over the survivors is cheaper than
+    // the per-file fixed costs it saves
+    phase("append-commit")(frontier.commitAppend(fresh.coalesce(1), Map(
+      "batch" -> batchNo.toDouble, "enqueued" -> n.toDouble),
+      props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
   }
 
   /** Memo of `frontier.readKeys()` keyed by the base-file set (the only
@@ -749,7 +781,20 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       // the payload write, the one consumer that truly needs the bytes.
       // The typed-deser versions measurably capped drain scaling: three
       // full-object passes per batch of pure allocation churn.)
-      val nOk = phase("process")(processed.filter(col("ok")).count())
+      //
+      // A batch-bounded claim (≤ DriverRankMaxRows) makes the process
+      // job COLLECT each ok row's (seq, outlinks) instead of only
+      // counting: that one collect is the whole discovery wave, so
+      // ranking, entries, first occurrence and the cuckoo tier run on
+      // the driver (enqueueLocal). Larger claim waves count here and
+      // rank + gate in Spark.
+      val (nOk, wave) = phase("process") {
+        val ok = processed.filter(col("ok"))
+        if (nClaimed <= CrawlEngine.DriverRankMaxRows) {
+          val ps = ok.select("seq", "outlinks").as[(Long, Seq[String])].collect()
+          (ps.length.toLong, Some(ps))
+        } else (ok.count(), None)
+      }
       // the processing checkpoint must be durable before any downstream
       // commit; its failure aborts the batch here
       phase("proc-wait")(procFuture.get()); procJoined = true
@@ -816,60 +861,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           }
         })
 
-      // discovered links → next frontier rows (seed-expansion S4):
-      // first-occurrence order inside the batch is (parent seq, idx)
-      val maxSeq = phase("maxseq")(currentMaxSeq) // prop read, zero jobs
-      // Dense discovery seqs by (parentSeq, idx) order WITHOUT ever
-      // materializing the exploded url set: the rank of child (parent,
-      // idx) is offset(parent) + idx + 1 where offset = exclusive
-      // prefix sum of outlink counts in parent-seq order — computed on
-      // the PER-PARENT table (one narrow row per claimed url, read
-      // column-pruned from the cache). The offsets then broadcast-join
-      // into the explode, which fuses straight into the dedup gate's
-      // pass. The previous shape sorted + checkpointed the full
-      // exploded set (urls included) with a range-sampling pass —
-      // ~3 s/batch of eager per-batch work at 131k-url batches, and
-      // the per-batch term that grows with fan-out at a 100 TB
-      // discovery wave. Identical output: idx is dense per parent, so
-      // offset(parent)+idx+1 IS the dense rank of the (parentSeq, idx)
-      // sort (CrawlParitySpec byte-match covers).
-      val perParent = processed
-        .select(col("seq").as("parentSeq"), size(col("outlinks")).as("__n"))
-        .filter(col("__n") > 0)
-      // ONE job for the offsets when the claim is batch-bounded: the
-      // per-parent pairs are ≤ nClaimed rows of 16 B (2 MB at a 131k
-      // batch), so the exclusive prefix is a driver fold — the same
-      // bounded-collect contract SeenShards' broadcast path uses. The
-      // distributed prefix (repartitionByRange + checkpoint + window;
-      // three small jobs whose fixed latency is the cost that matters
-      // at sandbox batch sizes) remains the path for claim waves past
-      // DriverRankMaxRows.
-      val parentOffsets = phase("discover-rank")(
-        if (nClaimed <= CrawlEngine.DriverRankMaxRows) {
-          val counts = perParent.as[(Long, Int)].collect().sortBy(_._1)
-          var acc = 0L
-          val offs = counts.map { case (ps, nn) =>
-            val o = acc; acc += nn; (ps, o)
-          }
-          spark.createDataset(offs.toIndexedSeq).toDF("parentSeq", "__off")
-        } else graft.util.Rank.withPrefixOffsets(
-          perParent, Seq(col("parentSeq")), col("__n"), "__off",
-          numParts = spark.sparkContext.defaultParallelism)._1)
-      // posexplode == outlinks.zipWithIndex (pos = index), reading only
-      // (seq, outlinks) from the cache; failed rows carry empty arrays
-      // and explode to nothing, exactly like the old typed flatMap
-      val discovered = processed
-        .select(col("seq").as("parentSeq"), posexplode(col("outlinks")))
-        .select(col("col").as("url"), col("parentSeq"), col("pos").as("idx"))
-      // broadcast: one narrow row per claimed url (~16 B each — MBs at
-      // a 10^6-url batch), vs shuffling the exploded children
-      val discoveredSeeds = discovered
-        .join(broadcast(parentOffsets.select("parentSeq", "__off")), "parentSeq")
-        .withColumn("seq", lit(maxSeq) + col("__off") + col("idx") + lit(1L))
-        .withColumn("priority", lit(Frontier.NormalPriority))
-        .select("url", "priority", "seq").as[SeedUrl]
-      // SPECULATIVE next claim: launched before the gate chain, so the
-      // claim job (a pure read) overlaps the dedup-gate jobs below —
+      // SPECULATIVE next claim: launched before the discovery enqueue,
+      // so the claim job (a pure read) overlaps the dedup gate below —
       // the two largest per-batch critical-path latencies run
       // concurrently instead of back-to-back. Validity is decided after
       // the gate (see runBatch scaladoc). Preconditions hold here: the
@@ -881,13 +874,24 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           override def call(): ClaimedBatch = claimBatch()
         })
 
-      // no outer phase wrapper: enqueue's real work is accounted by its
+      // discovered links → next frontier rows (seed-expansion S4): seqs
+      // are dense in (parentSeq, idx) order above the current max.
+      // No outer phase wrapper: enqueue's real work is accounted by its
       // own exclusive phases (enqueue-probe / enqueue-gate / seen-commit
       // / append-commit) so the decomposition stays ADDITIVE — the r4
       // artifact's nested "enqueue" total was double-counted against its
       // parts by every reader
-      val nFresh = enqueue(Frontier.toEntries(spark, discoveredSeeds, batchNo, cfg.seed),
-        batchNo, boundedCandidates = true)
+      val maxSeq = phase("maxseq")(currentMaxSeq) // prop read, zero jobs
+      val nFresh = wave match {
+        case Some(parents) =>
+          enqueueLocal(phase("discover-rank") {
+            var next = maxSeq
+            parents.sortBy(_._1).toSeq.flatMap { case (_, links) =>
+              links.map { u => next += 1; SeedUrl(u, Frontier.NormalPriority, next) }
+            }
+          }, batchNo)
+        case None => enqueue(discoveredEntries(processed, maxSeq, batchNo), batchNo)
+      }
 
       // resolve the speculation: identical-by-construction when nothing
       // was appended or the speculative claim is a full batch; redone
@@ -935,7 +939,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
               col("error"), col("discoveredAt"),
               lit(batchNo).as("processedAt")).coalesce(1),
             Map("batch" -> batchNo.toDouble, "ok" -> nOk.toDouble,
-              "failed" -> (nClaimed - nOk).toDouble)))
+              "failed" -> (nClaimed - nOk).toDouble),
+            props = Map(CrawlEngine.NextBatchProp ->
+              math.max(batchNo + 1L, nextBatchNo).toString)))
           phase("hygiene") {
             if (frontier.compactIfNeeded(maxDeltaCommits = cfg.compactEvery).isDefined)
               frontier.expire(keepLast = 8)
@@ -980,6 +986,40 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     }
   }
 
+  /** The discovery wave of a claim past DriverRankMaxRows as frontier
+    * entries, WITHOUT ever materializing the exploded url set on the
+    * driver: the rank of child (parent, idx) is offset(parent) + idx + 1
+    * where offset = exclusive prefix sum of outlink counts in
+    * parent-seq order, computed distributed (Rank.withPrefixOffsets) on
+    * the PER-PARENT table (one narrow row per claimed url, read
+    * column-pruned from the cache). The offsets then broadcast-join into
+    * the explode, which fuses straight into the dedup gate's pass. idx
+    * is dense per parent, so offset(parent)+idx+1 IS the dense rank of
+    * the (parentSeq, idx) sort — the seqs the driver fold assigns. */
+  private def discoveredEntries(processed: org.apache.spark.sql.Dataset[ProcessedUrl],
+                                maxSeq: Long, batchNo: Long): DataFrame = {
+    val perParent = processed
+      .select(col("seq").as("parentSeq"), size(col("outlinks")).as("__n"))
+      .filter(col("__n") > 0)
+    val parentOffsets = phase("discover-rank")(graft.util.Rank.withPrefixOffsets(
+      perParent, Seq(col("parentSeq")), col("__n"), "__off",
+      numParts = spark.sparkContext.defaultParallelism)._1)
+    // posexplode == outlinks.zipWithIndex (pos = index), reading only
+    // (seq, outlinks) from the cache; failed rows carry empty arrays
+    // and explode to nothing
+    val discovered = processed
+      .select(col("seq").as("parentSeq"), posexplode(col("outlinks")))
+      .select(col("col").as("url"), col("parentSeq"), col("pos").as("idx"))
+    // broadcast: one narrow row per claimed url (~16 B each — MBs at a
+    // 10^6-url batch), vs shuffling the exploded children
+    val seeds = discovered
+      .join(broadcast(parentOffsets.select("parentSeq", "__off")), "parentSeq")
+      .withColumn("seq", lit(maxSeq) + col("__off") + col("idx") + lit(1L))
+      .withColumn("priority", lit(Frontier.NormalPriority))
+      .select("url", "priority", "seq").as[SeedUrl]
+    Frontier.toEntries(spark, seeds, batchNo, cfg.seed)
+  }
+
   /** Drain the frontier, PIPELINED: each batch's terminal commit +
     * hygiene overlap the next batch's claim+process window (see
     * runBatch). Fully quiesced on return — every commit durable, even
@@ -1016,13 +1056,18 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     (batches, total)
   }
 
-  private def nextBatchNo: Long = {
-    // once per drain() start; only terminal rows carry processedAt ≥ 0
-    val m = frontier
-      .readStates(Set(FrontierState.Processed, FrontierState.Failed))
-      .agg(max("processedAt")).head
-    if (m.isNullAt(0)) 1L else math.max(1L, m.getLong(0) + 1L)
-  }
+  /** Once per drain() start: 1 + the last batch committed terminal.
+    * Every terminal commit records it as a manifest prop (as MaxSeqProp
+    * does for seq), so reading it is zero Spark jobs; the scan of the
+    * terminal files covers tables written before the prop existed. */
+  private def nextBatchNo: Long =
+    frontier.getProp(CrawlEngine.NextBatchProp).map(_.toLong).getOrElse {
+      // only terminal rows carry processedAt ≥ 0
+      val m = frontier
+        .readStates(Set(FrontierState.Processed, FrontierState.Failed))
+        .agg(max("processedAt")).head
+      if (m.isNullAt(0)) 1L else math.max(1L, m.getLong(0) + 1L)
+    }
 
   /** Committed crawl order — THE parity artifact: terminal rows ordered
     * by (processedAt=batchNo, priority, seq). */
@@ -1103,17 +1148,16 @@ object CrawlEngine {
   /** Manifest prop tracking the frontier's max assigned seq (append-
     * monotone) — read instead of aggregating the table every batch. */
   val MaxSeqProp = "max_seq"
-  /** Above this manifest-reported table size the dedup gate's exact
-    * tier switches from a plain anti-join to the broadcast-candidates
-    * plan (same threshold philosophy as SeenShards.JoinThresholdBytes:
-    * below it the local plan is already optimal, above it the shuffle
-    * of the key table would dominate the batch). */
-  val BigKeyTableBytes: Long = 64L << 20
-  /** Claim sizes up to this take the ONE-JOB driver-fold discovery-rank
-    * path (≤16 MB of (seq, count) pairs collected — the same bounded-
-    * collect contract as SeenShards' broadcast path); larger claim
-    * waves fall back to the distributed prefix-sum (Rank
-    * .withPrefixOffsets), whose three small jobs amortize at that
-    * scale. */
+  /** Manifest prop: the batch number the next drain() starts at (1 +
+    * the last batch committed terminal). */
+  val NextBatchProp = "next_batch"
+  /** Claim sizes up to this take the batch-bounded discovery enqueue:
+    * the process job collects each ok row's (seq, outlinks) — ≤ 3
+    * outlinks per url, so ~100 MB of urls at the bound, the same
+    * bounded-collect contract as SeenShards' broadcast path — and
+    * ranking, entries and the cuckoo tier run on the driver
+    * (enqueueLocal). Larger claim waves fall back to the distributed
+    * prefix-sum (Rank.withPrefixOffsets) and the Spark gate, whose
+    * extra jobs amortize at that scale. */
   val DriverRankMaxRows: Long = 1L << 20
 }

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.model._
 import graft.synth.Synth
 import graft.util.Hashing
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -159,19 +160,11 @@ object Frontier {
     * unique fps. If a `maybeSeen` column is present (cuckoo tier-1
     * verdict), rows flagged false are definitely new and skip the
     * exact anti-join — the 100 TB fast path: only filter-positives
-    * pay the big-join toll.
-    *
-    * `broadcastCandidates`: the exact tier's plan for BOUNDED candidate
-    * sets (one batch's outlinks) against a 10^10-key table — a plain
-    * anti-join would sort-merge-shuffle the key table every batch.
-    * Broadcasting the candidates through a semi-join keeps the key scan
-    * map-side (no shuffle of the big side), and the resulting hit set
-    * is at most the candidate count, so the final anti-join broadcasts
-    * too. Output is byte-identical to the plain plan (equivalence-
-    * tested); callers with unbounded candidates (bulk seeding) must
-    * leave it off. */
-  def dedupGate(candidates: DataFrame, frontierKeys: DataFrame,
-                broadcastCandidates: Boolean = false): DataFrame = {
+    * pay the big-join toll. This is the gate of the unbounded enqueue
+    * paths (bulk seeding, executor-side keyword expansion, claim waves
+    * past the driver bound); batch-bounded candidates already on the
+    * driver take `firstOccurrenceLocal` + `verifyHits` instead. */
+  def dedupGate(candidates: DataFrame, frontierKeys: DataFrame): DataFrame = {
     if (!candidates.columns.contains("maybeSeen"))
       return candidates.join(frontierKeys, Seq("fp"), "left_anti")
     // ONE linear plan, not a definitely-new/verify branch union: a LEFT
@@ -184,26 +177,27 @@ object Frontier {
     // extra stages per batch; this shape reads them once, and the join
     // reuses the firstOccurrence agg's hash partitioning on fp (no new
     // candidate-side exchange).
-    if (!broadcastCandidates)
-      candidates
-        .join(frontierKeys.select(col("fp"), lit(true).as("__seen")),
-          Seq("fp"), "left")
-        .filter(!col("maybeSeen") || col("__seen").isNull)
-        .drop("maybeSeen", "__seen")
-    else {
-      // bounded candidate set vs a 10^10-key table: map-side semi filter
-      // of the big side (no shuffle of the key table), then the bounded
-      // hit set broadcasts back — candidates never shuffle at all.
-      // Caller must cache `candidates`: they are consumed twice here.
-      val hits = frontierKeys
-        .join(broadcast(candidates.filter(col("maybeSeen")).select("fp")),
-          Seq("fp"), "left_semi")
-      candidates
-        .join(broadcast(hits.select(col("fp"), lit(true).as("__seen"))),
-          Seq("fp"), "left")
-        .filter(!col("maybeSeen") || col("__seen").isNull)
-        .drop("maybeSeen", "__seen")
-    }
+    candidates
+      .join(frontierKeys.select(col("fp"), lit(true).as("__seen")),
+        Seq("fp"), "left")
+      .filter(!col("maybeSeen") || col("__seen").isNull)
+      .drop("maybeSeen", "__seen")
+  }
+
+  /** The exact tier of the driver-side gate: the frontier keys among
+    * `positives` (the batch's cuckoo filter positives, SORTED). A
+    * map-side filter over the key scan — no exchange, and the key table
+    * is never broadcast; the positives ride a broadcast variable rather
+    * than plan literals, so the plan has the same size at any batch
+    * (PlanSpec pins both). */
+  def verifyHits(frontierKeys: DataFrame, positives: Broadcast[Array[Long]]): DataFrame =
+    frontierKeys.select("fp").filter(udf(new SortedMember(positives)).apply(col("fp")))
+
+  /** Driver twin of `firstOccurrence` for candidates already on the
+    * driver: the lowest (priority, seq) row per fp, in that order. */
+  def firstOccurrenceLocal(candidates: Seq[FrontierEntry]): Seq[FrontierEntry] = {
+    val taken = scala.collection.mutable.HashSet.empty[Long]
+    candidates.sortBy(e => (e.priority, e.seq)).filter(e => taken.add(e.fp))
   }
 
   /** Crash recovery (Q9, utils/queue_utils.py:6-32): rows stuck in
@@ -222,11 +216,13 @@ object Frontier {
     * breaking whole-stage codegen between the discovery explode and the
     * first-occurrence aggregation. Each scalar has a bit-identical
     * column twin: `Hashing.fpCol`/`hostCol` (pinned by CodecHashSpec),
-    * and the robots decision re-derives `Synth.unit(key) < 0.05` as
-    * `shiftrightunsigned(xxhash64(key), 11) / 2^53` — the same XXH64
-    * kernel and the same IEEE ops (pinned by SourcesOpsSpec's twin
-    * test; the single-threaded parity oracle keeps using the scalars,
-    * so CrawlParitySpec cross-validates the whole corpus). */
+    * and the robots decision re-derives `Synth.unit(key) <
+    * RobotsDisallowRate` as `shiftrightunsigned(xxhash64(key), 11) /
+    * 2^53` — the same XXH64 kernel and the same IEEE ops, over the same
+    * `Synth` robots constants (pinned by SourcesOpsSpec's twin test).
+    * The scalars are an engine path too (`toEntriesLocal`, the
+    * batch-bounded enqueue), and the parity oracle uses them, so
+    * CrawlParitySpec and GatePathSpec cross-validate the two forms. */
   def toEntries(spark: SparkSession, urls: Dataset[SeedUrl], batchNo: Long,
                 seed: Long): DataFrame = {
     val c = Hashing.canonicalizeCol(col("url"))
@@ -236,11 +232,12 @@ object Frontier {
     // which keep the whole string as path on both sides)
     val path = when(!col("__c").rlike("(?s)://"),
       col("__c")).otherwise(regexp_replace(col("__c"), "(?s)^.*?://[^/]*", ""))
-    // Synth.unit(s"policy:$seed:robots:$host") < 0.05, column form
+    // Synth.unit(robotsKeyPrefix(seed) + host) < RobotsDisallowRate,
+    // column form
     val robots =
-      shiftrightunsigned(xxhash64(concat(lit(s"policy:$seed:robots:"), col("host"))), 11)
-        .cast("double") / lit((1L << 53).toDouble) < 0.05
-    val disallowed = robots && path.startsWith("/v/")
+      shiftrightunsigned(xxhash64(concat(lit(Synth.robotsKeyPrefix(seed)), col("host"))), 11)
+        .cast("double") / lit((1L << 53).toDouble) < Synth.RobotsDisallowRate
+    val disallowed = robots && path.startsWith(Synth.RobotsPrefix)
     urls.toDF()
       .withColumn("__c", c)
       .withColumn("fp", xxhash64(col("__c")))
@@ -248,13 +245,32 @@ object Frontier {
       .withColumn("state",
         when(disallowed, FrontierState.Failed).otherwise(FrontierState.Pending))
       .withColumn("error",
-        when(col("state") === FrontierState.Failed, lit("robots: disallowed"))
+        when(col("state") === FrontierState.Failed, lit(RobotsError))
           .otherwise(lit(null).cast("string")))
       .withColumn("discoveredAt", lit(batchNo))
       .withColumn("processedAt", lit(-1L))
       .select("fp", "url", "host", "priority", "seq", "state", "error",
         "discoveredAt", "processedAt")
   }
+
+  /** Scalar twin of `toEntries` for candidates already on the driver
+    * (the batch-bounded enqueue): the same row per url from
+    * `Hashing.fp`/`host` and `Synth.hostPolicy`/`isDisallowed` — the
+    * scalars SourcesOpsSpec pins to the column form — with one policy
+    * derivation per distinct host. */
+  def toEntriesLocal(urls: Seq[SeedUrl], batchNo: Long, seed: Long): Seq[FrontierEntry] = {
+    val policies = scala.collection.mutable.HashMap.empty[String, HostPolicy]
+    urls.map { s =>
+      val host = Hashing.host(s.url)
+      val dis = Synth.isDisallowed(s.url,
+        policies.getOrElseUpdate(host, Synth.hostPolicy(host, seed)))
+      FrontierEntry(Hashing.fp(s.url), s.url, host, s.priority, s.seq,
+        if (dis) FrontierState.Failed else FrontierState.Pending,
+        if (dis) RobotsError else null, batchNo, -1L)
+    }
+  }
+
+  private val RobotsError = "robots: disallowed"
 
   /** Host-policy table for a frontier (distinct hosts; deterministic
     * synth policies — the robots/crawl-delay table, FIXTURES.md §4). */
@@ -263,4 +279,12 @@ object Frontier {
     frontier.select("host").distinct().as[String]
       .map(h => Synth.hostPolicy(h, seed)).toDF()
   }
+}
+
+/** Membership in a broadcast SORTED key array (binary search) — the
+  * verify filter's predicate. */
+private class SortedMember(keys: Broadcast[Array[Long]])
+    extends (Long => Boolean) with Serializable {
+  override def apply(fp: Long): Boolean =
+    java.util.Arrays.binarySearch(keys.value, fp) >= 0
 }

@@ -124,6 +124,26 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     candidates.withColumn("maybeSeen", probeUdf(col("fp")))
   }
 
+  /** Shard filters of the last snapshot `probeLocal` was handed. */
+  @volatile private var localFilters: (Map[Int, Array[Byte]], Map[Int, CuckooFilter]) = null
+
+  /** Driver-side twin of `probe` for candidates already on the driver:
+    * the tier-1 verdict per fp over a `snapshotBytes()` snapshot. The
+    * shards deserialize once per snapshot — i.e. once per table
+    * version, since `snapshotBytes` memoizes by version. */
+  def probeLocal(bytes: Map[Int, Array[Byte]]): Long => Boolean = {
+    val c = localFilters
+    val filters =
+      if (c != null && (c._1 eq bytes)) c._2
+      else {
+        val fs = bytes.map { case (s, b) => s -> CuckooFilter.deserialize(b) }
+        localFilters = (bytes, fs)
+        fs
+      }
+    val n = nShards.toLong
+    fp => filters.get(java.lang.Math.floorMod(fp, n).toInt).exists(_.mightContain(fp))
+  }
+
   /** Co-partitioned probe: cogroup candidate fps with shard rows on
     * `shard`; each task deserializes its one filter and answers
     * locally; verdicts rejoin the candidates on fp. */

@@ -98,6 +98,25 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("the gate's verify query over a cached key set plans no exchange") {
+    import spark.implicits._
+    // the key side as the engine holds it: a cached scan, large enough
+    // that a join would plan a shuffle or broadcast it
+    val keys = spark.range(0L, 200000L).toDF("fp").cache()
+    val positives = spark.sparkContext.broadcast(Array(3L, 7L, 5000000L))
+    try {
+      val q = graft.frontier.Frontier.verifyHits(keys, positives)
+      assert(q.as[Long].collect().sorted.toSeq === Seq(3L, 7L))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("InMemoryTableScan"), s"verify does not read the cache:\n$plan")
+      // neither a shuffle nor a BroadcastExchange of the key table
+      assert(!plan.contains("Exchange"), s"verify plan moves the key table:\n$plan")
+    } finally {
+      positives.destroy()
+      keys.unpersist()
+    }
+  }
+
   test("hamming64 keeps whole-stage codegen in the near-dup filter") {
     import graft.functions.Hamming64.hamming64
     val df = spark.read.parquet(s"$sf/lineitem.parquet")

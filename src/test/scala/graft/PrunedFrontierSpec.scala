@@ -1,7 +1,6 @@
 package graft
 
 import graft.crawl.{CrawlConfig, CrawlEngine}
-import graft.frontier.Frontier
 import graft.model.FrontierState
 import graft.table.SnapshotTable
 import org.apache.spark.sql.functions._
@@ -18,8 +17,6 @@ import java.nio.file.Files
   *     and the skipped set is the table's row bulk;
   *  3. partial compaction carries frozen terminal base files over
   *     UNTOUCHED (same paths) while preserving the resolved view.
-  * Plus the dedup-gate equivalence: broadcast-candidates plan ==
-  * plain anti-join plan, byte-identical.
   */
 class PrunedFrontierSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -224,23 +221,5 @@ class PrunedFrontierSpec extends AnyFunSuite {
     val n = eng.payload.read().count()
     val nDistinct = eng.payload.read().select("image_id").distinct().count()
     assert(n === nDistinct)
-  }
-
-  test("dedup gate: broadcast-candidates plan is byte-identical to the plain plan") {
-    import spark.implicits._
-    val r = new scala.util.Random(77)
-    val keys = Seq.fill(500)(r.nextLong()).distinct
-    val keysDf = keys.toDF("fp")
-    // candidates: half colliding with keys, half new; maybeSeen set with
-    // deliberate false-positives and false-negatives-impossible semantics
-    val cands = (keys.take(100).map(k => (k, true)) ++
-      Seq.fill(80)(r.nextLong()).map(k => (k, r.nextBoolean() && keys.contains(k) || r.nextInt(4) == 0)))
-      .zipWithIndex.map { case ((fp, seen), i) => (fp, 0, i.toLong, seen) }
-      .toDF("fp", "priority", "seq", "maybeSeen")
-    def sortRows(df: org.apache.spark.sql.DataFrame) =
-      df.select("fp", "priority", "seq").as[(Long, Int, Long)].collect().sortBy(_._1).toSeq
-    val plain = sortRows(Frontier.dedupGate(cands, keysDf, broadcastCandidates = false))
-    val bcast = sortRows(Frontier.dedupGate(cands, keysDf, broadcastCandidates = true))
-    assert(bcast === plain)
   }
 }
