@@ -41,10 +41,7 @@ object BenchExtra {
       else all.filter { case (n, _) => args.exists(a => n.startsWith(a)) }
     require(sel.nonEmpty, s"no queries match ${args.mkString(",")}")
 
-    val needsEngine = sel.exists { case (n, _) =>
-      val id = n.take(3).drop(1).toInt
-      (id >= 30 && id <= 37) || id == 44 || (id >= 46 && id <= 50) || id == 35
-    }
+    val needsEngine = sel.exists { case (n, _) => graft.queries.Engine.all.contains(n) }
     if (needsEngine) {
       val e0 = System.nanoTime()
       graft.crawl.Flagship.engine(s, sfDir)

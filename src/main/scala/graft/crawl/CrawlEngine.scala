@@ -137,10 +137,11 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // hence bucket — never changes, so resolution stays bucket-closed
     bucketBy = if (cfg.claimMode == "bucketed") Some(("host", cfg.claimBuckets))
                else None,
-    // the claim's pending-base scan is cache-resident between
-    // append/compaction events (readStates fast path) — per-batch claims
-    // read columnar memory, not parquet
-    cacheStateScans = true)
+    // the claim's pending-base scan and the gate's key scan are cache-
+    // resident between append/compaction events (readStates fast path,
+    // readKeys) — per-batch claims and gates read columnar memory, not
+    // parquet
+    cacheScans = true)
   // uncompressed parquet for the payload table: the `bytes` column is
   // canonical PNG — already deflate-compressed — so the default snappy
   // pass re-scans every byte per write/compact for ~0% size change; at
@@ -207,16 +208,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * both feeds at once). Tracked as a manifest PROP updated on every
     * append (seq is append-monotone: upserts never change it), so
     * reading it is zero Spark jobs — the old implementation aggregated
-    * the full table once per batch. The scan fallback covers tables
-    * written before the prop existed. */
+    * the full table once per batch. Every later commit carries the prop
+    * forward, so a missing prop means no append yet. */
   private def currentMaxSeq: Long =
-    frontier.getProp(CrawlEngine.MaxSeqProp).map(_.toLong).getOrElse {
-      if (frontier.currentId.isEmpty || frontier.isEmpty) -1L
-      else {
-        val m = frontier.read().agg(max("seq")).head
-        if (m.isNullAt(0)) -1L else m.getLong(0)
-      }
-    }
+    frontier.getProp(CrawlEngine.MaxSeqProp).map(_.toLong).getOrElse(-1L)
 
   /** Seed from a one-url-per-line text file (S1 — the reference's seed
     * txt files): seq = line number among non-blank lines. HadoopRDD
@@ -293,15 +288,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // MaxSeqProp, r6 — VERDICT r5 #6): seq is append-monotone (state
     // flips are upserts that never change it), so the prop read costs
     // zero Spark jobs where the old shape aggregated the resolved table
-    // per call. Scan fallback covers tables written before the prop.
-    val base = keywords.getProp(CrawlEngine.MaxSeqProp).map(_.toLong + 1)
-      .getOrElse {
-        if (!tableLive) 0L
-        else {
-          val m = keywords.read().agg(max("seq")).head
-          if (m.isNullAt(0)) 0L else m.getLong(0) + 1
-        }
-      }
+    // per call. A missing prop means no append yet.
+    val base = keywords.getProp(CrawlEngine.MaxSeqProp).map(_.toLong + 1).getOrElse(0L)
     val entries = qs.distinct.zipWithIndex
       .map { case (q, i) => (q, base + i, "pending") }
     val df = spark.createDataset(entries).toDF("query", "seq", "state")
@@ -451,11 +439,11 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
     val firstOcc = Frontier.firstOccurrence(entries)
     val probed = seen.probe(firstOcc, shardSnapshot)
-    // verified against the cache-resident key set (cachedKeys): all
-    // keys live in base files (appends introduce every key; deltas only
+    // verified against the cache-resident key set (seenSet): all keys
+    // live in base files (appends introduce every key; deltas only
     // revise them), and the base-file set only changes on an append or
     // a compaction
-    val fresh = Frontier.dedupGate(probed, cachedKeys()).cache()
+    val fresh = Frontier.dedupGate(probed, seenSet).cache()
     // ONE action materializes the gate AND reads the survivors' stats:
     // count (the n>0 decision + metrics) and max seq (parity: the
     // oracle assigns the next batch's seq base from surviving rows
@@ -496,7 +484,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         java.util.Arrays.sort(positives)
         val bc = spark.sparkContext.broadcast(positives)
         val hits =
-          try Frontier.verifyHits(cachedKeys(), bc).as[Long].collect().toSet
+          try Frontier.verifyHits(seenSet, bc).as[Long].collect().toSet
           finally bc.destroy()
         cands.filterNot(e => hits.contains(e.fp))
       }
@@ -525,41 +513,6 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
   }
 
-  /** Memo of `frontier.readKeys()` keyed by the base-file set (the only
-    * files that scan reads). Single-writer engine, so a plain volatile
-    * pair suffices; the superseded cache is unpersisted eagerly.
-    *
-    * INCREMENTAL (r6): an append only EXTENDS the base-file list, so
-    * the cached scan stays valid as the stable prefix — the gate then
-    * verifies against cache ∪ pruned-scan(appended files) instead of
-    * re-reading and re-caching the WHOLE key table every batch (every
-    * discovery batch appends, so the old exact-signature key made the
-    * gate's verify scan O(table) per batch — the other half of the
-    * large-fill growth term, VERDICT r5 weak #a). The fresh tail is
-    * bounded by the compaction cadence; compaction rewrites paths and
-    * forces the full rebuild below. */
-  @volatile private var keysCache: (Seq[String], DataFrame) = null
-  private def cachedKeys(): DataFrame = {
-    if (frontier.currentId.isEmpty) {
-      import spark.implicits._
-      return spark.emptyDataset[Long].toDF("fp")
-    }
-    val sig = frontier.baseFilePaths
-    val c = keysCache
-    if (c != null && c._1 == sig) c._2
-    else if (c != null && sig.size > c._1.size &&
-             sig.take(c._1.size) == c._1 &&
-             sig.size - c._1.size <= SnapshotTable.IncrementalScanMaxFiles) {
-      c._2.unionByName(frontier.readKeysFiles(sig.drop(c._1.size)))
-    } else {
-      if (c != null) c._2.unpersist()
-      val df = frontier.readKeys().cache()
-      keysCache = (sig, df)
-      df
-    }
-  }
-
-  private val timing = sys.env.contains("SPARK_GRAFT_BATCH_TIMING")
   private val phaseSums =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.DoubleAdder]()
   private def phase[T](name: String)(body: => T): T = {
@@ -568,8 +521,6 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val sec = (System.nanoTime() - t0) / 1e9
     phaseSums.computeIfAbsent(name, _ => new java.util.concurrent.atomic.DoubleAdder())
       .add(sec)
-    if (timing) System.err.println(
-      f"[batch-timing] t=${System.nanoTime() / 1e9}%.2f $name $sec%.2fs")
     r
   }
 
@@ -1058,16 +1009,11 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
 
   /** Once per drain() start: 1 + the last batch committed terminal.
     * Every terminal commit records it as a manifest prop (as MaxSeqProp
-    * does for seq), so reading it is zero Spark jobs; the scan of the
-    * terminal files covers tables written before the prop existed. */
+    * does for seq), so reading it is zero Spark jobs; every later commit
+    * carries the prop forward, so a missing prop means no terminal
+    * commit yet. */
   private def nextBatchNo: Long =
-    frontier.getProp(CrawlEngine.NextBatchProp).map(_.toLong).getOrElse {
-      // only terminal rows carry processedAt ≥ 0
-      val m = frontier
-        .readStates(Set(FrontierState.Processed, FrontierState.Failed))
-        .agg(max("processedAt")).head
-      if (m.isNullAt(0)) 1L else math.max(1L, m.getLong(0) + 1L)
-    }
+    frontier.getProp(CrawlEngine.NextBatchProp).map(_.toLong).getOrElse(1L)
 
   /** Committed crawl order — THE parity artifact: terminal rows ordered
     * by (processedAt=batchNo, priority, seq). */
@@ -1082,8 +1028,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         col("fp"), col("url"), col("state"), col("error"))
       .orderBy("batchNo", "priority", "seq")
 
-  /** The final URL-seen set (every fp ever enqueued, any state) —
-    * a raw base-file key scan: state revisions never change the set. */
+  /** The URL-seen set (every fp ever enqueued, any state) — a raw
+    * base-file key scan: state revisions never change the set. Cache-
+    * resident (the frontier's key slot), so the dedup gate verifies
+    * against it every batch. */
   def seenSet: DataFrame =
     if (frontier.currentId.isEmpty) spark.emptyDataset[Long].toDF("fp")
     else frontier.readKeys()

@@ -71,7 +71,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
                           frozenTags: Set[String] = Set.empty,
                           bucketBy: Option[(String, Int)] = None,
                           writeOptions: Map[String, String] = Map.empty,
-                          cacheStateScans: Boolean = false) {
+                          cacheScans: Boolean = false) {
 
   import SnapshotTable._
 
@@ -121,9 +121,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * readers touch transiently — they bypass the memo). */
   @volatile private var manifestCache: (Long, Manifest) = null
 
-  /** Memo for the pruned-state fast path's base scan (see readStates);
-    * only populated when `cacheStateScans` is on. */
-  @volatile private var stateScanCache: (Set[String], Seq[String], DataFrame) = null
+  /** Resident state, bucket and key scans — only used when `cacheScans`
+    * is on (the crawl frontier). */
+  private val scans = new ScanCache
 
   def manifest(id: Long): Manifest = {
     val c = manifestCache
@@ -173,9 +173,21 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
       .unionByName(latest)
   }
 
+  /** Parquet scan of manifest-relative `paths`. */
+  private def scanPaths(schema: StructType, paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(paths.map(p => root.resolve(p).toString): _*)
+
+  /** `scan(paths)`, served from the slot's resident entry when
+    * `cacheScans` is on. */
+  private def slotScan(slot: ScanCache.Slot, tags: Set[String], paths: Seq[String])
+                      (scan: Seq[String] => DataFrame): DataFrame =
+    if (cacheScans) scans.get(slot, tags, paths)(scan) else scan(paths)
+
+  /** Every file of a `tagCol` table is written tagged (`writeData`), so
+    * the wanted files are exactly the wanted-tag files. */
   def statesReadPlan(wantTags: Set[String]): ReadPlan = {
     val files = currentManifest.map(_.files).getOrElse(Seq.empty)
-    val (full, other) = files.partition(f => f.tag.isEmpty || wantTags(f.tag))
+    val (full, other) = files.partition(f => wantTags(f.tag))
     val (shadow, skipped) = other.partition(_.deltaSeq > 0)
     ReadPlan(full, shadow, skipped)
   }
@@ -187,15 +199,15 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * of the few since-last-compaction deltas, never the 10^10 rows of
     * terminal history. */
   def readStates(wantTags: Set[String]): DataFrame = {
-    val tc = tagCol.getOrElse(
-      throw new IllegalStateException("readStates requires a tagCol-partitioned table"))
+    if (tagCol.isEmpty)
+      throw new IllegalStateException("readStates requires a tagCol-partitioned table")
     val m = currentManifest.getOrElse(return spark.emptyDataFrame)
     val schema = StructType.fromDDL(m.schemaDdl)
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val plan = statesReadPlan(wantTags)
     if (plan.full.isEmpty) return empty
     val cols = schema.fieldNames.map(col).toSeq
-    // FAST PATH: every wanted file is a TAGGED BASE (deltaSeq 0) — the
+    // FAST PATH: every wanted file is a BASE (deltaSeq 0) — the
     // steady state of a claim read (pending rows enter by append; only
     // recovery upserts put a wanted row in a delta, and that routes to
     // the window path below). Base keys are disjoint (append contract),
@@ -205,48 +217,12 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     // a sort-shuffle resolution window over the whole wanted set. At
     // design scale this removes the claim's O(pending) exchange; the
     // politeness rank becomes the claim's only shuffle.
-    if (plan.full.forall(f => f.deltaSeq == 0 && f.tag.nonEmpty)) {
-      val baseDf = {
-        val fresh = () => spark.read.schema(schema)
-          .parquet(plan.full.map(f => root.resolve(f.path).toString): _*)
-        if (!cacheStateScans) fresh()
-        else {
-          // CACHE-RESIDENT base scan (opt-in; the crawl frontier): the
-          // wanted-tag base set changes only on an append or a
-          // compaction — between those, every claim re-decoded the same
-          // parquet files. Keyed by (tags, file set); the superseded
-          // cache unpersists eagerly. MEMORY_AND_DISK semantics keep
-          // this sound when the working set outgrows executor memory —
-          // the design-scale statement is that the frontier HEAD is a
-          // cluster-resident structure, as in any production crawler.
-          //
-          // INCREMENTAL reuse (r6): appends only EXTEND the wanted file
-          // list (manifest order is parent.files ++ new), so when the
-          // cached signature is a strict prefix of the current one the
-          // cached blocks stay valid — serve cache ∪ fresh-scan(new
-          // files). The old exact-signature key re-cached the WHOLE
-          // wanted set on every discovery append, i.e. every batch: the
-          // measured O(fill)-per-batch claim-read growth term of the
-          // 300k drain (VERDICT r5 weak #a). The union's fresh side is
-          // bounded by the compaction cadence (a compaction rewrites
-          // paths → full rebuild), with a hard file cap as backstop.
-          val sig = plan.full.map(_.path)
-          val c = stateScanCache
-          if (c != null && c._1 == wantTags && c._2 == sig) c._3
-          else if (c != null && c._1 == wantTags && sig.size > c._2.size &&
-                   sig.take(c._2.size) == c._2 &&
-                   sig.size - c._2.size <= IncrementalScanMaxFiles) {
-            val extra = plan.full.drop(c._2.size)
-            c._3.unionByName(spark.read.schema(schema)
-              .parquet(extra.map(f => root.resolve(f.path).toString): _*))
-          } else {
-            if (c != null) c._3.unpersist()
-            val df = fresh().cache()
-            stateScanCache = (wantTags, sig, df)
-            df
-          }
-        }
-      }
+    if (plan.full.forall(_.deltaSeq == 0)) {
+      // CACHE-RESIDENT base scan (cacheScans; the crawl frontier): the
+      // wanted-tag base set changes only on an append or a compaction —
+      // between those, every claim re-decoded the same parquet files
+      val baseDf = slotScan(ScanCache.States, wantTags, plan.full.map(_.path))(
+        scanPaths(schema, _))
       if (plan.shadowKeys.isEmpty) return baseDf.select(cols: _*)
       val shadowDf = spark.read.schema(schema)
         .parquet(plan.shadowKeys.map(f => root.resolve(f.path).toString): _*)
@@ -262,16 +238,11 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
         else shadowDf
       return baseDf.join(sh, Seq(keyCol), "left_anti").select(cols: _*)
     }
-    val candDf = plan.full.groupBy(f => (f.deltaSeq, f.tag)).toSeq.sortBy(_._1).map {
-      case ((seq, tag), fs) =>
-        val df = spark.read.schema(schema)
-          .parquet(fs.map(f => root.resolve(f.path).toString): _*)
-          .withColumn("__delta_seq", lit(seq))
-        // tagged file ⇒ every row matches by construction; untagged
-        // (legacy/mixed) files fall back to a row-level predicate
-        val cand = if (tag.nonEmpty) lit(true)
-                   else col(tc).isin(wantTags.toSeq: _*)
-        df.withColumn("__cand", cand)
+    // a wanted-tag file's rows all match by construction
+    val candDf = plan.full.groupBy(_.deltaSeq).toSeq.sortBy(_._1).map { case (seq, fs) =>
+      scanPaths(schema, fs.map(_.path))
+        .withColumn("__delta_seq", lit(seq))
+        .withColumn("__cand", lit(true))
     }.reduce(_ unionByName _)
     val all =
       if (plan.shadowKeys.isEmpty) candDf
@@ -320,12 +291,6 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * since-compaction-small by the compaction invariant, so the B-fold
     * delta re-read is bounded (and page-cached). Legacy bucketed delta
     * files pass through the same filter (a no-op for them). */
-  /** Per-bucket cached wanted-base scans (cacheStateScans only), keyed
-    * (bucket → (tags, file set, df)) with the same incremental
-    * append-extension rule as `stateScanCache`. */
-  @volatile private var bucketScanCache: Map[Int, (Set[String], Seq[String], DataFrame)] =
-    Map.empty
-
   def bucketedStateScan(wantTags: Set[String]): Seq[(Int, DataFrame)] = {
     require(tagCol.isDefined && bucketBy.isDefined,
       "bucketedStateScan requires tagCol and bucketBy")
@@ -362,31 +327,16 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     val bucketIds: Seq[Int] =
       if (deltas.exists(f => wantTags(f.tag))) (0 until nBuckets)
       else wantedBases.keys.toSeq.sorted
-    // per-bucket base scan, cache-resident with incremental append
-    // extension (the bucketed twin of the readStates fast-path cache):
-    // without it every claim re-decoded the whole pending set
-    def bucketBase(b: Int, fs: Seq[FileEntry]): DataFrame = {
-      val sig = fs.map(_.path)
-      def fresh() = spark.read.schema(schema)
-        .parquet(sig.map(p => root.resolve(p).toString): _*)
-      if (!cacheStateScans) fresh()
-      else bucketScanCache.get(b) match {
-        case Some((t, csig, df)) if t == wantTags && csig == sig => df
-        case Some((t, csig, df)) if t == wantTags && sig.size > csig.size &&
-            sig.take(csig.size) == csig &&
-            sig.size - csig.size <= IncrementalScanMaxFiles =>
-          df.unionByName(spark.read.schema(schema)
-            .parquet(sig.drop(csig.size).map(p => root.resolve(p).toString): _*))
-        case prev =>
-          prev.foreach(_._3.unpersist())
-          val df = fresh().cache()
-          bucketScanCache = bucketScanCache.updated(b, (wantTags, sig, df))
-          df
-      }
-    }
+    // a bucket whose wanted base files all left the manifest (its rows
+    // went terminal and compacted away) no longer participates: its
+    // resident scan would otherwise outlive its files
+    scans.retainBuckets(wantedBases.contains)
     bucketIds.sorted.flatMap { b =>
+      // per-bucket base scan, cache-resident (the bucketed twin of the
+      // readStates fast-path cache): without it every claim re-decoded
+      // the whole pending set
       val baseDf = wantedBases.get(b).map(fs =>
-        bucketBase(b, fs)
+        slotScan(ScanCache.Bucket(b), wantTags, fs.map(_.path))(scanPaths(schema, _))
           .withColumn("__delta_seq", lit(0L))
           .withColumn("__cand", lit(true)))
       val deltaDf = deltaUnion.map(_.filter(col("__b") === b).drop("__b"))
@@ -397,8 +347,11 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
   }
 
   /** Every key in the table — base files only, no resolution window,
-    * single pruned column. VALID ONLY for tables where every key enters
-    * through an append (the dedup-gated frontier, its sole consumer):
+    * single pruned column; cache-resident when `cacheScans` is on (the
+    * frontier's dedup gate verifies against it every batch, and the
+    * base-file set only changes on an append or a compaction). VALID
+    * ONLY for tables where every key enters through an append (the
+    * dedup-gated frontier, its sole consumer):
     * on a table that replays inserts through upserts (e.g. the payload
     * after a crash, whose recovered rows commit as deltas), this scan
     * silently misses the delta-only keys. */
@@ -407,30 +360,10 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     case Some(m) =>
       val schema = StructType.fromDDL(m.schemaDdl)
       val keySchema = StructType(schema.fields.filter(_.name == keyCol))
-      val bases = m.files.filter(_.kind == "base")
+      val bases = m.files.filter(_.kind == "base").map(_.path)
       if (bases.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keySchema)
-      else spark.read.schema(schema)
-        .parquet(bases.map(f => root.resolve(f.path).toString): _*)
-        .select(keyCol)
-  }
-
-  /** Manifest-relative base-file paths `readKeys` would scan right now
-    * — the cache signature incremental key-cache consumers key on. */
-  def baseFilePaths: Seq[String] =
-    currentManifest.toSeq.flatMap(_.files).filter(_.kind == "base").map(_.path)
-
-  /** Key column of SPECIFIC base files (by manifest-relative path) —
-    * the incremental tail of a key-set cache: consumers keep their
-    * cached scan of the stable prefix and union this pruned scan of
-    * the few files an append added (see CrawlEngine.cachedKeys). */
-  def readKeysFiles(relPaths: Seq[String]): DataFrame = {
-    val m = currentManifest.getOrElse(
-      throw new IllegalStateException("readKeysFiles before first commit"))
-    val schema = StructType.fromDDL(m.schemaDdl)
-    spark.read.schema(schema)
-      .parquet(relPaths.map(p => root.resolve(p).toString): _*)
-      .select(keyCol)
+      else slotScan(ScanCache.Keys, Set.empty, bases)(scanPaths(schema, _).select(keyCol))
   }
 
   /** UNresolved view: every live file's rows + a `__delta_seq` column
@@ -785,8 +718,8 @@ object SnapshotTable {
     * for a single-column scan). */
   val ShadowBroadcastBytes: Long = 64L << 20
 
-  /** Max files the incremental state-scan path will union onto a cached
-    * base scan before forcing a full re-cache — a backstop; compaction
+  /** Max files the incremental scan cache (`ScanCache`) will union onto
+    * a cached scan before forcing a full re-cache — a backstop; compaction
     * (which rewrites paths and forces the rebuild anyway) normally
     * fires well inside this bound. */
   val IncrementalScanMaxFiles: Int = 64
@@ -838,7 +771,7 @@ object SnapshotTable {
 
   /** The file-pruning plan `readStates` executes — exposed so tests can
     * assert a claim read opens a strict subset of the table's files.
-    *  - `full`: files read with all columns (wanted tag, or untagged);
+    *  - `full`: files read with all columns (wanted tag);
     *  - `shadowKeys`: delta files of other tags, key column only
     *    (they can shadow a wanted row with a newer version);
     *  - `skipped`: base files of other tags — never opened at all.

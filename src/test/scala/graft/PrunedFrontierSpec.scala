@@ -121,7 +121,7 @@ class PrunedFrontierSpec extends AnyFunSuite {
     def mkCached(dir: String) =
       new SnapshotTable(spark, dir, "fp", tagCol = Some("state"),
         frozenTags = Set(FrontierState.Processed, FrontierState.Failed),
-        cacheStateScans = true)
+        cacheScans = true)
     (5 until 7).foreach(lifecycleFuzz(_, mkCached, bucketScan = false))
   }
 
@@ -139,7 +139,7 @@ class PrunedFrontierSpec extends AnyFunSuite {
     def mkBucketedCached(dir: String) =
       new SnapshotTable(spark, dir, "fp", tagCol = Some("state"),
         frozenTags = Set(FrontierState.Processed, FrontierState.Failed),
-        bucketBy = Some(("host", 3)), cacheStateScans = true)
+        bucketBy = Some(("host", 3)), cacheScans = true)
     (7 until 9).foreach(lifecycleFuzz(_, mkBucketedCached, bucketScan = true))
   }
 

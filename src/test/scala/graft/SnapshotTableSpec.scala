@@ -1,13 +1,22 @@
 package graft
 
 import graft.table.SnapshotTable
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 class SnapshotTableSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private def freshDir() = Files.createTempDirectory("snaptest").toString
+
+  /** The plain scan of `paths` in table `dir` — the plan a resident
+    * slot caches, so its `storageLevel` tells (through the session's
+    * cache manager) whether that slot's entry is still persisted. */
+  private def scanOf(t: SnapshotTable, paths: Seq[String]) =
+    spark.read.schema(StructType.fromDDL(t.currentManifest.get.schemaDdl))
+      .parquet(paths.map(p => Paths.get(t.tableRoot).resolve(p).toString): _*)
 
   test("append then read returns the rows; manifest has lineage") {
     import spark.implicits._
@@ -119,18 +128,27 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("incremental state-scan cache: append-extended file sets read correctly") {
     import spark.implicits._
-    // cacheStateScans on — the claim fast path; appends must be served
+    // cacheScans on — the claim fast path; appends must be served
     // by cache ∪ fresh-tail without a stale or duplicated view
-    val t = new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st"),
-      frozenTags = Set("done"), cacheStateScans = true)
+    val dir = freshDir()
+    val t = new SnapshotTable(spark, dir, "k", tagCol = Some("st"),
+      frozenTags = Set("done"), cacheScans = true)
     def rows(i: Long) = Seq((i, s"v$i", "todo")).toDF("k", "v", "st")
     t.commitAppend(rows(1))
     def wanted = t.readStates(Set("todo")).select("k", "v")
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(wanted === Seq((1L, "v1")))      // builds the cache
+    def keys(tbl: SnapshotTable) = tbl.readKeys().as[Long].collect().sorted.toSeq
+    assert(wanted === Seq((1L, "v1")))      // builds the state entry
+    assert(keys(t) === Seq(1L))             // builds the key entry
+    val first = t.currentManifest.get.files.map(_.path)
     t.commitAppend(rows(2))                  // incremental tail 1 file
     t.commitAppend(rows(3))                  // incremental tail 2 files
     assert(wanted === Seq((1L, "v1"), (2L, "v2"), (3L, "v3")))
+    // key slot: cached prefix ∪ tail equals the uncached base-key scan
+    // (the same table opened without cacheScans)
+    val uncached = new SnapshotTable(spark, dir, "k", tagCol = Some("st"))
+    assert(keys(t) === Seq(1L, 2L, 3L))
+    assert(keys(t) === keys(uncached))
     // a delta flipping a row out of the wanted tag shadows it through
     // the UNCACHED shadow-key side, on top of the cached base
     t.commitUpsert(Seq((2L, "v2", "done")).toDF("k", "v", "st"))
@@ -139,6 +157,43 @@ class SnapshotTableSpec extends AnyFunSuite {
     val full = t.read().filter(org.apache.spark.sql.functions.col("st") === "todo")
       .select("k", "v").as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(full === wanted)
+    // a compaction rewrites every path: the next reads rebuild both
+    // slots, and neither superseded entry stays persisted
+    assert(scanOf(t, first).storageLevel !== StorageLevel.NONE)
+    assert(scanOf(t, first).select("k").storageLevel !== StorageLevel.NONE)
+    assert(t.compactIfNeeded(maxDeltaCommits = 0).isDefined)
+    assert(wanted === Seq((1L, "v1"), (3L, "v3")))
+    assert(keys(t) === Seq(1L, 2L, 3L))
+    assert(scanOf(t, first).storageLevel === StorageLevel.NONE)
+    assert(scanOf(t, first).select("k").storageLevel === StorageLevel.NONE)
+    val bases = t.currentManifest.get.files.filter(_.kind == "base")
+    assert(scanOf(t, bases.filter(_.tag == "todo").map(_.path)).storageLevel
+      !== StorageLevel.NONE)
+    assert(scanOf(t, bases.map(_.path)).select("k").storageLevel !== StorageLevel.NONE)
+  }
+
+  test("incremental state-scan cache: a bucket whose wanted rows all compact away is unpersisted") {
+    import spark.implicits._
+    val t = new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st"),
+      frozenTags = Set("done"), bucketBy = Some(("k", 2)), cacheScans = true)
+    t.commitAppend((1L to 16L).map(i => (i, s"v$i", "todo")).toDF("k", "v", "st"))
+    val before = t.currentManifest.get.files.groupBy(_.bucket)
+      .map { case (b, fs) => b -> fs.map(_.path) }
+    assert(before.size === 2)
+    def todoKeys = t.bucketedStateScan(Set("todo"))
+      .map(_._2.select("k").as[Long].collect().toSet).reduce(_ ++ _)
+    assert(todoKeys === (1L to 16L).toSet)   // builds both bucket entries
+    before.values.foreach(ps => assert(scanOf(t, ps).storageLevel !== StorageLevel.NONE))
+    // every pending row of the gone bucket flips terminal, and the
+    // compaction folds them into a frozen base: the bucket has no
+    // wanted base file left
+    val gone = before.keys.min
+    val goneKeys = scanOf(t, before(gone)).select("k").as[Long].collect().toSet
+    t.commitUpsert(goneKeys.toSeq.map(i => (i, s"v$i", "done")).toDF("k", "v", "st"))
+    assert(t.compactIfNeeded(maxDeltaCommits = 0).isDefined)
+    assert(!t.currentManifest.get.files.exists(f => f.bucket == gone && f.tag == "todo"))
+    assert(todoKeys === (1L to 16L).toSet -- goneKeys)
+    before.values.foreach(ps => assert(scanOf(t, ps).storageLevel === StorageLevel.NONE))
   }
 
   test("compaction preserves the resolved view and drops deltas") {
