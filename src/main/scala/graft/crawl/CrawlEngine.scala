@@ -31,8 +31,6 @@ final case class CrawlConfig(
                                // drains degenerate into 2-item batches
     nShards: Int = 16,
     shardBuckets: Int = 1 << 14, // 16k buckets × 4 slots ≈ 55k fps/shard
-    targetPerTask: Int = 64,   // skew-salt threshold (Frontier.salted
-                               // consumers; the fetch map round-robins)
     compactEvery: Int = 12, // frontier delta COMMITS between compactions:
                             // with the claim's anti-join fast path, extra
                             // deltas only widen the bounded shadow-key
@@ -596,9 +594,11 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * exposing `defer` would let a caller overlap the deferred terminal
     * commit with another public writer (resume, enqueue paths), i.e.
     * two concurrent frontier commits racing on CURRENT. */
-  def runBatch(batchNo: Long): Long = runBatch(batchNo, defer = false)
+  def runBatch(batchNo: Long): Long =
+    runBatch(batchNo, defer = false, pre = None, specNext = false)._1
 
-  /** One micro-batch. Returns number of urls processed (0 = drained).
+  /** Core of one micro-batch. Returns number of urls processed (0 =
+    * drained) and the next batch's speculative claim, if kept.
     *
     * `defer`: when true (drain's pipelined loop), the batch TAIL —
     * terminal state flip + table hygiene — is submitted to the commit
@@ -607,15 +607,13 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * and every later frontier write first joins it, so commit ORDER is
     * exactly the serial story and crash safety is unchanged: a crash
     * before the deferred terminal commit lands leaves rows in
-    * `processing` for resume(). */
-  private def runBatch(batchNo: Long, defer: Boolean): Long =
-    runBatch(batchNo, defer, pre = None, specNext = false)._1
-
-  /** Core of one micro-batch. `pre` is a claim already taken (by the
-    * previous batch's speculation); when `specNext` is set, the NEXT
-    * batch's claim is taken SPECULATIVELY on the spec thread, CONCURRENT
-    * with this batch's dedup-gate chain, and returned when provably
-    * identical to the post-append claim:
+    * `processing` for resume().
+    *
+    * `pre` is a claim already taken (by the previous batch's
+    * speculation); when `specNext` is set, the NEXT batch's claim is
+    * taken SPECULATIVELY on the spec thread, CONCURRENT with this
+    * batch's dedup-gate chain, and returned when provably identical to
+    * the post-append claim:
     *  - the gate appended nothing (nFresh == 0 — the steady state of a
     *    saturated discovery universe, and every politeness-dribble
     *    batch), the frontier's pending view is unchanged, or

@@ -24,34 +24,22 @@ object Frontier {
     *     as claim-rate rather than wall-clock sleeping);
     *  3. global top-`batchSize` by (priority, seq) — planned by Spark
     *     as TakeOrderedAndProject, no single-partition window.
-    * Deterministic: ties impossible (seq unique). */
-  def claim(pending: DataFrame, policies: DataFrame,
-            batchSize: Int, batchMs: Long): DataFrame =
-    claimWithDelay(pending,
-      p => p.join(broadcast(policies.select("host", "crawlDelayMs")), Seq("host"), "left"),
-      batchSize, batchMs)
-
-  /** Claim with the crawl delay computed as a column function of the
-    * host instead of a broadcast-joined table — removes a per-batch
-    * distinct-hosts job + broadcast (the synthetic policy is
-    * deterministic per host, so a table materialization per batch is
-    * pure fixed cost; a real deployment would broadcast a slowly-
-    * changing robots table once, not per batch). The delay is a pure
-    * builtin expression (Synth.crawlDelayMsCol), so the whole claim
-    * plan is UDF-free and stays inside whole-stage codegen. */
+    * Deterministic: ties impossible (seq unique).
+    *
+    * The crawl delay is a column function of the host, not a
+    * broadcast-joined policy table: the synthetic policy is
+    * deterministic per host, so a per-batch table materialization
+    * would be pure fixed cost (a real deployment would broadcast a
+    * slowly-changing robots table once, not per batch). The delay is a
+    * pure builtin expression (Synth.crawlDelayMsCol), so the whole
+    * claim plan is UDF-free and stays inside whole-stage codegen. */
   def claimBySynthPolicy(pending: DataFrame, seed: Long,
-                         batchSize: Int, batchMs: Long): DataFrame =
-    claimWithDelay(pending,
-      p => p.withColumn("crawlDelayMs", Synth.crawlDelayMsCol(col("host"), seed)),
-      batchSize, batchMs)
-
-  private def claimWithDelay(pending: DataFrame,
-                             withDelay: DataFrame => DataFrame,
-                             batchSize: Int, batchMs: Long): DataFrame = {
+                         batchSize: Int, batchMs: Long): DataFrame = {
     val wHost = Window.partitionBy("host").orderBy("priority", "seq")
-    withDelay(pending)
+    pending
+      .withColumn("crawlDelayMs", Synth.crawlDelayMsCol(col("host"), seed))
       .withColumn("hostCap",
-        greatest(lit(1L), (lit(batchMs) / coalesce(col("crawlDelayMs"), lit(1000L))).cast("long")))
+        greatest(lit(1L), (lit(batchMs) / col("crawlDelayMs")).cast("long")))
       .withColumn("hrn", row_number().over(wHost))
       .filter(col("hrn") <= col("hostCap"))
       .drop("hrn", "hostCap", "crawlDelayMs")
@@ -271,14 +259,6 @@ object Frontier {
   }
 
   private val RobotsError = "robots: disallowed"
-
-  /** Host-policy table for a frontier (distinct hosts; deterministic
-    * synth policies — the robots/crawl-delay table, FIXTURES.md §4). */
-  def policies(spark: SparkSession, frontier: DataFrame, seed: Long): DataFrame = {
-    import spark.implicits._
-    frontier.select("host").distinct().as[String]
-      .map(h => Synth.hostPolicy(h, seed)).toDF()
-  }
 }
 
 /** Membership in a broadcast SORTED key array (binary search) — the

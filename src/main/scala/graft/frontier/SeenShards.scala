@@ -209,11 +209,6 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     if (table.currentId.isEmpty) table.commitAppend(merged, metrics)
     else table.commitUpsert(merged, metrics)
   }
-
-  /** Exact expected-membership helper for tests. */
-  def totalCount: Long =
-    if (table.currentId.isEmpty) 0L
-    else table.read().agg(sum("count")).head.getLong(0)
 }
 
 /** Serializable probe closure: deserializes each touched shard once

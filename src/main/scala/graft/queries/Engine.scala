@@ -38,7 +38,7 @@ object Engine {
   )
 
   /** Latest-wins resolution of a raw snapshot-table dump — the DuckDB
-    * twin of SnapshotTable.readResolved. */
+    * twin of SnapshotTable.resolve. */
   private def resolved(dump: String, key: String): String =
     s"""SELECT * EXCLUDE (__delta_seq, __rn) FROM (
        |  SELECT *, row_number() OVER (PARTITION BY $key ORDER BY __delta_seq DESC) AS __rn

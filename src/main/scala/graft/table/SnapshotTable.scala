@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -19,6 +20,14 @@ import scala.jdk.CollectionConverters._
   *    read amplification is bounded;
   *  - every commit records per-file lineage (rows/bytes/min/max key)
   *    plus a metrics map (north rule: per-partition lineage manifests).
+  *
+  * Every resolved read (`read`, `readAt`, `readStates`, compaction)
+  * applies ONE merge-on-read rule (`resolve`): the latest version of a
+  * key wins, and since base keys are disjoint (see the append contract
+  * below), a base row survives exactly when no delta holds its key.
+  * So the result is base ⋉̸ deltaKeys ∪ the latest delta rows that are
+  * wanted — the resolution window runs over the since-compaction
+  * deltas only, never over base rows.
   *
   * State-partitioned files (`tagCol`): when set, every data write is
   * split by that column's value and each file's manifest entry records
@@ -143,39 +152,72 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
   /** Resolved view: base ∖ deltaKeys ∪ latest-per-key delta rows. */
   def read(): DataFrame = currentManifest match {
     case None => spark.emptyDataFrame
-    case Some(m) => readResolved(m)
+    case Some(m) => resolveAll(m)
   }
 
-  def readAt(id: Long): DataFrame = readResolved(manifest(id))
+  def readAt(id: Long): DataFrame = resolveAll(manifest(id))
 
   def isEmpty: Boolean = currentManifest.forall(_.files.isEmpty)
 
-  private def readResolved(m: Manifest): DataFrame = {
+  /** Every resolved row of `m`'s files. */
+  private def resolveAll(m: Manifest): DataFrame = {
     val schema = StructType.fromDDL(m.schemaDdl)
-    if (m.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val (bases, deltas) = m.files.partition(_.kind == "base")
-    val baseDf =
-      if (bases.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema).parquet(bases.map(f => root.resolve(f.path).toString): _*)
-    if (deltas.isEmpty) return baseDf
-    val cols = schema.fieldNames.map(col).toSeq
-    val deltaDf = deltas.groupBy(_.deltaSeq).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      spark.read.schema(schema).parquet(fs.map(f => root.resolve(f.path).toString): _*)
-        .withColumn("__delta_seq", lit(seq))
-    }.reduce(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col("__delta_seq").desc)
-    val latest = deltaDf.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).select(cols: _*)
-    baseDf.join(latest.select(keyCol).distinct(), Seq(keyCol), "left_anti")
-      .select(cols: _*)
-      .unionByName(latest)
+    resolve(schema, scanPaths(schema, bases.map(_.path)), deltas, _ => true)
   }
 
-  /** Parquet scan of manifest-relative `paths`. */
+  /** THE merge-on-read rule: the resolved rows of `bases` (a scan of
+    * base files) plus those of `deltas` whose latest version lives in a
+    * `cand` file. Base keys are disjoint, so a base row survives iff no
+    * delta holds its key; the latest version of a delta key wins.
+    *  - no candidate delta: `bases` ⋉̸ the delta files' key column — one
+    *    anti-join, no resolution window (the claim's steady state);
+    *  - otherwise a `row_number` window over the DELTA files only
+    *    (candidates with full rows, the rest key-only): `bases` ⋉̸ its
+    *    keys ∪ its candidate rows.
+    * The key side is broadcast when the deltas' manifest bytes fit
+    * `ShadowBroadcastBytes` (full-row bytes, so conservative for a key
+    * column): since-compaction deltas are O(few batches), and the base
+    * side — the bulk — then never shuffles. */
+  private def resolve(schema: StructType, bases: DataFrame, deltas: Seq[FileEntry],
+                      cand: FileEntry => Boolean): DataFrame = {
+    if (deltas.isEmpty) return bases
+    val cols = schema.fieldNames.map(col).toSeq
+    def survivors(shadow: DataFrame): DataFrame = {
+      val keys = shadow.select(keyCol)
+      val sh = if (deltas.map(_.bytes).sum <= ShadowBroadcastBytes) broadcast(keys) else keys
+      bases.join(sh, Seq(keyCol), "left_anti").select(cols: _*)
+    }
+    if (!deltas.exists(cand)) return survivors(scanPaths(schema, deltas.map(_.path)))
+    // keys are unique within a commit (upsert contract): no ties
+    val w = Window.partitionBy(keyCol).orderBy(col("__delta_seq").desc)
+    val latest = layered(schema, deltas, cand, keyOnlyOthers = true)
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    survivors(latest).unionByName(latest.filter(col("__cand")).select(cols: _*))
+  }
+
+  /** Union of `files`' rows, one scan per (deltaSeq, candidacy) layer,
+    * each row tagged with its layer's `__delta_seq` and `__cand`. With
+    * `keyOnlyOthers`, non-candidate files are read as their key column
+    * only (a pruned scan), the other columns null. */
+  private def layered(schema: StructType, files: Seq[FileEntry],
+                      cand: FileEntry => Boolean = _ => true,
+                      keyOnlyOthers: Boolean = false): DataFrame = {
+    val nulls = schema.fields.filterNot(_.name == keyCol)
+      .map(f => lit(null).cast(f.dataType).as(f.name)).toSeq
+    files.groupBy(f => (f.deltaSeq, cand(f))).toSeq.sortBy(_._1).map {
+      case ((seq, c), fs) =>
+        val rows = scanPaths(schema, fs.map(_.path))
+        (if (c || !keyOnlyOthers) rows else rows.select(col(keyCol) +: nulls: _*))
+          .withColumn("__delta_seq", lit(seq))
+          .withColumn("__cand", lit(c))
+    }.reduce(_ unionByName _)
+  }
+
+  /** Parquet scan of manifest-relative `paths` (typed-empty when none). */
   private def scanPaths(schema: StructType, paths: Seq[String]): DataFrame =
-    spark.read.schema(schema).parquet(paths.map(p => root.resolve(p).toString): _*)
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(paths.map(p => root.resolve(p).toString): _*)
 
   /** `scan(paths)`, served from the slot's resident entry when
     * `cacheScans` is on. */
@@ -203,71 +245,20 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
       throw new IllegalStateException("readStates requires a tagCol-partitioned table")
     val m = currentManifest.getOrElse(return spark.emptyDataFrame)
     val schema = StructType.fromDDL(m.schemaDdl)
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val plan = statesReadPlan(wantTags)
-    if (plan.full.isEmpty) return empty
-    val cols = schema.fieldNames.map(col).toSeq
-    // FAST PATH: every wanted file is a BASE (deltaSeq 0) — the
-    // steady state of a claim read (pending rows enter by append; only
-    // recovery upserts put a wanted row in a delta, and that routes to
-    // the window path below). Base keys are disjoint (append contract),
-    // so merge-on-read degenerates to "drop base rows whose key appears
-    // in ANY newer delta": one anti-join against the since-compaction
-    // delta keys — a set bounded by the compaction cadence — instead of
-    // a sort-shuffle resolution window over the whole wanted set. At
-    // design scale this removes the claim's O(pending) exchange; the
-    // politeness rank becomes the claim's only shuffle.
-    if (plan.full.forall(_.deltaSeq == 0)) {
-      // CACHE-RESIDENT base scan (cacheScans; the crawl frontier): the
-      // wanted-tag base set changes only on an append or a compaction —
-      // between those, every claim re-decoded the same parquet files
-      val baseDf = slotScan(ScanCache.States, wantTags, plan.full.map(_.path))(
-        scanPaths(schema, _))
-      if (plan.shadowKeys.isEmpty) return baseDf.select(cols: _*)
-      val shadowDf = spark.read.schema(schema)
-        .parquet(plan.shadowKeys.map(f => root.resolve(f.path).toString): _*)
-        .select(keyCol)
-      // manifest-estimated shadow volume decides the join strategy:
-      // since-compaction deltas are O(few batches) — broadcast them and
-      // the base side never shuffles (the key column is ~10x smaller
-      // than the full-row bytes the manifest records, so the bound is
-      // conservative)
-      val sh =
-        if (plan.shadowKeys.map(_.bytes).sum <= ShadowBroadcastBytes)
-          broadcast(shadowDf)
-        else shadowDf
-      return baseDf.join(sh, Seq(keyCol), "left_anti").select(cols: _*)
-    }
+    if (plan.full.isEmpty) return scanPaths(schema, Nil)
+    val (wantedDeltas, wantedBases) = plan.full.partition(_.deltaSeq > 0)
+    // the wanted-base scan is CACHE-RESIDENT (cacheScans; the crawl
+    // frontier) only while no wanted-tag delta exists — the claim's
+    // steady state, whose base set changes only on an append or a
+    // compaction. Other wanted sets (terminal history, recovery
+    // re-pends) stay plain scans: the frozen bulk must never be resident.
+    val baseDf =
+      if (wantedDeltas.isEmpty)
+        slotScan(ScanCache.States, wantTags, wantedBases.map(_.path))(scanPaths(schema, _))
+      else scanPaths(schema, wantedBases.map(_.path))
     // a wanted-tag file's rows all match by construction
-    val candDf = plan.full.groupBy(_.deltaSeq).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      scanPaths(schema, fs.map(_.path))
-        .withColumn("__delta_seq", lit(seq))
-        .withColumn("__cand", lit(true))
-    }.reduce(_ unionByName _)
-    val all =
-      if (plan.shadowKeys.isEmpty) candDf
-      else {
-        // other-tag deltas shadow by key: read ONLY the key column
-        // (columnar pruned scan), null-pad the rest for the union
-        val nulls = schema.fields.filterNot(_.name == keyCol)
-          .map(f => lit(null).cast(f.dataType).as(f.name)).toSeq
-        val shadowDf = plan.shadowKeys.groupBy(_.deltaSeq).toSeq.sortBy(_._1).map {
-          case (seq, fs) =>
-            spark.read.schema(schema)
-              .parquet(fs.map(f => root.resolve(f.path).toString): _*)
-              .select((col(keyCol) +: nulls): _*)
-              .withColumn("__delta_seq", lit(seq))
-              .withColumn("__cand", lit(false))
-        }.reduce(_ unionByName _)
-        candDf.unionByName(shadowDf)
-      }
-    // latest version per key wins; keep it only if it is a wanted row.
-    // Keys are unique within a commit (upsert contract), so no ties.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(col("__delta_seq").desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("__cand"))
-      .select(cols: _*)
+    resolve(schema, baseDf, wantedDeltas ++ plan.shadowKeys, f => wantTags(f.tag))
   }
 
   /** Per-bucket pruned state scan for bucket-local consumers: for each
@@ -289,8 +280,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * SAME `pmod(hash(bucketCol), B)` expression the writer uses for
     * base files — a narrow filter, still zero exchanges. Deltas are
     * since-compaction-small by the compaction invariant, so the B-fold
-    * delta re-read is bounded (and page-cached). Legacy bucketed delta
-    * files pass through the same filter (a no-op for them). */
+    * delta re-read is bounded (and page-cached). */
   def bucketedStateScan(wantTags: Set[String]): Seq[(Int, DataFrame)] = {
     require(tagCol.isDefined && bucketBy.isDefined,
       "bucketedStateScan requires tagCol and bucketBy")
@@ -310,16 +300,9 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     // checkpoint: the claim job itself materializes it.
     val deltaUnion: Option[DataFrame] =
       if (deltas.isEmpty) None
-      else Some(
-        deltas.groupBy(f => (f.deltaSeq, wantTags(f.tag))).toSeq.sortBy(_._1)
-          .map { case ((seq, cand), fs) =>
-            spark.read.schema(schema)
-              .parquet(fs.map(f => root.resolve(f.path).toString): _*)
-              .withColumn("__delta_seq", lit(seq))
-              .withColumn("__cand", lit(cand))
-          }.reduce(_ unionByName _)
-          .withColumn("__b", pmod(hash(col(srcCol)), lit(nBuckets)))
-          .localCheckpoint(false))
+      else Some(layered(schema, deltas, f => wantTags(f.tag))
+        .withColumn("__b", pmod(hash(col(srcCol)), lit(nBuckets)))
+        .localCheckpoint(false))
     val wantedBases = bases.filter(f => wantTags(f.tag)).groupBy(_.bucket)
     // a bucket participates if it has wanted base rows; when a wanted-
     // tag DELTA exists (recovery re-pends — rare), its rows' buckets
@@ -359,10 +342,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     case None => spark.emptyDataFrame
     case Some(m) =>
       val schema = StructType.fromDDL(m.schemaDdl)
-      val keySchema = StructType(schema.fields.filter(_.name == keyCol))
       val bases = m.files.filter(_.kind == "base").map(_.path)
-      if (bases.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keySchema)
+      if (bases.isEmpty) scanPaths(schema, Nil).select(keyCol)
       else slotScan(ScanCache.Keys, Set.empty, bases)(scanPaths(schema, _).select(keyCol))
   }
 
@@ -384,13 +365,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
 
   private def readRawOf(m: Manifest): DataFrame =
     if (m.files.isEmpty) spark.emptyDataFrame
-    else {
-      val schema = StructType.fromDDL(m.schemaDdl)
-      m.files.groupBy(_.deltaSeq).toSeq.sortBy(_._1).map { case (seq, fs) =>
-        spark.read.schema(schema).parquet(fs.map(f => root.resolve(f.path).toString): _*)
-          .withColumn("__delta_seq", lit(seq))
-      }.reduce(_ unionByName _)
-    }
+    else layered(StructType.fromDDL(m.schemaDdl), m.files).drop("__cand")
 
   /** METADATA TABLE (Iceberg `table.files` parity): the current
     * manifest's per-file lineage — kind, commit (deltaSeq), rows,
@@ -503,7 +478,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
           .groupBy(_.tag).filter(_._2.size >= 4).values.flatten.toSet
         val frozen = frozen0.filterNot(foldable)
         val active = active0 ++ foldable
-        val resolved = readResolved(m.copy(files = active))
+        val resolved = resolveAll(m.copy(files = active))
         val nextId = m.id + 1
         // output files sized by the rewrite's bytes (~128 MB target):
         // the resolution plan ends in O(shuffle partitions) tasks, so an
@@ -766,8 +741,7 @@ object SnapshotTable {
 
   final case class FileEntry(path: String, kind: String, deltaSeq: Long,
                              rows: Long, bytes: Long, minKey: String,
-                             maxKey: String, tag: String = "",
-                             bucket: Int = -1)
+                             maxKey: String, tag: String, bucket: Int)
 
   /** The file-pruning plan `readStates` executes — exposed so tests can
     * assert a claim read opens a strict subset of the table's files.
@@ -811,8 +785,7 @@ object SnapshotTable {
         FileEntry(f.get("path").asText(), f.get("kind").asText(),
           f.get("deltaSeq").asLong(), f.get("rows").asLong(),
           f.get("bytes").asLong(), f.get("minKey").asText(), f.get("maxKey").asText(),
-          if (f.has("tag")) f.get("tag").asText() else "",
-          if (f.has("bucket")) f.get("bucket").asInt() else -1)
+          f.get("tag").asText(), f.get("bucket").asInt())
       }.toSeq
       val metrics = node.get("metrics").properties().asScala
         .map(e => e.getKey -> e.getValue.asDouble()).toMap

@@ -19,7 +19,7 @@ class BucketedClaimSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val cfg = CrawlConfig(seed = 11L, nHosts = 17, universe = 200,
-    batchSize = 53, batchMs = 180000L, nShards = 4, targetPerTask = 16,
+    batchSize = 53, batchMs = 180000L, nShards = 4,
     claimMode = "bucketed", claimBuckets = 5)
   private val nSeeds = 80
 

@@ -16,8 +16,7 @@ class CrawlParityAltSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val cfg = CrawlConfig(seed = 7L, nHosts = 23, universe = 250,
-    batchSize = 61, batchMs = 120000L, nShards = 5, targetPerTask = 16,
-    seenMode = "join")
+    batchSize = 61, batchMs = 120000L, nShards = 5, seenMode = "join")
   private val nSeeds = 90
 
   private lazy val engine: CrawlEngine = {
@@ -50,8 +49,7 @@ class CrawlParityAltSpec extends AnyFunSuite {
   test("fuzz config: a third independent (seed, shape) still byte-matches") {
     import spark.implicits._
     val fuzz = CrawlConfig(seed = 1337L, nHosts = 7, universe = 120,
-      batchSize = 37, batchMs = 300000L, nShards = 3, targetPerTask = 8,
-      seenMode = "auto")
+      batchSize = 37, batchMs = 300000L, nShards = 3, seenMode = "auto")
     val dir = Files.createTempDirectory("crawlparityfuzz").toString
     val e = new CrawlEngine(spark, dir, fuzz)
     e.init(60)

@@ -125,8 +125,8 @@ class CrawlParitySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val fr = eng.frontier.read()
     val pending = fr.filter(col("state") === "pending")
-    val policies = graft.frontier.Frontier.policies(spark, pending, cfg.seed)
-    val claimed = graft.frontier.Frontier.claim(pending, policies, cfg.batchSize, cfg.batchMs)
+    val claimed = graft.frontier.Frontier.claimBySynthPolicy(pending, cfg.seed,
+      cfg.batchSize, cfg.batchMs)
     eng.frontier.commitUpsert(claimed.withColumn("state", lit("processing")))
   }
 }

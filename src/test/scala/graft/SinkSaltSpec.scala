@@ -3,7 +3,6 @@ package graft
 import graft.export.ExportQuery
 import graft.frontier.Frontier
 import graft.table.SnapshotTable
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -40,22 +39,6 @@ class SinkSaltSpec extends AnyFunSuite {
     assert(before === 6 && after === 2)
     // current still resolves to the latest value
     assert(t.read().as[(Long, String)].collect().toSeq === Seq((1L, "u4")))
-  }
-
-  test("claim via joined policies == claim via synth-policy column fn") {
-    import spark.implicits._
-    val seed = 42L
-    val entries = graft.frontier.Frontier.toEntries(spark,
-      spark.createDataset(graft.synth.Synth.seedUrls(500, nHosts = 20, seed)),
-      batchNo = 0L, seed)
-      .filter(col("state") === graft.model.FrontierState.Pending)
-    val policies = graft.frontier.Frontier.policies(spark, entries, seed)
-    val a = graft.frontier.Frontier.claim(entries, policies, 100, 60000L)
-      .select("fp").as[Long].collect().sorted.toSeq
-    val b = graft.frontier.Frontier.claimBySynthPolicy(entries, seed, 100, 60000L)
-      .select("fp").as[Long].collect().sorted.toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
   }
 
   test("skew salting spreads hot hosts, leaves cold hosts unsalted") {

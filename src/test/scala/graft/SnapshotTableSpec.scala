@@ -244,6 +244,35 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(rederived === direct)
   }
 
+  test("readStates with a wanted-tag delta resolves without a window over base rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    val t = new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st"))
+    t.commitAppend((1L to 8L).map(i => (i, s"v$i", "todo")).toDF("k", "v", "st"))
+    t.commitUpsert((1L to 4L).map(i => (i, s"v$i", "done")).toDF("k", "v", "st"))
+    assert(t.compactIfNeeded(maxDeltaCommits = 0).isDefined)   // a "done" base
+    t.commitUpsert(Seq((5L, "w5", "done")).toDF("k", "v", "st")) // a newer "done" delta
+    t.commitUpsert(Seq((1L, "w1", "todo")).toDF("k", "v", "st")) // shadows a "done" base row
+    val df = t.readStates(Set("done"))
+    val got = df.select("k", "v").as[(Long, String)].collect().sortBy(_._1).toSeq
+    val full = t.read().filter(org.apache.spark.sql.functions.col("st") === "done")
+      .select("k", "v").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(got === full)
+    assert(got === Seq((2L, "v2"), (3L, "v3"), (4L, "v4"), (5L, "w5")))
+    // the terminal base is read, but never sort-shuffled by the window
+    object Plans extends AdaptiveSparkPlanHelper
+    def baseScans(p: org.apache.spark.sql.execution.SparkPlan) = Plans.collect(p) {
+      case s: FileSourceScanExec if s.relation.location.inputFiles.exists(_.contains("-base-")) => s
+    }
+    val plan = df.queryExecution.executedPlan
+    assert(baseScans(plan).nonEmpty)
+    Plans.collect(plan) { case w: WindowExec => w }.foreach { w =>
+      assert(baseScans(w).isEmpty, s"a window resolves base rows:\n$plan")
+    }
+  }
+
   test("fuzz: 40 random commit/compact/expire interleavings match a model map (3 seeds)") {
     import spark.implicits._
     (0 until 3).foreach { trial =>
