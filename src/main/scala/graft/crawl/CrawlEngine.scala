@@ -62,9 +62,17 @@ final case class CrawlConfig(
   * occurrence and the cuckoo tier then run on the driver),
   * terminal-commit, payload-commit, maxSeq and next-batch (prop reads,
   * zero jobs), enqueue (one verify job over the filter positives —
-  * none when there are none — then seen-commit + append-commit only
-  * when something survives) ≈ 6–8 Spark actions plus hygiene; larger
-  * claim waves add the distributed discovery rank and the Spark gate.
+  * none when there are none — then, only when something survives, the
+  * seen commit and the append commit) ≈ 6–8 Spark actions plus
+  * hygiene; larger claim waves add the distributed discovery rank and
+  * the Spark gate. On the broadcast seen path the seen commit is a
+  * driver-side insert into the memoized shard snapshot plus one
+  * one-file write: no shuffle, and no job re-reads the shards after
+  * it. The bulk paths (init, seed files and streams, executor-side
+  * keyword expansion) run the Spark gate — one action that also
+  * collects the survivors' (fp, seq) for that driver insert — then the
+  * append and the seen table's hygiene check (a manifest read;
+  * compaction once more than 6 seen deltas pile up).
   * The batch's WALL time is the critical path,
   * not the sum: commits ride a single-thread commit lane that overlaps
   * compute wherever the crash-safety order allows. Per batch:
@@ -197,7 +205,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
   def init(nSeeds: Int): Unit = {
     quiesce() // no public writer may overlap a deferred batch tail
     val seeds = spark.createDataset(Synth.seedUrls(nSeeds, cfg.nHosts, cfg.seed))
-    enqueue(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed), batchNo = 0L)
+    enqueueBulk(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed), batchNo = 0L)
   }
 
   /** Max seq already in the frontier (-1 if empty) — seeding entry
@@ -216,11 +224,14 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * partition order IS file-offset order, so a partition-offset zip
     * (Rank.zipInOrder) numbers a 10^10-line seed list fully in
     * parallel — the global-window version pushed the whole file
-    * through one task. */
+    * through one task. The file is read in `defaultParallelism` splits
+    * (seqs do not depend on the split count) and gated by the Spark
+    * gate, whose seen commit runs on the driver (see `enqueue`). */
   def initFromTextFile(path: String): Long = {
     quiesce()
     val base = currentMaxSeq + 1
-    val lines = spark.sparkContext.textFile(path)
+    // full width: textFile's default is min(defaultParallelism, 2) splits
+    val lines = spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
       .filter(l => l.trim.nonEmpty) // F1 blank-row drop
       .toDF("url")
     val (zipped, _) = graft.util.Rank.zipInOrder(lines, "__idx")
@@ -228,7 +239,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       .withColumn("seq", lit(base) + col("__idx") - 1)
       .withColumn("priority", lit(Frontier.NormalPriority))
       .select("url", "priority", "seq").as[SeedUrl]
-    enqueue(Frontier.toEntries(spark, withSeq, batchNo = 0L, cfg.seed), batchNo = 0L)
+    enqueueBulk(Frontier.toEntries(spark, withSeq, batchNo = 0L, cfg.seed), batchNo = 0L)
   }
 
   /** STREAMING seed ingestion — S1's Structured Streaming twin: watch a
@@ -268,7 +279,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           .withColumn("seq", lit(base) + col("__rn") - 1)
           .withColumn("priority", lit(Frontier.NormalPriority))
           .select("url", "priority", "seq").as[SeedUrl]
-        enqueue(Frontier.toEntries(spark, seeds, batchNo = batchId, cfg.seed),
+        enqueueBulk(Frontier.toEntries(spark, seeds, batchNo = batchId, cfg.seed),
           batchNo = batchId)
         ()
       }
@@ -347,6 +358,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // and snapshot accumulation over long keyword drains
     if (keywords.compactIfNeeded(maxDeltaCommits = 6).isDefined)
       keywords.expire(keepLast = 8)
+    seen.compactIfNeeded()
     (claimed.length.toLong, n)
   }
 
@@ -388,7 +400,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       .select("url", "priority", "seq").as[SeedUrl]
     // the Spark gate: this is the unbounded-backlog path (a
     // million-query expansion), whose candidates never reach the driver
-    val n = enqueue(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed),
+    val n = enqueueBulk(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed),
       batchNo = 0L)
     keywords.commitUpsert(claimed
       .withColumn("state", lit("searched"))
@@ -428,11 +440,23 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
   /** Spark-side enqueue: the gate for candidate sets that are not on
     * the driver (bulk seeding, the executor-side keyword expansion,
     * claim waves past DriverRankMaxRows). Batch-bounded candidates
-    * already on the driver take `enqueueLocal`. */
+    * already on the driver take `enqueueLocal`.
+    *
+    * On the broadcast seen path the gate's one action collects the
+    * survivors' (fp, seq), 16 B each: n, the max seq and the driver's
+    * seen insert (`SeenShards.insertLocal`) all come from that array, so
+    * the seen commit adds a one-file write and no read. The collect is
+    * bounded by the same contract `snapshotBytes` already relies on: the
+    * broadcast path runs only while the shard table is ≤
+    * `JoinThresholdBytes` (64 MB), and every survivor ends up in a shard
+    * slot or an exact overflow entry that the driver holds on the next
+    * version anyway. The join path keeps the fps distributed: one
+    * aggregate reads n and the max seq, and the insert co-partitions. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long): Long = {
-    // broadcast path: ONE collect per batch shared by probe+insert;
-    // join path (design scale): no collect at all — probe/insert
-    // co-partition with the shard table instead
+    // broadcast path: ONE collect per table version shared by probe and
+    // insert (memoized, and advanced by the insert itself); join path
+    // (design scale): no collect at all — probe/insert co-partition with
+    // the shard table instead
     val shardSnapshot = phase("enqueue-probe")(
       if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
     val firstOcc = Frontier.firstOccurrence(entries)
@@ -442,18 +466,37 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // revise them), and the base-file set only changes on an append or
     // a compaction
     val fresh = Frontier.dedupGate(probed, seenSet).cache()
-    // ONE action materializes the gate AND reads the survivors' stats:
-    // count (the n>0 decision + metrics) and max seq (parity: the
-    // oracle assigns the next batch's seq base from surviving rows
-    // only) ride the same aggregate — the old shape paid a second
-    // driver-job round trip per batch for the max
-    val stats = phase("enqueue-gate")(
-      fresh.agg(count(lit(1)), max("seq")).head)
-    val n = stats.getLong(0)
-    if (n > 0)
-      commitFresh(fresh, n, if (stats.isNullAt(1)) -1L else stats.getLong(1),
-        batchNo, shardSnapshot)
+    // ONE action materializes the gate AND reads what the commit needs;
+    // max seq is parity-relevant: the oracle assigns the next batch's
+    // seq base from surviving rows only
+    val n = shardSnapshot match {
+      case Some(snap) =>
+        val survivors = phase("enqueue-gate")(
+          fresh.select("fp", "seq").as[(Long, Long)].collect())
+        if (survivors.nonEmpty)
+          commitFresh(fresh, survivors.length.toLong, survivors.iterator.map(_._2).max,
+            batchNo, Some((survivors.map(_._1), snap)))
+        survivors.length.toLong
+      case None =>
+        val stats = phase("enqueue-gate")(
+          fresh.agg(count(lit(1)), max("seq")).head)
+        val n = stats.getLong(0)
+        if (n > 0)
+          commitFresh(fresh, n, if (stats.isNullAt(1)) -1L else stats.getLong(1),
+            batchNo, None)
+        n
+    }
     fresh.unpersist()
+    n
+  }
+
+  /** `enqueue` for the bulk paths (init, seed files, seed streams,
+    * executor-side keyword expansion), then the seen table's hygiene:
+    * their seen commits never reach a drain's tail, so an ingest-only
+    * engine would otherwise keep one delta of shard rows per call. */
+  private def enqueueBulk(entries: DataFrame, batchNo: Long): Long = {
+    val n = enqueue(entries, batchNo)
+    phase("hygiene")(seen.compactIfNeeded())
     n
   }
 
@@ -464,7 +507,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * reach Spark, in ONE map-side verify job over the resident key
     * cache (Frontier.verifyHits) — the key table is never shuffled or
     * broadcast, and a batch with no positive runs no gate job at all.
-    * Under the join seen path the driver holds no shard bytes: every
+    * The survivors' fps go straight to the driver seen insert. Under
+    * the join seen path the driver holds no shard bytes: every
     * candidate is verified and the insert co-partitions as usual.
     * Output (fresh rows, seen-shard bytes) is identical to
     * `enqueue(toEntries(...))` — GatePathSpec feeds both the same
@@ -489,19 +533,25 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     }
     if (fresh.nonEmpty)
       commitFresh(spark.createDataset(fresh).toDF(), fresh.size.toLong,
-        fresh.iterator.map(_.seq).max, batchNo, shardSnapshot)
+        fresh.iterator.map(_.seq).max, batchNo,
+        shardSnapshot.map(snap => (fresh.iterator.map(_.fp).toArray, snap)))
     fresh.size.toLong
   }
 
   /** Commit `n` gate survivors (max seq `freshMaxSeq`): seen-insert
     * strictly BEFORE the frontier append — the filter must be a
     * superset of frontier keys, or a crash between the two turns the
-    * tier-1 fast path into duplicate appends. */
+    * tier-1 fast path into duplicate appends. `local` = (survivor fps,
+    * the probe's shard snapshot) on the broadcast seen path: the insert
+    * runs on the driver. */
   private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
-                          shardSnapshot: Option[Map[Int, Array[Byte]]]): Unit = {
+                          local: Option[(Array[Long], Map[Int, Array[Byte]])]): Unit = {
     val newMax = math.max(currentMaxSeq, freshMaxSeq)
-    phase("seen-commit")(
-      seen.insert(fresh.select("fp"), Map("batch" -> batchNo.toDouble), shardSnapshot))
+    val metrics = Map("batch" -> batchNo.toDouble)
+    phase("seen-commit")(local match {
+      case Some((fps, snap)) => seen.insertLocal(fps, snap, metrics)
+      case None              => seen.insert(fresh.select("fp"), metrics)
+    })
     // coalesce(1): a few-thousand-row append across 32 shuffle
     // partitions would write 32 tiny files whose footers the manifest
     // then reads; one writer task over the survivors is cheaper than
@@ -509,6 +559,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     phase("append-commit")(frontier.commitAppend(fresh.coalesce(1), Map(
       "batch" -> batchNo.toDouble, "enqueued" -> n.toDouble),
       props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
+    // only now may the superseded shard broadcast die: the append just
+    // serialized `fresh`'s plan, which still captures the probe's
+    // broadcast (destroying it inside the insert fails this append)
+    seen.releaseRetired()
   }
 
   private val phaseSums =
@@ -894,8 +948,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           phase("hygiene") {
             if (frontier.compactIfNeeded(maxDeltaCommits = cfg.compactEvery).isDefined)
               frontier.expire(keepLast = 8)
-            if (seenTbl.compactIfNeeded(maxDeltaCommits = 6).isDefined)
-              seenTbl.expire(keepLast = 8)
+            seen.compactIfNeeded()
             if (payload.compactIfNeeded(maxDeltaCommits = 12).isDefined)
               payload.expire(keepLast = 8)
           }

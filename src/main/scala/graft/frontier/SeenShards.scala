@@ -14,10 +14,13 @@ import org.apache.spark.sql.functions._
   * Two physical paths behind one API, selected by `mode`:
   *
   *  - "broadcast" (small sets): probe is a broadcast-backed scalar
-  *    function — zero shuffles, stays inside the candidate scan;
-  *    insert groupBys new fps by shard and merges into the broadcast
-  *    existing filter. Requires one driver collect of all shard bytes
-  *    per batch — fine at MBs, fatal at 10^10 urls (~tens of GB).
+  *    function — zero shuffles, stays inside the candidate scan — or
+  *    its driver twin `probeLocal`; insert runs on the DRIVER
+  *    (`insertLocal`): the touched shards of the snapshot the probe
+  *    already holds take the new fps, commit as one small file, and
+  *    become the memoized next version, so no job ever re-reads what
+  *    the driver just built. Requires the driver to hold all shard
+  *    bytes — fine at MBs, fatal at 10^10 urls (~tens of GB).
   *
   *  - "join" (design scale): candidates are CO-PARTITIONED with the
   *    shard rows via a typed cogroup on `shard` — filter bytes move
@@ -43,8 +46,6 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     * driver collect + rebroadcast stops being a rounding error. */
   val JoinThresholdBytes: Long = 64L << 20
 
-  private def shardOf = pmod(col("fp"), lit(nShards)).cast("int")
-
   /** Manifest-level size estimate — zero Spark jobs. */
   private def tableBytes: Long =
     table.currentManifest.map(_.files.map(_.bytes).sum).getOrElse(0L)
@@ -63,15 +64,19 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     * an unchanged version (every batch whose discovery wave was fully
     * deduped, plus the claim-heavy tail of a drain) reuse both the
     * collected bytes and the executor-side broadcast instead of paying
-    * a read+collect+broadcast per batch. Single-writer (the engine
-    * driver), so a plain volatile pair is enough. */
+    * a read+collect+broadcast per batch. A driver insert (`insertLocal`)
+    * and a compaction move it to the version they commit, so on the
+    * broadcast path the table is read once per engine, not once per
+    * insert. Single-writer (the engine driver), so a plain volatile
+    * triple is enough. */
   @volatile private var snapCache:
     (Long, Map[Int, Array[Byte]],
      org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]]) = null
 
-  /** Current shard bytes (one driver collect per table VERSION) —
-    * broadcast-path callers inside a batch load once and hand the same
-    * snapshot to probe() and insert(). */
+  /** Current shard bytes (one driver collect per table VERSION that
+    * this instance did not commit itself) — broadcast-path callers
+    * inside a batch load once and hand the same snapshot to probe() and
+    * insertLocal(). */
   def snapshotBytes(): Map[Int, Array[Byte]] =
     if (!hasState) Map.empty
     else {
@@ -169,46 +174,94 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   /** Merge new fingerprints into the shard filters (upsert commit).
     * Only touched shards are rewritten on either path; insertion order
     * is pinned (sorted fps) so both paths produce byte-identical
-    * filters. */
-  def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty,
-             preloaded: Option[Map[Int, Array[Byte]]] = None): Unit = {
-    val buckets = shardBuckets
-    val merged: DataFrame =
-      if (useJoinPath && preloaded.isEmpty) {
-        val nS = nShards
-        val fps = newFps.select(col("fp")).as[Long]
-          .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
-        val shards = shardRows.groupByKey(_._1)
-        fps.cogroup(shards) { (shard, fpIt, existing) =>
-          val arr = fpIt.toArray
-          if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
-          else {
-            val f = existing.buffered.headOption
-              .map(t => CuckooFilter.deserialize(t._2))
-              .getOrElse(CuckooFilter.withBuckets(buckets))
-            java.util.Arrays.sort(arr)
-            arr.foreach(f.insert)
-            Iterator((shard, f.serialize(), f.count))
-          }
-        }.toDF("shard", "bytes", "count")
-      } else {
-        val bc = broadcastFor(preloaded.getOrElse(snapshotBytes()))
-        newFps.select(col("fp")).withColumn("shard", shardOf)
-          .as[(Long, Int)]
-          .groupByKey(_._2)
-          .mapGroups { (shard, rows) =>
-            val f = bc.value.get(shard) match {
-              case Some(existing) => CuckooFilter.deserialize(existing)
-              case None => CuckooFilter.withBuckets(buckets)
-            }
-            rows.map(_._1).toArray.sorted.foreach(f.insert)
-            (shard, f.serialize(), f.count)
-          }
-          .toDF("shard", "bytes", "count")
+    * filters. The join path cogroups the fps with the shard rows; the
+    * broadcast path collects them and inserts on the driver. */
+  def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty): Unit =
+    if (useJoinPath) {
+      val buckets = shardBuckets
+      val nS = nShards
+      val fps = newFps.select(col("fp")).as[Long]
+        .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
+      val shards = shardRows.groupByKey(_._1)
+      commit(fps.cogroup(shards) { (shard, fpIt, existing) =>
+        val arr = fpIt.toArray
+        if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
+        else {
+          val f = existing.buffered.headOption
+            .map(t => CuckooFilter.deserialize(t._2))
+            .getOrElse(CuckooFilter.withBuckets(buckets))
+          java.util.Arrays.sort(arr)
+          arr.foreach(f.insert)
+          Iterator((shard, f.serialize(), f.count))
+        }
+      }.toDF("shard", "bytes", "count"), metrics)
+    } else {
+      // the fps are collected: nothing this call runs later needs the
+      // superseded broadcast
+      insertLocal(newFps.select(col("fp")).as[Long].collect(), snapshotBytes(), metrics)
+      releaseRetired()
+    }
+
+  /** The broadcast path's insert, on the driver. `snapshot` is the
+    * `snapshotBytes()` the probe used, i.e. the current version. Each
+    * touched shard deserializes from it (or starts empty), takes its
+    * fps in sorted order and serializes — the join path's steps, so the
+    * bytes are identical. Only the touched rows commit, as one file, and
+    * the memo moves to the committed version holding snapshot ++ touched:
+    * the next `snapshotBytes()`/`probeLocal` runs no job. The superseded
+    * broadcast is only retired here — a cached plan of the caller's
+    * probe may still serialize it — and dies in `releaseRetired()`. */
+  def insertLocal(fps: Array[Long], snapshot: Map[Int, Array[Byte]],
+                  metrics: Map[String, Double] = Map.empty): Unit = {
+    if (fps.isEmpty) return
+    val n = nShards.toLong
+    val touched = fps.groupBy(fp => java.lang.Math.floorMod(fp, n).toInt).toSeq.sortBy(_._1)
+      .map { case (shard, shardFps) =>
+        val f = snapshot.get(shard).map(CuckooFilter.deserialize)
+          .getOrElse(CuckooFilter.withBuckets(shardBuckets))
+        java.util.Arrays.sort(shardFps)
+        shardFps.foreach(f.insert)
+        (shard, f.serialize(), f.count)
       }
-    if (table.currentId.isEmpty) table.commitAppend(merged, metrics)
-    else table.commitUpsert(merged, metrics)
+    val c = snapCache
+    // the memo may only advance from the version the commit builds on
+    val current = if (hasState) c != null && (c._2 eq snapshot) && table.currentId.contains(c._1)
+                  else snapshot.isEmpty
+    val id = commit(touched.toDF("shard", "bytes", "count").coalesce(1), metrics)
+    if (c != null && c._3 != null) retired ::= c._3
+    snapCache =
+      if (current) (id, snapshot ++ touched.map { case (s, b, _) => s -> b }, null)
+      else null
   }
+
+  /** Broadcasts superseded by `insertLocal`, awaiting `releaseRetired`. */
+  @volatile private var retired: List[org.apache.spark.broadcast.Broadcast[_]] = Nil
+
+  /** Destroys the broadcasts retired by earlier inserts. Call once no
+    * plan built from an earlier `probe` will run again (the engine: after
+    * the frontier append that follows the seen commit). */
+  def releaseRetired(): Unit = {
+    val r = retired
+    retired = Nil
+    r.foreach(_.destroy()) // non-blocking
+  }
+
+  /** Seen-table hygiene, as for the other crawl tables: fold the deltas
+    * once more than 6 commits pile up, then keep the newest 8 snapshots.
+    * Compaction rewrites the same rows under a new id, so the memo
+    * follows it instead of being re-read. */
+  def compactIfNeeded(): Unit = {
+    val before = table.currentId
+    table.compactIfNeeded(maxDeltaCommits = 6).foreach { id =>
+      val c = snapCache
+      if (c != null && before.contains(c._1)) snapCache = (id, c._2, c._3)
+      table.expire(keepLast = 8)
+    }
+  }
+
+  private def commit(rows: DataFrame, metrics: Map[String, Double]): Long =
+    if (table.currentId.isEmpty) table.commitAppend(rows, metrics)
+    else table.commitUpsert(rows, metrics)
 }
 
 /** Serializable probe closure: deserializes each touched shard once

@@ -1,9 +1,14 @@
 package graft
 
+import graft.crawl.{CrawlConfig, CrawlEngine}
 import graft.frontier.SeenShards
+import graft.synth.Synth
 import graft.table.SnapshotTable
+import graft.util.Hashing
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The broadcast and co-partitioned (join) seen-set paths must be
   * interchangeable: identical serialized shard filters after inserts
@@ -80,5 +85,117 @@ class SeenShardsPathSpec extends AnyFunSuite {
     assert(!s.useJoinPath) // empty table: broadcast is fine
     val (forced, _) = mk("join", 4, 1 << 8)
     assert(forced.useJoinPath)
+  }
+
+  private def shardMap(tbl: SnapshotTable): Map[Int, Seq[Byte]] = {
+    import spark.implicits._
+    tbl.read().select("shard", "bytes").as[(Int, Array[Byte])].collect()
+      .map { case (s, b) => s -> b.toSeq }.toMap
+  }
+
+  /** Spark jobs started by `body` on this thread: they carry a job group,
+    * counted once a later sentinel job's start event has arrived (the
+    * listener bus delivers events in order). */
+  private def jobsRunBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"measured-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val r = try body finally sc.setJobGroup(sentinel, "sentinel")
+      sc.parallelize(Seq(1)).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(sentinel), "the listener never saw the sentinel job")
+      (r, groups.asScala.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a broadcast-path insert publishes its shards: snapshotBytes runs no job and matches a fresh reader and the join path") {
+    import spark.implicits._
+    val (b, bTbl) = mk("broadcast", 6, 1 << 8)
+    val (j, jTbl) = mk("join", 6, 1 << 8)
+    Seq(fps(31, 400), fps(32, 250), fps(33, 120)).zipWithIndex.foreach { case (wave, i) =>
+      // the engine's call (insertLocal with the probe's snapshot) and
+      // the DataFrame API (collect, then the same driver insert)
+      if (i % 2 == 0) b.insertLocal(wave.toArray, b.snapshotBytes())
+      else b.insert(wave.toDF("fp"))
+      j.insert(wave.toDF("fp"))
+      val (snap, jobs) = jobsRunBy(b.snapshotBytes())
+      assert(jobs === 0, s"wave $i: snapshotBytes after the insert ran $jobs Spark jobs")
+      // positive control for the job count: a new reader must read the table
+      val (reread, rereadJobs) =
+        jobsRunBy(new SeenShards(spark, bTbl, 6, 1 << 8, "broadcast").snapshotBytes())
+      assert(rereadJobs > 0)
+      val memo = snap.map { case (s, bytes) => s -> bytes.toSeq }
+      assert(memo === reread.map { case (s, bytes) => s -> bytes.toSeq }, s"wave $i: memo != table")
+      assert(memo === shardMap(jTbl), s"wave $i: broadcast path != join path")
+    }
+  }
+
+  test("consecutive Spark-gate enqueues destroy each superseded shard broadcast, after the append") {
+    import spark.implicits._
+    val cfg = CrawlConfig(seed = 21L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
+      seenMode = "broadcast")
+    val dir = Files.createTempDirectory("seen_bcast")
+    val eng = new CrawlEngine(spark, dir.resolve("engine").toString, cfg)
+    // overlapping files: each later file repeats part of the one before
+    val files = (0 until 3).map { f =>
+      val lines = (f * 150 until f * 150 + 200).map(i => Synth.seedUrl(i, cfg.nHosts, cfg.seed).url)
+      val p = dir.resolve(s"seeds_$f.txt")
+      Files.write(p, lines.asJava)
+      (p.toString, lines)
+    }
+    eng.initFromTextFile(files.head._1)
+    files.tail.foreach { case (path, _) =>
+      // a probe of the current version shares the broadcast the gate uses
+      val probe = eng.seen.probe(Seq(1L, 2L).toDF("fp"), Some(eng.seen.snapshotBytes()))
+      def verdicts() = probe.select("maybeSeen").as[Boolean].collect()
+      assert(verdicts().length === 2)
+      assert(eng.initFromTextFile(path) > 0)
+      val e = intercept[Exception](verdicts())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("destroyed")),
+        s"superseded broadcast still live: ${e.getMessage}")
+    }
+    val expected = files.flatMap(_._2).map(Hashing.fp).distinct.sorted
+    assert(eng.seenSet.as[Long].collect().sorted.toSeq === expected)
+    val shards = eng.seen.snapshotBytes().map { case (s, b) => s -> graft.filter.CuckooFilter.deserialize(b) }
+    expected.foreach(fp => assert(shards(java.lang.Math.floorMod(fp, 4L).toInt).mightContain(fp)))
+  }
+
+  test("bulk ingests run seen-table hygiene: after 8 ingests <= 6 delta commits, <= 8 snapshots, same seen set") {
+    import spark.implicits._
+    val cfg = CrawlConfig(seed = 23L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
+    val dir = Files.createTempDirectory("seen_hygiene")
+    val eng = new CrawlEngine(spark, dir.resolve("engine").toString, cfg)
+    val lines = (0 until 8).map { f =>
+      val ls = (f * 40 until f * 40 + 60).map(i => Synth.seedUrl(i, cfg.nHosts, cfg.seed).url)
+      val p = dir.resolve(s"seeds_$f.txt")
+      Files.write(p, ls.asJava)
+      eng.initFromTextFile(p.toString)
+      ls
+    }.flatten
+    val m = eng.seenTbl.currentManifest.get
+    val deltaCommits = m.files.filter(_.kind == "delta").map(_.deltaSeq).distinct.size
+    assert(deltaCommits <= 6, s"$deltaCommits delta commits")
+    assert(eng.seenTbl.retainedSnapshotIds.size <= 8)
+    val expected = lines.map(Hashing.fp).distinct.sorted
+    assert(eng.seenSet.as[Long].collect().sorted.toSeq === expected)
+    // the memo followed the compaction and still equals the table
+    val memo = eng.seen.snapshotBytes().map { case (s, b) => s -> b.toSeq }
+    assert(memo === shardMap(eng.seenTbl))
+    val shards = memo.map { case (s, b) => s -> graft.filter.CuckooFilter.deserialize(b.toArray) }
+    expected.foreach(fp => assert(shards(java.lang.Math.floorMod(fp, 4L).toInt).mightContain(fp)))
   }
 }
