@@ -70,9 +70,11 @@ final case class CrawlConfig(
   * one-file write: no shuffle, and no job re-reads the shards after
   * it. The bulk paths (init, seed files and streams, executor-side
   * keyword expansion) run the Spark gate — one action that also
-  * collects the survivors' (fp, seq) for that driver insert — then the
-  * append and the seen table's hygiene check (a manifest read;
-  * compaction once more than 6 seen deltas pile up).
+  * collects the survivors' (fp, seq) for that driver insert, up to
+  * `SeenShards.LocalInsertMaxFps` of them (a bigger batch aggregates
+  * and inserts co-partitioned instead) — then the append and the seen
+  * table's hygiene check (a manifest read; compaction once more than 6
+  * seen deltas pile up).
   * The batch's WALL time is the critical path,
   * not the sum: commits ride a single-thread commit lane that overlaps
   * compute wherever the crash-safety order allows. Per batch:
@@ -358,7 +360,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // and snapshot accumulation over long keyword drains
     if (keywords.compactIfNeeded(maxDeltaCommits = 6).isDefined)
       keywords.expire(keepLast = 8)
-    seen.compactIfNeeded()
+    seenHygiene()
     (claimed.length.toLong, n)
   }
 
@@ -372,7 +374,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * self-hosted or bulk-export sources. Seq assignment reproduces the
     * driver path's zipWithIndex exactly: global rank over (query seq,
     * page, in-page idx) — equivalence-tested to identical enqueue sets.
-    * No `.collect()` anywhere. */
+    * No candidate reaches the driver; on the broadcast seen path the
+    * gate collects the survivors' (fp, seq), bounded as in `enqueue`. */
   def searchBatchParallel(k: Int): (Long, Long) = {
     quiesce()
     if (keywords.currentId.isEmpty || keywords.isEmpty) return (0L, 0L)
@@ -399,7 +402,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       .withColumn("priority", lit(Frontier.NormalPriority))
       .select("url", "priority", "seq").as[SeedUrl]
     // the Spark gate: this is the unbounded-backlog path (a
-    // million-query expansion), whose candidates never reach the driver
+    // million-query expansion), whose candidates stay distributed
     val n = enqueueBulk(Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed),
       batchNo = 0L)
     keywords.commitUpsert(claimed
@@ -446,13 +449,15 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * survivors' (fp, seq), 16 B each: n, the max seq and the driver's
     * seen insert (`SeenShards.insertLocal`) all come from that array, so
     * the seen commit adds a one-file write and no read. The collect is
-    * bounded by the same contract `snapshotBytes` already relies on: the
-    * broadcast path runs only while the shard table is ≤
-    * `JoinThresholdBytes` (64 MB), and every survivor ends up in a shard
-    * slot or an exact overflow entry that the driver holds on the next
-    * version anyway. The join path keeps the fps distributed: one
+    * cut at `maxLocal` + 1 rows (default `SeenShards.LocalInsertMaxFps`,
+    * whose pairs fit the `JoinThresholdBytes` the driver already budgets
+    * for the shard snapshot), because the path choice rests on the shard
+    * table's size BEFORE the batch: a first ingest of 10^9 seeds into an
+    * empty table is on the broadcast path too. A batch past the cut, and
+    * every batch on the join path, keeps the fps distributed: one
     * aggregate reads n and the max seq, and the insert co-partitions. */
-  private[graft] def enqueue(entries: DataFrame, batchNo: Long): Long = {
+  private[graft] def enqueue(entries: DataFrame, batchNo: Long,
+                             maxLocal: Int = seen.LocalInsertMaxFps): Long = {
     // broadcast path: ONE collect per table version shared by probe and
     // insert (memoized, and advanced by the insert itself); join path
     // (design scale): no collect at all — probe/insert co-partition with
@@ -466,13 +471,18 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // revise them), and the base-file set only changes on an append or
     // a compaction
     val fresh = Frontier.dedupGate(probed, seenSet).cache()
-    // ONE action materializes the gate AND reads what the commit needs;
+    // ONE action materializes the gate AND reads what the commit needs
+    // (the cut collect is one job while the gate output has one
+    // partition; Spark's take scans more partitions per job, 1, 4, 16…);
     // max seq is parity-relevant: the oracle assigns the next batch's
     // seq base from surviving rows only
-    val n = shardSnapshot match {
-      case Some(snap) =>
-        val survivors = phase("enqueue-gate")(
-          fresh.select("fp", "seq").as[(Long, Long)].collect())
+    val local = shardSnapshot.flatMap { snap =>
+      val survivors = phase("enqueue-gate")(
+        fresh.select("fp", "seq").as[(Long, Long)].limit(maxLocal + 1).collect())
+      if (survivors.length > maxLocal) None else Some((survivors, snap))
+    }
+    val n = local match {
+      case Some((survivors, snap)) =>
         if (survivors.nonEmpty)
           commitFresh(fresh, survivors.length.toLong, survivors.iterator.map(_._2).max,
             batchNo, Some((survivors.map(_._1), snap)))
@@ -496,9 +506,15 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * engine would otherwise keep one delta of shard rows per call. */
   private def enqueueBulk(entries: DataFrame, batchNo: Long): Long = {
     val n = enqueue(entries, batchNo)
-    phase("hygiene")(seen.compactIfNeeded())
+    phase("hygiene")(seenHygiene())
     n
   }
+
+  /** Seen-table hygiene, as for the other crawl tables: fold the deltas
+    * once more than 6 commits pile up, then keep the newest 8 snapshots. */
+  private def seenHygiene(): Unit =
+    if (seenTbl.compactIfNeeded(maxDeltaCommits = 6).isDefined)
+      seenTbl.expire(keepLast = 8)
 
   /** Driver-side enqueue of a batch-bounded candidate list already on
     * the driver (a discovery wave of at most DriverRankMaxRows claimed
@@ -542,8 +558,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * strictly BEFORE the frontier append — the filter must be a
     * superset of frontier keys, or a crash between the two turns the
     * tier-1 fast path into duplicate appends. `local` = (survivor fps,
-    * the probe's shard snapshot) on the broadcast seen path: the insert
-    * runs on the driver. */
+    * the probe's shard snapshot) when the insert runs on the driver (the
+    * broadcast seen path, within the driver bound); otherwise it
+    * co-partitions. */
   private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
                           local: Option[(Array[Long], Map[Int, Array[Byte]])]): Unit = {
     val newMax = math.max(currentMaxSeq, freshMaxSeq)
@@ -948,7 +965,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           phase("hygiene") {
             if (frontier.compactIfNeeded(maxDeltaCommits = cfg.compactEvery).isDefined)
               frontier.expire(keepLast = 8)
-            seen.compactIfNeeded()
+            seenHygiene()
             if (payload.compactIfNeeded(maxDeltaCommits = 12).isDefined)
               payload.expire(keepLast = 8)
           }

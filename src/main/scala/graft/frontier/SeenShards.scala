@@ -20,14 +20,17 @@ import org.apache.spark.sql.functions._
   *    already holds take the new fps, commit as one small file, and
   *    become the memoized next version, so no job ever re-reads what
   *    the driver just built. Requires the driver to hold all shard
-  *    bytes — fine at MBs, fatal at 10^10 urls (~tens of GB).
+  *    bytes — fine at MBs, fatal at 10^10 urls (~tens of GB) — and the
+  *    batch's fps, so a batch of more than `LocalInsertMaxFps` takes
+  *    the join path's insert instead.
   *
   *  - "join" (design scale): candidates are CO-PARTITIONED with the
   *    shard rows via a typed cogroup on `shard` — filter bytes move
   *    once per shard to where the candidates already are, nothing is
   *    collected to the driver, nothing is broadcast. Probe costs one
-  *    fp shuffle + a rejoin; insert is the same cogroup emitting only
-  *    touched shards. This is the path a 1000-executor cluster runs.
+  *    fp shuffle + a rejoin; insert (`insert`) is the same cogroup
+  *    emitting only touched shards. This is the path a 1000-executor
+  *    cluster runs.
   *
   *  - "auto": broadcast while the manifest says the shard-table bytes
   *    are under `JoinThresholdBytes`, join beyond it. The table layout
@@ -45,6 +48,12 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   /** Above this serialized-filter volume the broadcast path's per-batch
     * driver collect + rebroadcast stops being a rounding error. */
   val JoinThresholdBytes: Long = 64L << 20
+
+  /** Most fps one driver insert takes: their (fp, seq) pairs, 16 B each,
+    * stay within the `JoinThresholdBytes` the driver already budgets for
+    * the shard snapshot. The gate collects at most one more than this;
+    * a bigger batch commits through the co-partitioned `insert`. */
+  val LocalInsertMaxFps: Int = (JoinThresholdBytes / 16).toInt
 
   /** Manifest-level size estimate — zero Spark jobs. */
   private def tableBytes: Long =
@@ -65,9 +74,10 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     * deduped, plus the claim-heavy tail of a drain) reuse both the
     * collected bytes and the executor-side broadcast instead of paying
     * a read+collect+broadcast per batch. A driver insert (`insertLocal`)
-    * and a compaction move it to the version they commit, so on the
-    * broadcast path the table is read once per engine, not once per
-    * insert. Single-writer (the engine driver), so a plain volatile
+    * moves it to the version it commits, so on the broadcast path the
+    * table is re-read only after a commit this instance did not build
+    * on the driver (a compaction, a co-partitioned insert), not once
+    * per insert. Single-writer (the engine driver), so a plain volatile
     * triple is enough. */
   @volatile private var snapCache:
     (Long, Map[Int, Array[Byte]],
@@ -171,38 +181,34 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     candidates.join(verdicts, Seq("fp"))
   }
 
-  /** Merge new fingerprints into the shard filters (upsert commit).
-    * Only touched shards are rewritten on either path; insertion order
-    * is pinned (sorted fps) so both paths produce byte-identical
-    * filters. The join path cogroups the fps with the shard rows; the
-    * broadcast path collects them and inserts on the driver. */
-  def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty): Unit =
-    if (useJoinPath) {
-      val buckets = shardBuckets
-      val nS = nShards
-      val fps = newFps.select(col("fp")).as[Long]
-        .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
-      val shards = shardRows.groupByKey(_._1)
-      commit(fps.cogroup(shards) { (shard, fpIt, existing) =>
-        val arr = fpIt.toArray
-        if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
-        else {
-          val f = existing.buffered.headOption
-            .map(t => CuckooFilter.deserialize(t._2))
-            .getOrElse(CuckooFilter.withBuckets(buckets))
-          java.util.Arrays.sort(arr)
-          arr.foreach(f.insert)
-          Iterator((shard, f.serialize(), f.count))
-        }
-      }.toDF("shard", "bytes", "count"), metrics)
-    } else {
-      // the fps are collected: nothing this call runs later needs the
-      // superseded broadcast
-      insertLocal(newFps.select(col("fp")).as[Long].collect(), snapshotBytes(), metrics)
-      releaseRetired()
-    }
+  /** Merge new fingerprints into the shard filters (upsert commit),
+    * co-partitioned: the fps cogroup with the shard rows on `shard`, and
+    * only touched shards are rewritten, their fps inserted in sorted
+    * order — `insertLocal`'s steps, so both inserts give byte-identical
+    * filters. Nothing reaches the driver, so it serves the join path and
+    * any batch too big for the driver insert, on any table state. */
+  def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty): Unit = {
+    val buckets = shardBuckets
+    val nS = nShards
+    val fps = newFps.select(col("fp")).as[Long]
+      .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
+    val shards = shardRows.groupByKey(_._1)
+    commit(fps.cogroup(shards) { (shard, fpIt, existing) =>
+      val arr = fpIt.toArray
+      if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
+      else {
+        val f = existing.buffered.headOption
+          .map(t => CuckooFilter.deserialize(t._2))
+          .getOrElse(CuckooFilter.withBuckets(buckets))
+        java.util.Arrays.sort(arr)
+        arr.foreach(f.insert)
+        Iterator((shard, f.serialize(), f.count))
+      }
+    }.toDF("shard", "bytes", "count"), metrics)
+  }
 
-  /** The broadcast path's insert, on the driver. `snapshot` is the
+  /** The broadcast path's insert, on the driver, for batches of at most
+    * `LocalInsertMaxFps` fps. `snapshot` is the
     * `snapshotBytes()` the probe used, i.e. the current version. Each
     * touched shard deserializes from it (or starts empty), takes its
     * fps in sorted order and serializes — the join path's steps, so the
@@ -244,19 +250,6 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     val r = retired
     retired = Nil
     r.foreach(_.destroy()) // non-blocking
-  }
-
-  /** Seen-table hygiene, as for the other crawl tables: fold the deltas
-    * once more than 6 commits pile up, then keep the newest 8 snapshots.
-    * Compaction rewrites the same rows under a new id, so the memo
-    * follows it instead of being re-read. */
-  def compactIfNeeded(): Unit = {
-    val before = table.currentId
-    table.compactIfNeeded(maxDeltaCommits = 6).foreach { id =>
-      val c = snapCache
-      if (c != null && before.contains(c._1)) snapCache = (id, c._2, c._3)
-      table.expire(keepLast = 8)
-    }
   }
 
   private def commit(rows: DataFrame, metrics: Map[String, Double]): Long =

@@ -121,25 +121,28 @@ class SeenShardsPathSpec extends AnyFunSuite {
     }
   }
 
-  test("a broadcast-path insert publishes its shards: snapshotBytes runs no job and matches a fresh reader and the join path") {
+  test("a broadcast-path insert publishes its shards: snapshotBytes runs no job and matches a fresh reader and the join path (3 trials)") {
     import spark.implicits._
-    val (b, bTbl) = mk("broadcast", 6, 1 << 8)
-    val (j, jTbl) = mk("join", 6, 1 << 8)
-    Seq(fps(31, 400), fps(32, 250), fps(33, 120)).zipWithIndex.foreach { case (wave, i) =>
-      // the engine's call (insertLocal with the probe's snapshot) and
-      // the DataFrame API (collect, then the same driver insert)
-      if (i % 2 == 0) b.insertLocal(wave.toArray, b.snapshotBytes())
-      else b.insert(wave.toDF("fp"))
-      j.insert(wave.toDF("fp"))
-      val (snap, jobs) = jobsRunBy(b.snapshotBytes())
-      assert(jobs === 0, s"wave $i: snapshotBytes after the insert ran $jobs Spark jobs")
-      // positive control for the job count: a new reader must read the table
-      val (reread, rereadJobs) =
-        jobsRunBy(new SeenShards(spark, bTbl, 6, 1 << 8, "broadcast").snapshotBytes())
-      assert(rereadJobs > 0)
-      val memo = snap.map { case (s, bytes) => s -> bytes.toSeq }
-      assert(memo === reread.map { case (s, bytes) => s -> bytes.toSeq }, s"wave $i: memo != table")
-      assert(memo === shardMap(jTbl), s"wave $i: broadcast path != join path")
+    (0 until 3).foreach { trial =>
+      val nShards = 4 + trial
+      val (b, bTbl) = mk("broadcast", nShards, 1 << 8)
+      val (j, jTbl) = mk("join", nShards, 1 << 8)
+      Seq(fps(trial * 10 + 31, 400), fps(trial * 10 + 32, 250), fps(trial * 10 + 33, 120))
+        .zipWithIndex.foreach { case (wave, i) =>
+          // the engine's call: the driver insert over the probe's snapshot
+          b.insertLocal(wave.toArray, b.snapshotBytes())
+          j.insert(wave.toDF("fp"))
+          val (snap, jobs) = jobsRunBy(b.snapshotBytes())
+          assert(jobs === 0, s"trial $trial wave $i: snapshotBytes after the insert ran $jobs Spark jobs")
+          // positive control for the job count: a new reader must read the table
+          val (reread, rereadJobs) =
+            jobsRunBy(new SeenShards(spark, bTbl, nShards, 1 << 8, "broadcast").snapshotBytes())
+          assert(rereadJobs > 0)
+          val memo = snap.map { case (s, bytes) => s -> bytes.toSeq }
+          assert(memo === reread.map { case (s, bytes) => s -> bytes.toSeq },
+            s"trial $trial wave $i: memo != table")
+          assert(memo === shardMap(jTbl), s"trial $trial wave $i: driver insert != join path")
+        }
     }
   }
 
@@ -192,10 +195,43 @@ class SeenShardsPathSpec extends AnyFunSuite {
     assert(eng.seenTbl.retainedSnapshotIds.size <= 8)
     val expected = lines.map(Hashing.fp).distinct.sorted
     assert(eng.seenSet.as[Long].collect().sorted.toSeq === expected)
-    // the memo followed the compaction and still equals the table
+    // the memo still equals the table after the compaction
     val memo = eng.seen.snapshotBytes().map { case (s, b) => s -> b.toSeq }
     assert(memo === shardMap(eng.seenTbl))
     val shards = memo.map { case (s, b) => s -> graft.filter.CuckooFilter.deserialize(b.toArray) }
     expected.foreach(fp => assert(shards(java.lang.Math.floorMod(fp, 4L).toInt).mightContain(fp)))
+  }
+
+  test("a Spark-gate batch past the driver bound commits co-partitioned, with the join path's result") {
+    import spark.implicits._
+    def engine(mode: String) = {
+      val cfg = CrawlConfig(seed = 29L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
+        seenMode = mode)
+      (new CrawlEngine(spark, Files.createTempDirectory(s"seen_bound_$mode").toString, cfg), cfg)
+    }
+    val (b, cfg) = engine("broadcast")
+    val (j, _) = engine("join")
+    val bound = 100
+    // overlapping waves: the first two pass the bound (the first into an
+    // empty table, as a first bulk ingest does), the third fits it
+    val waves = Seq((0, 300), (200, 500), (450, 520))
+    waves.zipWithIndex.foreach { case ((lo, hi), i) =>
+      val seeds = spark.createDataset((lo until hi).map(k => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)))
+      def entries = graft.frontier.Frontier.toEntries(spark, seeds, batchNo = i.toLong, cfg.seed)
+      val nb = b.enqueue(entries, i.toLong, maxLocal = bound)
+      val nj = j.enqueue(entries, i.toLong)
+      assert(nb === nj, s"wave $i: enqueued counts differ")
+      assert(nb === (if (i == 0) hi - lo else hi - waves(i - 1)._2), s"wave $i")
+      assert((nb > bound) === (i < 2))
+      // a co-partitioned commit leaves the memo behind (the next snapshot
+      // reads the table); a driver insert publishes its version
+      val (snap, jobs) = jobsRunBy(b.seen.snapshotBytes())
+      if (i < 2) assert(jobs > 0, s"wave $i: past the bound, yet the memo was current")
+      else assert(jobs === 0, s"wave $i: within the bound, yet snapshotBytes ran $jobs jobs")
+      assert(snap.map { case (s, bytes) => s -> bytes.toSeq } === shardMap(j.seenTbl),
+        s"wave $i: shard bytes differ from the join path")
+      def rows(e: CrawlEngine) = e.frontierDf.select("fp", "seq").as[(Long, Long)].collect().sorted.toSeq
+      assert(rows(b) === rows(j), s"wave $i: frontiers differ")
+    }
   }
 }
