@@ -31,9 +31,10 @@ object Bench {
     // spark.local.dir (shuffle files, spills, checkpoint disk-backing)
     // follows the work root: on a cluster these are node-local fast
     // disks; this box's default /tmp is the cross-tenant-contended
-    // ext4 whose IO bursts were the round-3/4 variance source (the
-    // DiagScale c-variant outlier — 23.5 s vs 6.9 s for the identical
-    // job — was shuffle/spill on the shared disk)
+    // ext4 whose IO bursts were the round-3/4 variance source (a
+    // process-phase cache study measured 23.5 s vs 6.9 s for the
+    // identical job, the outlier's time spent in shuffle/spill on the
+    // shared disk)
     val localDir = s"${graft.crawl.Flagship.workRoot}/spark_local"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(localDir))
     val s = SparkSession.builder()

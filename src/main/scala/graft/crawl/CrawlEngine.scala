@@ -51,8 +51,9 @@ final case class CrawlConfig(
   * or map-side (SURVEY.md §4.2) — the claim's merge-on-read resolution
   * runs as a broadcast anti-join against the bounded since-compaction
   * delta keys (SnapshotTable.readStates fast path), and the dedup
-  * gate verifies only cuckoo positives, map-side against the resident
-  * key cache. All state lives in SnapshotTables — resumable from any
+  * gate checks the resident key cache: the driver gate verifies only
+  * cuckoo positives, map-side, and the Spark gate is one exact
+  * anti-join. All state lives in SnapshotTables — resumable from any
   * committed snapshot (C6).
   *
   * Action budget per batch (driver-loop latency is the sandbox
@@ -458,19 +459,17 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * aggregate reads n and the max seq, and the insert co-partitions. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long,
                              maxLocal: Int = seen.LocalInsertMaxFps): Long = {
-    // broadcast path: ONE collect per table version shared by probe and
-    // insert (memoized, and advanced by the insert itself); join path
-    // (design scale): no collect at all — probe/insert co-partition with
-    // the shard table instead
+    // broadcast path: the driver insert's shard snapshot, ONE collect
+    // per table version (memoized, and advanced by the insert itself);
+    // join path (design scale): no collect at all — the insert
+    // co-partitions with the shard table instead
     val shardSnapshot = phase("enqueue-probe")(
       if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
-    val firstOcc = Frontier.firstOccurrence(entries)
-    val probed = seen.probe(firstOcc, shardSnapshot)
-    // verified against the cache-resident key set (seenSet): all keys
-    // live in base files (appends introduce every key; deltas only
+    // exact anti-join against the cache-resident key set (seenSet): all
+    // keys live in base files (appends introduce every key; deltas only
     // revise them), and the base-file set only changes on an append or
     // a compaction
-    val fresh = Frontier.dedupGate(probed, seenSet).cache()
+    val fresh = Frontier.dedupGate(Frontier.firstOccurrence(entries), seenSet).cache()
     // ONE action materializes the gate AND reads what the commit needs
     // (the cut collect is one job while the gate output has one
     // partition; Spark's take scans more partitions per job, 1, 4, 16…);
@@ -557,10 +556,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
   /** Commit `n` gate survivors (max seq `freshMaxSeq`): seen-insert
     * strictly BEFORE the frontier append — the filter must be a
     * superset of frontier keys, or a crash between the two turns the
-    * tier-1 fast path into duplicate appends. `local` = (survivor fps,
-    * the probe's shard snapshot) when the insert runs on the driver (the
-    * broadcast seen path, within the driver bound); otherwise it
-    * co-partitions. */
+    * driver gate's tier-1 fast path into duplicate appends. `local` =
+    * (survivor fps, the gate's shard snapshot) when the insert runs on
+    * the driver (the broadcast seen path, within the driver bound);
+    * otherwise it co-partitions. */
   private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
                           local: Option[(Array[Long], Map[Int, Array[Byte]])]): Unit = {
     val newMax = math.max(currentMaxSeq, freshMaxSeq)
@@ -576,10 +575,6 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     phase("append-commit")(frontier.commitAppend(fresh.coalesce(1), Map(
       "batch" -> batchNo.toDouble, "enqueued" -> n.toDouble),
       props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
-    // only now may the superseded shard broadcast die: the append just
-    // serialized `fresh`'s plan, which still captures the probe's
-    // broadcast (destroying it inside the insert fails this append)
-    seen.releaseRetired()
   }
 
   private val phaseSums =

@@ -9,13 +9,15 @@ import graft.util.Hashing
   * Layout: `numBuckets` (power of two) buckets × 4 slots × 16-bit
   * fingerprints (0 = empty; fingerprints forced non-zero).
   * Guarantees (CuckooFilterSpec, property-based):
-  *  - NO false negatives for any inserted key, ever: inserts that lose
-  *    the eviction fight after MaxKicks land in an exact overflow set;
-  *    fingerprints displaced during shard merge land in an exact
-  *    (bucket, fp) overflow set — both checked by mightContain;
+  *  - NO false negatives for any inserted key, ever: the fingerprint
+  *    that loses the eviction fight after MaxKicks lands in an exact
+  *    (bucket, fp) overflow set, checked by mightContain;
   *  - false positives ~ 8/2^16 per probe — tier-1 only: the engine
   *    verifies every "maybe" against exact state (two-tier probe,
   *    SURVEY.md §4.2), as byte-match seen-set parity requires.
+  *
+  * `overflowKeys` is never written (it stays empty); it is kept so the
+  * serialized layout, and every shard already on disk, is unchanged.
   *
   * Determinism: eviction path is an LCG seeded from the key, so a given
   * insert sequence always yields identical bytes; shard builds insert
@@ -24,7 +26,7 @@ import graft.util.Hashing
 final class CuckooFilter private (
     val numBuckets: Int,
     private val table: Array[Short],
-    private var overflowKeys: Set[Long],
+    private val overflowKeys: Set[Long],
     private var overflowFp: Set[(Int, Short)],
     private var _count: Long) extends Serializable {
 
@@ -98,29 +100,6 @@ final class CuckooFilter private (
       overflowFp.contains((i1, f)) || overflowFp.contains((i2, f))
   }
 
-  /** Merge another shard's content (membership union; order-insensitive
-    * answers — commutativity property-tested). */
-  def mergeFrom(other: CuckooFilter): Unit = {
-    require(other.numBuckets == numBuckets, "shard size mismatch")
-    var i = 0
-    while (i < other.table.length) {
-      val f = other.table(i)
-      if (f != 0) {
-        val bucket = i / SlotsPerBucket
-        val alt = altBucket(bucket, f)
-        if (!bucketHas(bucket, f) && !bucketHas(alt, f) &&
-            !overflowFp.contains((bucket, f))) {
-          if (!tryPut(bucket, f) && !tryPut(alt, f))
-            overflowFp += ((bucket, f))
-        }
-      }
-      i += 1
-    }
-    overflowKeys ++= other.overflowKeys
-    overflowFp ++= other.overflowFp
-    _count += other._count
-  }
-
   def serialize(): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.ObjectOutputStream(bos)
@@ -137,14 +116,6 @@ final class CuckooFilter private (
 object CuckooFilter {
   val SlotsPerBucket = 4
   val MaxKicks = 500
-
-  def apply(expectedItems: Int): CuckooFilter = {
-    // ~0.84 max load for 4-slot buckets; round buckets up to a power of 2
-    val needed = math.max(16, (expectedItems / (SlotsPerBucket * 0.84)).toInt + 1)
-    val buckets = Integer.highestOneBit(math.max(1, needed - 1)) * 2
-    new CuckooFilter(buckets, new Array[Short](buckets * SlotsPerBucket),
-      Set.empty, Set.empty, 0L)
-  }
 
   /** Filter with an exact bucket count (shard filters must all share
     * one size so delta merges stay bucket-aligned). */
@@ -163,13 +134,6 @@ object CuckooFilter {
     val count = in.readLong()
     in.close()
     new CuckooFilter(nb, table, overflowKeys, overflowFp, count)
-  }
-
-  /** Deterministic shard build: sorted insertion ⇒ byte-stable output. */
-  def build(fps: Iterator[Long], expected: Int): CuckooFilter = {
-    val f = CuckooFilter(expected)
-    fps.toArray.sorted.foreach(f.insert)
-    f
   }
 
   /** Deterministic build at a fixed bucket count (shard-aligned). */

