@@ -206,7 +206,6 @@ object Bench {
     // scaling pair (the north-rule metric measured on the drain itself,
     // not just the map stage).
     val drainBatch = sys.env.getOrElse("SPARK_GRAFT_DRAIN_BATCH", "8192").toInt
-    val seenMode = sys.env.getOrElse("SPARK_GRAFT_SEEN_MODE", "auto")
     val drainReps = sys.env.getOrElse("SPARK_GRAFT_DRAIN_REPS", "3").toInt
     final case class DrainRun(batches: Long, processed: Long, wall: Double,
                               initSec: Double, phases: Map[String, Double])
@@ -232,14 +231,13 @@ object Bench {
         // ratio into a JVM-warmup measurement.
         val warmDir = s"${drainDir}_warm"
         val wEng = new graft.crawl.CrawlEngine(s, warmDir,
-          graft.crawl.CrawlConfig(batchSize = 128, seenMode = seenMode,
-            claimMode = claimMode))
+          graft.crawl.CrawlConfig(batchSize = 128, claimMode = claimMode))
         wEng.init(256)
         wEng.drain()
         rmrf(warmDir)
         val eng = new graft.crawl.CrawlEngine(s, drainDir,
-          graft.crawl.CrawlConfig(batchSize = batch, seenMode = seenMode,
-            claimMode = claimMode, batchMs = batchMs))
+          graft.crawl.CrawlConfig(batchSize = batch, claimMode = claimMode,
+            batchMs = batchMs))
         // init = the one-time bulk seed-list commit (a different job
         // shape: one append of `seeds` rows); timed and reported
         // separately from the drain loop it feeds
@@ -456,7 +454,7 @@ object Bench {
     }
     val json =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","engine_build_sec":$engineBuildSec%.3f,"suite_cold_sec":$suiteColdSec%.3f,"cc_rounds":${graft.queries.Dedup.lastCcRounds.get()},""" +
-      f""""frontier_drain":{"seeds":$drainSeeds,"urls_processed":${headline.processed},"batches":${headline.batches},"wall_sec":${headline.wall}%.3f,"init_sec":${headline.initSec}%.3f,"urls_per_sec":${headline.processed / headline.wall}%.1f,"method":"median of $drainReps warm-session drains (steady-state: per-session JIT/codegen paid by a 256-url warm-up drain; one-time seed-list init timed separately as init_sec)","runs_urls_per_sec":$headlineRunsJson,"phase_sec":${phaseJson(headline.phases)},"warm_session":true,"seen_mode":"$seenMode","drain_batch":$drainBatch,"storage":"$storageKind","skip_queries":$skipQueries},""" +
+      f""""frontier_drain":{"seeds":$drainSeeds,"urls_processed":${headline.processed},"batches":${headline.batches},"wall_sec":${headline.wall}%.3f,"init_sec":${headline.initSec}%.3f,"urls_per_sec":${headline.processed / headline.wall}%.1f,"method":"median of $drainReps warm-session drains (steady-state: per-session JIT/codegen paid by a 256-url warm-up drain; one-time seed-list init timed separately as init_sec)","runs_urls_per_sec":$headlineRunsJson,"phase_sec":${phaseJson(headline.phases)},"warm_session":true,"drain_batch":$drainBatch,"storage":"$storageKind","skip_queries":$skipQueries},""" +
       diskJson + largeJson + bucketedJson + drainScaleJson + feedsJson +
       f""""scaling":{"job":"fetch+process $scaleN urls","method":"interleaved median of $scaleReps",""" +
       f""""wall_local4":$wall4%.3f,"wall_local16":$wall16%.3f,"efficiency_4_to_16":$eff416%.3f,""" +

@@ -37,7 +37,6 @@ final case class CrawlConfig(
                             // broadcast, no longer a resolution window —
                             // so the O(active set) rewrite runs half as
                             // often as the old window-path cadence (6)
-    seenMode: String = "auto",  // seen-set path: broadcast | join | auto
     claimMode: String = "window", // window | bucketed (host-bucketed files,
                                   // exchange-free claim — the multi-executor
                                   // layout; costs more files/commit, so the
@@ -66,14 +65,16 @@ final case class CrawlConfig(
   * none when there are none — then, only when something survives, the
   * seen commit and the append commit) ≈ 6–8 Spark actions plus
   * hygiene; larger claim waves add the distributed discovery rank and
-  * the Spark gate. On the broadcast seen path the seen commit is a
-  * driver-side insert into the memoized shard snapshot plus one
-  * one-file write: no shuffle, and no job re-reads the shards after
-  * it. The bulk paths (init, seed files and streams, executor-side
-  * keyword expansion) run the Spark gate — one action that also
-  * collects the survivors' (fp, seq) for that driver insert, up to
-  * `SeenShards.LocalInsertMaxFps` of them (a bigger batch aggregates
-  * and inserts co-partitioned instead) — then the append and the seen
+  * the Spark gate. The seen commit is a driver-side insert into the
+  * memoized shard snapshot plus one one-file write: no shuffle, and no
+  * job re-reads the shards after it (the snapshot costs one collect
+  * per table version the engine did not build itself, i.e. after a
+  * compaction or an over-bound insert). The bulk paths (init, seed
+  * files and streams, executor-side keyword expansion) run the Spark
+  * gate — one action that also collects the survivors' (fp, seq) for
+  * that driver insert, up to `SeenShards.LocalInsertMaxFps` of them (a
+  * bigger batch aggregates and inserts co-partitioned instead; a batch
+  * with no survivor reads no shards) — then the append and the seen
   * table's hygiene check (a manifest read; compaction once more than 6
   * seen deltas pile up).
   * The batch's WALL time is the critical path,
@@ -169,8 +170,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * only, `searched` history is frozen). */
   val keywords = new SnapshotTable(spark, s"$workDir/keywords", "query",
     tagCol = Some("state"), frozenTags = Set("searched"))
-  val seen     = new SeenShards(spark, seenTbl, cfg.nShards, cfg.shardBuckets,
-    cfg.seenMode)
+  val seen     = new SeenShards(spark, seenTbl, cfg.nShards, cfg.shardBuckets)
 
   /** Payload table, or a correctly-typed empty frame before the first
     * commit (a drain where every fetch failed commits nothing — views
@@ -375,8 +375,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * self-hosted or bulk-export sources. Seq assignment reproduces the
     * driver path's zipWithIndex exactly: global rank over (query seq,
     * page, in-page idx) — equivalence-tested to identical enqueue sets.
-    * No candidate reaches the driver; on the broadcast seen path the
-    * gate collects the survivors' (fp, seq), bounded as in `enqueue`. */
+    * No candidate reaches the driver; the gate collects the
+    * survivors' (fp, seq), bounded as in `enqueue`. */
   def searchBatchParallel(k: Int): (Long, Long) = {
     quiesce()
     if (keywords.currentId.isEmpty || keywords.isEmpty) return (0L, 0L)
@@ -446,25 +446,18 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * claim waves past DriverRankMaxRows). Batch-bounded candidates
     * already on the driver take `enqueueLocal`.
     *
-    * On the broadcast seen path the gate's one action collects the
-    * survivors' (fp, seq), 16 B each: n, the max seq and the driver's
-    * seen insert (`SeenShards.insertLocal`) all come from that array, so
-    * the seen commit adds a one-file write and no read. The collect is
-    * cut at `maxLocal` + 1 rows (default `SeenShards.LocalInsertMaxFps`,
-    * whose pairs fit the `JoinThresholdBytes` the driver already budgets
-    * for the shard snapshot), because the path choice rests on the shard
-    * table's size BEFORE the batch: a first ingest of 10^9 seeds into an
-    * empty table is on the broadcast path too. A batch past the cut, and
-    * every batch on the join path, keeps the fps distributed: one
-    * aggregate reads n and the max seq, and the insert co-partitions. */
+    * The gate's one action collects the survivors' (fp, seq), 16 B
+    * each: n, the max seq and the driver's seen insert
+    * (`SeenShards.insertLocal`) all come from that array, so the seen
+    * commit adds a one-file write and no read. The collect is cut at
+    * `maxLocal` + 1 rows (default `SeenShards.LocalInsertMaxFps`, 64 MB
+    * of pairs), because nothing bounds the input: a first ingest of
+    * 10^9 seeds would otherwise collect them all. A batch past the cut
+    * keeps the fps distributed: one aggregate reads n and the max seq,
+    * and the insert co-partitions. The shard snapshot is read only
+    * when the driver insert will run, i.e. for 1..`maxLocal` survivors. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long,
-                             maxLocal: Int = seen.LocalInsertMaxFps): Long = {
-    // broadcast path: the driver insert's shard snapshot, ONE collect
-    // per table version (memoized, and advanced by the insert itself);
-    // join path (design scale): no collect at all — the insert
-    // co-partitions with the shard table instead
-    val shardSnapshot = phase("enqueue-probe")(
-      if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
+                             maxLocal: Int = SeenShards.LocalInsertMaxFps): Long = {
     // exact anti-join against the cache-resident key set (seenSet): all
     // keys live in base files (appends introduce every key; deltas only
     // revise them), and the base-file set only changes on an append or
@@ -475,26 +468,26 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // partition; Spark's take scans more partitions per job, 1, 4, 16…);
     // max seq is parity-relevant: the oracle assigns the next batch's
     // seq base from surviving rows only
-    val local = shardSnapshot.flatMap { snap =>
-      val survivors = phase("enqueue-gate")(
-        fresh.select("fp", "seq").as[(Long, Long)].limit(maxLocal + 1).collect())
-      if (survivors.length > maxLocal) None else Some((survivors, snap))
-    }
-    val n = local match {
-      case Some((survivors, snap)) =>
-        if (survivors.nonEmpty)
+    val survivors = phase("enqueue-gate")(
+      fresh.select("fp", "seq").as[(Long, Long)].limit(maxLocal + 1).collect())
+    val n =
+      if (survivors.length <= maxLocal) {
+        if (survivors.nonEmpty) {
+          // read the driver insert's shard snapshot in its own phase
+          // (ONE collect per table version), so insertLocal finds it
+          // memoized
+          phase("enqueue-probe")(seen.snapshotBytes())
           commitFresh(fresh, survivors.length.toLong, survivors.iterator.map(_._2).max,
-            batchNo, Some((survivors.map(_._1), snap)))
+            batchNo, Some(survivors.map(_._1)))
+        }
         survivors.length.toLong
-      case None =>
+      } else {
         val stats = phase("enqueue-gate")(
           fresh.agg(count(lit(1)), max("seq")).head)
         val n = stats.getLong(0)
-        if (n > 0)
-          commitFresh(fresh, n, if (stats.isNullAt(1)) -1L else stats.getLong(1),
-            batchNo, None)
+        commitFresh(fresh, n, stats.getLong(1), batchNo, None)
         n
-    }
+      }
     fresh.unpersist()
     n
   }
@@ -522,18 +515,16 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * reach Spark, in ONE map-side verify job over the resident key
     * cache (Frontier.verifyHits) — the key table is never shuffled or
     * broadcast, and a batch with no positive runs no gate job at all.
-    * The survivors' fps go straight to the driver seen insert. Under
-    * the join seen path the driver holds no shard bytes: every
-    * candidate is verified and the insert co-partitions as usual.
+    * The survivors' fps go straight to the driver seen insert, which
+    * builds on the snapshot the tier-1 verdict already read.
     * Output (fresh rows, seen-shard bytes) is identical to
     * `enqueue(toEntries(...))` — GatePathSpec feeds both the same
     * adversarial list. */
   private[graft] def enqueueLocal(seeds: Seq[SeedUrl], batchNo: Long): Long = {
-    val (shardSnapshot, cands, positives) = phase("enqueue-probe") {
-      val snap = if (seen.useJoinPath) None else Some(seen.snapshotBytes())
+    val (cands, positives) = phase("enqueue-probe") {
+      val maybeSeen = seen.probeLocal(seen.snapshotBytes())
       val cs = Frontier.firstOccurrenceLocal(Frontier.toEntriesLocal(seeds, batchNo, cfg.seed))
-      val maybeSeen = snap.map(seen.probeLocal).getOrElse((_: Long) => true)
-      (snap, cs, cs.iterator.map(_.fp).filter(maybeSeen).toArray)
+      (cs, cs.iterator.map(_.fp).filter(maybeSeen).toArray)
     }
     val fresh = phase("enqueue-gate") {
       if (positives.isEmpty) cands
@@ -548,25 +539,24 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     }
     if (fresh.nonEmpty)
       commitFresh(spark.createDataset(fresh).toDF(), fresh.size.toLong,
-        fresh.iterator.map(_.seq).max, batchNo,
-        shardSnapshot.map(snap => (fresh.iterator.map(_.fp).toArray, snap)))
+        fresh.iterator.map(_.seq).max, batchNo, Some(fresh.iterator.map(_.fp).toArray))
     fresh.size.toLong
   }
 
   /** Commit `n` gate survivors (max seq `freshMaxSeq`): seen-insert
     * strictly BEFORE the frontier append — the filter must be a
     * superset of frontier keys, or a crash between the two turns the
-    * driver gate's tier-1 fast path into duplicate appends. `local` =
-    * (survivor fps, the gate's shard snapshot) when the insert runs on
-    * the driver (the broadcast seen path, within the driver bound);
-    * otherwise it co-partitions. */
+    * driver gate's tier-1 fast path into duplicate appends. `localFps`
+    * = the survivor fps when they are on the driver (every batch within
+    * the driver bound): the driver inserts them. Otherwise the insert
+    * co-partitions. */
   private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
-                          local: Option[(Array[Long], Map[Int, Array[Byte]])]): Unit = {
+                          localFps: Option[Array[Long]]): Unit = {
     val newMax = math.max(currentMaxSeq, freshMaxSeq)
     val metrics = Map("batch" -> batchNo.toDouble)
-    phase("seen-commit")(local match {
-      case Some((fps, snap)) => seen.insertLocal(fps, snap, metrics)
-      case None              => seen.insert(fresh.select("fp"), metrics)
+    phase("seen-commit")(localFps match {
+      case Some(fps) => seen.insertLocal(fps, metrics)
+      case None      => seen.insert(fresh.select("fp"), metrics)
     })
     // coalesce(1): a few-thousand-row append across 32 shuffle
     // partitions would write 32 tiny files whose footers the manifest
@@ -1165,7 +1155,8 @@ object CrawlEngine {
   /** Claim sizes up to this take the batch-bounded discovery enqueue:
     * the process job collects each ok row's (seq, outlinks) — ≤ 3
     * outlinks per url, so ~100 MB of urls at the bound, the same
-    * bounded-collect contract as SeenShards' broadcast path — and
+    * bounded-collect contract as the Spark gate's survivor collect
+    * (`SeenShards.LocalInsertMaxFps`) — and
     * ranking, entries and the cuckoo tier run on the driver
     * (enqueueLocal). Larger claim waves fall back to the distributed
     * prefix-sum (Rank.withPrefixOffsets) and the Spark gate, whose

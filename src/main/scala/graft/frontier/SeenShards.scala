@@ -11,80 +11,44 @@ import org.apache.spark.sql.functions._
   * SnapshotTable — shard = fp mod nShards. All shard filters share
   * `shardBuckets` so delta merges stay bucket-aligned.
   *
-  * One probe, on the driver: `probeLocal` answers the tier-1 verdict
-  * over a `snapshotBytes()` snapshot, so the driver-side gate sends only
-  * filter positives to the exact verify. The Spark gate needs no probe —
-  * its exact anti-join reads every candidate anyway. Two insert paths,
-  * selected by `mode`:
+  * The driver holds the set: `snapshotBytes()` is the shard bytes,
+  * memoized by table version, and costs `nShards × shardBuckets × 8 B`
+  * plus each shard's overflow (2 MB at the engine defaults; once
+  * probed, as much again as deserialized filters). No workload runs
+  * past that. One probe, `probeLocal`, answers the driver gate's
+  * tier-1 verdict over it, so only filter positives go to the exact
+  * verify; the Spark gate needs no probe — its exact anti-join reads
+  * every candidate anyway. One insert, `insertLocal`, merges a batch's
+  * fps into the touched shards of that snapshot, commits them as one
+  * small file and publishes the result as the next memoized version, so
+  * no job re-reads what the driver just built.
   *
-  *  - "broadcast" (small sets; the name is historical — the snapshot is
-  *    held by the driver and never broadcast): insert runs on the DRIVER
-  *    (`insertLocal`): the touched shards of the snapshot the gate
-  *    already holds take the new fps, commit as one small file, and
-  *    become the memoized next version, so no job ever re-reads what
-  *    the driver just built. Requires the driver to hold all shard
-  *    bytes — fine at MBs, fatal at 10^10 urls (~tens of GB) — and the
-  *    batch's fps, so a batch of more than `LocalInsertMaxFps` takes
-  *    the join path's insert instead.
-  *
-  *  - "join" (design scale): the insert (`insert`) CO-PARTITIONS the
-  *    fps with the shard rows via a typed cogroup on `shard` — filter
-  *    bytes move once per shard to where the fps already are, nothing is
-  *    collected to the driver, only touched shards are rewritten. This
-  *    is the path a 1000-executor cluster runs.
-  *
-  *  - "auto": broadcast while the manifest says the shard-table bytes
-  *    are under `JoinThresholdBytes`, join beyond it. The table layout
-  *    is identical on both paths — property-tested to give
-  *    byte-identical filters.
+  * The one fallback: a Spark-gate batch of more than `LocalInsertMaxFps`
+  * survivors, too many to collect, inserts through `insert`, which
+  * co-partitions the fps with the shard rows on the executors. Both
+  * inserts run the same `mergeShard`, so their shard bytes are
+  * identical by construction.
   */
 final class SeenShards(spark: SparkSession, table: SnapshotTable,
-                       nShards: Int, shardBuckets: Int,
-                       mode: String = "auto") {
+                       nShards: Int, shardBuckets: Int) {
 
   import spark.implicits._
-  require(Set("auto", "broadcast", "join")(mode), s"bad seen mode: $mode")
-
-  /** Above this serialized-filter volume the broadcast path's driver
-    * collect of the shard table (once per version it did not build
-    * itself) and the snapshot it holds stop being a rounding error. */
-  val JoinThresholdBytes: Long = 64L << 20
-
-  /** Most fps one driver insert takes: their (fp, seq) pairs, 16 B each,
-    * stay within the `JoinThresholdBytes` the driver already budgets for
-    * the shard snapshot. The gate collects at most one more than this;
-    * a bigger batch commits through the co-partitioned `insert`. */
-  val LocalInsertMaxFps: Int = (JoinThresholdBytes / 16).toInt
-
-  /** Manifest-level size estimate — zero Spark jobs. */
-  private def tableBytes: Long =
-    table.currentManifest.map(_.files.map(_.bytes).sum).getOrElse(0L)
-
-  /** True when this batch should use the co-partitioned path. */
-  def useJoinPath: Boolean = mode match {
-    case "join"      => true
-    case "broadcast" => false
-    case _           => tableBytes > JoinThresholdBytes
-  }
 
   private def hasState: Boolean = table.currentId.nonEmpty && !table.isEmpty
 
   /** Version-keyed memo of the shard bytes: the shard table only
-    * changes when insert() commits, so consecutive gates over an
+    * changes on an insert or a compaction, so consecutive gates over an
     * unchanged version (every batch whose discovery wave was fully
     * deduped, plus the claim-heavy tail of a drain) reuse the collected
-    * bytes instead of paying a read+collect per batch. A driver insert
-    * (`insertLocal`) moves it to the version it commits, so on the
-    * broadcast path the table is re-read only after a commit this
-    * instance did not build on the driver (a compaction, a
-    * co-partitioned insert), not once per insert. Single-writer (the
-    * engine driver), so a plain volatile pair is enough. */
+    * bytes instead of paying a read+collect per batch. `insertLocal`
+    * moves it to the version it commits, so the table is re-read only
+    * after a commit this instance did not build on the driver (a
+    * compaction, a co-partitioned insert). Single-writer (the engine
+    * driver), so a plain volatile pair is enough. */
   @volatile private var snapCache: (Long, Map[Int, Array[Byte]]) = null
 
-  /** Current shard bytes (one driver collect per table VERSION that
-    * this instance did not commit itself) — broadcast-path callers
-    * inside a batch load once and hand the same snapshot to probeLocal()
-    * and insertLocal(). */
+  /** Current shard bytes: one driver collect per table VERSION that
+    * this instance did not commit itself. */
   def snapshotBytes(): Map[Int, Array[Byte]] =
     if (!hasState) Map.empty
     else {
@@ -123,12 +87,11 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     fp => filters.get(java.lang.Math.floorMod(fp, n).toInt).exists(_.mightContain(fp))
   }
 
-  /** Merge new fingerprints into the shard filters (upsert commit),
-    * co-partitioned: the fps cogroup with the shard rows on `shard`, and
-    * only touched shards are rewritten, their fps inserted in sorted
-    * order — `insertLocal`'s steps, so both inserts give byte-identical
-    * filters. Nothing reaches the driver, so it serves the join path and
-    * any batch too big for the driver insert, on any table state. */
+  /** Merge new fingerprints into the shard filters (upsert commit) on
+    * the executors, for a batch too big to collect: the fps cogroup
+    * with the shard rows on `shard`, and only touched shards are
+    * rewritten. Nothing reaches the driver, and the memo stays at the
+    * version before, so the next `snapshotBytes()` re-reads the table. */
   def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty): Unit = {
     val buckets = shardBuckets
     val nS = nShards
@@ -138,41 +101,27 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     commit(fps.cogroup(shards) { (shard, fpIt, existing) =>
       val arr = fpIt.toArray
       if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
-      else {
-        val f = existing.buffered.headOption
-          .map(t => CuckooFilter.deserialize(t._2))
-          .getOrElse(CuckooFilter.withBuckets(buckets))
-        java.util.Arrays.sort(arr)
-        arr.foreach(f.insert)
-        Iterator((shard, f.serialize(), f.count))
-      }
+      else Iterator(SeenShards.mergeShard(shard, existing.nextOption().map(_._2), arr, buckets))
     }.toDF("shard", "bytes", "count"), metrics)
   }
 
-  /** The broadcast path's insert, on the driver, for batches of at most
-    * `LocalInsertMaxFps` fps. `snapshot` is the
-    * `snapshotBytes()` the gate used, i.e. the current version. Each
-    * touched shard deserializes from it (or starts empty), takes its
-    * fps in sorted order and serializes — the join path's steps, so the
-    * bytes are identical. Only the touched rows commit, as one file, and
-    * the memo moves to the committed version holding snapshot ++ touched:
-    * the next `snapshotBytes()`/`probeLocal` runs no job. */
-  def insertLocal(fps: Array[Long], snapshot: Map[Int, Array[Byte]],
-                  metrics: Map[String, Double] = Map.empty): Unit = {
+  /** The driver insert, for batches of at most `LocalInsertMaxFps` fps:
+    * each touched shard of the current snapshot takes its fps. Only the
+    * touched rows commit, as one file, and the memo moves to the
+    * committed version holding snapshot ++ touched: the next
+    * `snapshotBytes()`/`probeLocal` runs no job. The snapshot read is
+    * free when the gate already read this version. */
+  def insertLocal(fps: Array[Long], metrics: Map[String, Double] = Map.empty): Unit = {
     if (fps.isEmpty) return
+    val snapshot = snapshotBytes()
     val n = nShards.toLong
     val touched = fps.groupBy(fp => java.lang.Math.floorMod(fp, n).toInt).toSeq.sortBy(_._1)
       .map { case (shard, shardFps) =>
-        val f = snapshot.get(shard).map(CuckooFilter.deserialize)
-          .getOrElse(CuckooFilter.withBuckets(shardBuckets))
-        java.util.Arrays.sort(shardFps)
-        shardFps.foreach(f.insert)
-        (shard, f.serialize(), f.count)
+        SeenShards.mergeShard(shard, snapshot.get(shard), shardFps, shardBuckets)
       }
     val c = snapCache
     // the memo may only advance from the version the commit builds on
-    val current = if (hasState) c != null && (c._2 eq snapshot) && table.currentId.contains(c._1)
-                  else snapshot.isEmpty
+    val current = !hasState || (c != null && (c._2 eq snapshot) && table.currentId.contains(c._1))
     val id = commit(touched.toDF("shard", "bytes", "count").coalesce(1), metrics)
     snapCache =
       if (current) (id, snapshot ++ touched.map { case (s, b, _) => s -> b })
@@ -182,4 +131,25 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   private def commit(rows: DataFrame, metrics: Map[String, Double]): Long =
     if (table.currentId.isEmpty) table.commitAppend(rows, metrics)
     else table.commitUpsert(rows, metrics)
+}
+
+object SeenShards {
+  /** Most fps one driver insert takes: the Spark gate collects their
+    * (fp, seq) pairs, 16 B each, so 4M of them hold the driver to 64 MB
+    * per batch. The gate collects at most one more than this; a bigger
+    * batch commits through the co-partitioned `insert`. */
+  val LocalInsertMaxFps: Int = 1 << 22
+
+  /** The shard merge both inserts run: the shard's filter (or an empty
+    * one of `buckets` buckets) takes `fps` in sorted order, so the
+    * result depends only on the shard bytes and the fps, not on their
+    * order. Sorts `fps` in place. Returns the (shard, bytes, count)
+    * row. */
+  private def mergeShard(shard: Int, existing: Option[Array[Byte]], fps: Array[Long],
+                         buckets: Int): (Int, Array[Byte], Long) = {
+    val f = existing.map(CuckooFilter.deserialize).getOrElse(CuckooFilter.withBuckets(buckets))
+    java.util.Arrays.sort(fps)
+    fps.foreach(f.insert)
+    (shard, f.serialize(), f.count)
+  }
 }

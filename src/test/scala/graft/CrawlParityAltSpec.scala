@@ -9,14 +9,12 @@ import java.nio.file.Files
 /** Parity under a second, different configuration — different RNG
   * seed (different robots/delays/content), host count, batch size,
   * politeness window, and universe — to show the byte-match is a
-  * property of the spec, not of one lucky fixture. Runs with the
-  * co-partitioned seen-set path FORCED ON (seenMode=join), so the
-  * design-scale path is parity-verified, not just the broadcast one. */
+  * property of the spec, not of one lucky fixture. */
 class CrawlParityAltSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val cfg = CrawlConfig(seed = 7L, nHosts = 23, universe = 250,
-    batchSize = 61, batchMs = 120000L, nShards = 5, seenMode = "join")
+    batchSize = 61, batchMs = 120000L, nShards = 5)
   private val nSeeds = 90
 
   private lazy val engine: CrawlEngine = {
@@ -49,7 +47,7 @@ class CrawlParityAltSpec extends AnyFunSuite {
   test("fuzz config: a third independent (seed, shape) still byte-matches") {
     import spark.implicits._
     val fuzz = CrawlConfig(seed = 1337L, nHosts = 7, universe = 120,
-      batchSize = 37, batchMs = 300000L, nShards = 3, seenMode = "auto")
+      batchSize = 37, batchMs = 300000L, nShards = 3)
     val dir = Files.createTempDirectory("crawlparityfuzz").toString
     val e = new CrawlEngine(spark, dir, fuzz)
     e.init(60)

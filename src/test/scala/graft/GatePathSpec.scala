@@ -14,13 +14,14 @@ import java.nio.file.Files
   * tier, one verify job over the filter positives) and the Spark gate
   * (`enqueue(toEntries(...))`) are fed one adversarial candidate list
   * against identical prior state; both must commit identical fresh rows
-  * (all nine columns) and identical seen-shard bytes, on both seen-set
-  * paths. The list holds: duplicates within the batch whose list order
-  * disagrees with their seq order; scheme, host-case, default-port,
-  * fragment and whitespace variants of one url; robots-disallowed hosts;
-  * keys already in the frontier; and cuckoo false positives — new urls
-  * the filter calls "maybe", found by search over a filter crowded by
-  * one-bucket shards. */
+  * (all nine columns) and identical seen-shard bytes. The list holds:
+  * duplicates within the batch whose list order disagrees with their
+  * seq order; scheme, host-case, default-port, fragment and whitespace
+  * variants of one url; robots-disallowed hosts; keys already in the
+  * frontier; and cuckoo false positives — new urls the filter calls
+  * "maybe", found by search over a filter crowded by one-bucket shards.
+  * ("Broadcast seen path" in the test name is the earlier name of the
+  * driver-held seen set, now the only one.) */
 class GatePathSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -29,8 +30,7 @@ class GatePathSpec extends AnyFunSuite {
 
   /** One bucket per shard: ~100 fingerprints per shard, nearly all in
     * the overflow set, so false positives are ~1 in 650 probes. */
-  private def config(seenMode: String) = CrawlConfig(seed = 11L, nHosts = 40,
-    nShards = 4, shardBuckets = 1, seenMode = seenMode)
+  private val cfg = CrawlConfig(seed = 11L, nHosts = 40, nShards = 4, shardBuckets = 1)
 
   private def variants(url: String): Seq[String] = Seq(
     url.replace("http://host", "HTTP://Host"),
@@ -39,7 +39,7 @@ class GatePathSpec extends AnyFunSuite {
     s"  $url  ")
 
   /** (candidate list, the false-positive urls in it). */
-  private def adversarial(eng: CrawlEngine, cfg: CrawlConfig): (Seq[SeedUrl], Seq[String]) = {
+  private def adversarial(eng: CrawlEngine): (Seq[SeedUrl], Seq[String]) = {
     val url = (i: Long) => Synth.seedUrl(i, cfg.nHosts, cfg.seed).url
     val known = (0L until 30L).map(url)
     val fresh = (nSeeds.toLong until nSeeds + 60L).map(url)
@@ -70,16 +70,15 @@ class GatePathSpec extends AnyFunSuite {
       .collect().sortBy(_._1).map { case (s, b, n) => (s, b.toSeq, n) }.toSeq
   }
 
-  private def crossPath(seenMode: String): Unit = {
+  test("driver gate == Spark gate on an adversarial list (broadcast seen path)") {
     import spark.implicits._
-    val cfg = config(seenMode)
     def engine() = {
       val e = new CrawlEngine(spark, Files.createTempDirectory("gatepath").toString, cfg)
       e.init(nSeeds)
       e
     }
     val (viaDriver, viaSpark) = (engine(), engine())
-    val (cands, falsePositives) = adversarial(viaDriver, cfg)
+    val (cands, falsePositives) = adversarial(viaDriver)
     val knownFps = viaDriver.seenSet.as[Long].collect().toSet
     assert(falsePositives.size === 6, "no cuckoo false positives to exercise")
     assert(falsePositives.forall(u => !knownFps(Hashing.fp(u))))
@@ -108,13 +107,5 @@ class GatePathSpec extends AnyFunSuite {
     assert(viaDriver.enqueueLocal(cands, BatchNo + 1) === 0L)
     assert(sparkGate(viaSpark, BatchNo + 1) === 0L)
     assert(shardBytes(viaDriver) === shardBytes(viaSpark))
-  }
-
-  test("driver gate == Spark gate on an adversarial list (broadcast seen path)") {
-    crossPath("broadcast")
-  }
-
-  test("driver gate == Spark gate on an adversarial list (seenMode=join)") {
-    crossPath("join")
   }
 }

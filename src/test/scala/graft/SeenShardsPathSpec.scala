@@ -15,17 +15,22 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
-/** The broadcast and co-partitioned (join) seen-set paths must be
-  * interchangeable: identical serialized shard filters after inserts
-  * and identical tier-1 verdicts over their snapshots — seeded property
-  * trials (the offline cache has no scalatestplus bridge). */
+/** The seen set is one driver-held structure with two inserts: the
+  * driver insert (`insertLocal`) and the co-partitioned fallback
+  * (`insert`) a Spark-gate batch past the driver bound takes. Both must
+  * give identical serialized shard filters, the writer's memo must equal
+  * a fresh reader's snapshot, and the shards are read only when an
+  * insert will use them — seeded property trials (the offline cache has
+  * no scalatestplus bridge). Test names keep the earlier names of the
+  * two inserts: "broadcast path" is the driver insert, "join path" the
+  * co-partitioned one. */
 class SeenShardsPathSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def mk(mode: String, nShards: Int, buckets: Int) = {
-    val dir = Files.createTempDirectory(s"seen_$mode").toString
+  private def mk(nShards: Int, buckets: Int) = {
+    val dir = Files.createTempDirectory("seen").toString
     val tbl = new SnapshotTable(spark, dir, "shard")
-    (new SeenShards(spark, tbl, nShards, buckets, mode), tbl)
+    (new SeenShards(spark, tbl, nShards, buckets), tbl)
   }
 
   private def fps(seed: Long, n: Int): Seq[Long] = {
@@ -33,54 +38,23 @@ class SeenShardsPathSpec extends AnyFunSuite {
     Seq.fill(n)(r.nextLong())
   }
 
-  test("insert via broadcast and join paths produces byte-identical shard filters (5 trials)") {
-    import spark.implicits._
-    (0 until 5).foreach { trial =>
-      val nShards = 4 + trial
-      val (b, bTbl) = mk("broadcast", nShards, 1 << 8)
-      val (j, jTbl) = mk("join", nShards, 1 << 8)
-      // two insert waves so the join path also exercises merge-into-existing
-      Seq(fps(trial * 10 + 1, 200 + trial * 31), fps(trial * 10 + 2, 150)).foreach { wave =>
-        val df = wave.toDF("fp")
-        b.insert(df); j.insert(df)
-      }
-      val bBytes = bTbl.read().select("shard", "bytes")
-        .as[(Int, Array[Byte])].collect().toMap
-      val jBytes = jTbl.read().select("shard", "bytes")
-        .as[(Int, Array[Byte])].collect().toMap
-      assert(bBytes.keySet === jBytes.keySet, s"trial $trial: shard sets differ")
-      bBytes.foreach { case (s, bb) =>
-        assert(bb.toSeq === jBytes(s).toSeq, s"trial $trial: shard $s bytes differ")
-      }
-    }
-  }
-
   test("probe verdicts identical across paths, including never-seen fps (5 trials)") {
-    import spark.implicits._
     (0 until 5).foreach { trial =>
-      val (b, bTbl) = mk("broadcast", 6, 1 << 8)
+      val (w, tbl) = mk(6, 1 << 8)
       val inserted = fps(500 + trial, 300)
-      b.insert(inserted.toDF("fp"))
-      // same table read through a join-path instance: same state, two paths
-      val j = new SeenShards(spark, bTbl, 6, 1 << 8, "join")
+      w.insertLocal(inserted.toArray)
+      // the writer answers from its memo; a new reader reads the table
+      val r = new SeenShards(spark, tbl, 6, 1 << 8)
       val candidates = inserted.take(50) ++ fps(900 + trial, 100)
       def verdicts(s: SeenShards) = {
         val maybe = s.probeLocal(s.snapshotBytes())
         candidates.map(fp => fp -> maybe(fp)).toMap
       }
-      val vb = verdicts(b)
-      val vj = verdicts(j)
-      assert(vb === vj, s"trial $trial: verdicts differ")
-      // two-tier invariant: no false negatives on either path
-      inserted.take(50).foreach(fp => assert(vb(fp), s"false negative $fp"))
+      val vw = verdicts(w)
+      assert(vw === verdicts(r), s"trial $trial: verdicts differ")
+      // two-tier invariant: no false negatives
+      inserted.take(50).foreach(fp => assert(vw(fp), s"false negative $fp"))
     }
-  }
-
-  test("auto mode switches to the join path only past the size threshold") {
-    val (s, _) = mk("auto", 4, 1 << 8)
-    assert(!s.useJoinPath) // empty table: broadcast is fine
-    val (forced, _) = mk("join", 4, 1 << 8)
-    assert(forced.useJoinPath)
   }
 
   private def shardMap(tbl: SnapshotTable): Map[Int, Seq[Byte]] = {
@@ -89,18 +63,20 @@ class SeenShardsPathSpec extends AnyFunSuite {
       .map { case (s, b) => s -> b.toSeq }.toMap
   }
 
-  /** Spark jobs started by `body` on this thread: they carry a job group,
-    * counted once a later sentinel job's start event has arrived (the
-    * listener bus delivers events in order). */
-  private def jobsRunBy[T](body: => T): (T, Int) = {
+  /** Call sites ("collect at SeenShards.scala:63") of the Spark jobs
+    * started by `body` on this thread: they carry a job group, read once
+    * a later sentinel job's start event has arrived (the listener bus
+    * delivers events in order). */
+  private def jobsRunBy[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"measured-${System.nanoTime()}"
     val sentinel = s"$group-sentinel"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    def sentinelSeen = jobs.asScala.exists(_._1 == sentinel)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
+          .foreach(g => jobs.add((g, e.stageInfos.map(_.name).mkString("; "))))
     }
     sc.addSparkListener(listener)
     try {
@@ -108,9 +84,9 @@ class SeenShardsPathSpec extends AnyFunSuite {
       val r = try body finally sc.setJobGroup(sentinel, "sentinel")
       sc.parallelize(Seq(1)).count()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!groups.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(sentinel), "the listener never saw the sentinel job")
-      (r, groups.asScala.count(_ == group))
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "the listener never saw the sentinel job")
+      (r, jobs.asScala.collect { case (`group`, site) => site }.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -120,24 +96,24 @@ class SeenShardsPathSpec extends AnyFunSuite {
   test("a broadcast-path insert publishes its shards: snapshotBytes runs no job and matches a fresh reader and the join path (3 trials)") {
     import spark.implicits._
     (0 until 3).foreach { trial =>
-      val nShards = 4 + trial
-      val (b, bTbl) = mk("broadcast", nShards, 1 << 8)
-      val (j, jTbl) = mk("join", nShards, 1 << 8)
+      // 4, 6, 8 shards; waves after the first merge into existing shards
+      val nShards = 4 + 2 * trial
+      val (d, dTbl) = mk(nShards, 1 << 8)
+      val (c, cTbl) = mk(nShards, 1 << 8)
       Seq(fps(trial * 10 + 31, 400), fps(trial * 10 + 32, 250), fps(trial * 10 + 33, 120))
         .zipWithIndex.foreach { case (wave, i) =>
-          // the engine's call: the driver insert over the probe's snapshot
-          b.insertLocal(wave.toArray, b.snapshotBytes())
-          j.insert(wave.toDF("fp"))
-          val (snap, jobs) = jobsRunBy(b.snapshotBytes())
-          assert(jobs === 0, s"trial $trial wave $i: snapshotBytes after the insert ran $jobs Spark jobs")
+          d.insertLocal(wave.toArray)
+          c.insert(wave.toDF("fp"))
+          val (snap, jobs) = jobsRunBy(d.snapshotBytes())
+          assert(jobs.isEmpty, s"trial $trial wave $i: snapshotBytes after the insert ran ${jobs.mkString(", ")}")
           // positive control for the job count: a new reader must read the table
           val (reread, rereadJobs) =
-            jobsRunBy(new SeenShards(spark, bTbl, nShards, 1 << 8, "broadcast").snapshotBytes())
-          assert(rereadJobs > 0)
+            jobsRunBy(new SeenShards(spark, dTbl, nShards, 1 << 8).snapshotBytes())
+          assert(rereadJobs.nonEmpty)
           val memo = snap.map { case (s, bytes) => s -> bytes.toSeq }
           assert(memo === reread.map { case (s, bytes) => s -> bytes.toSeq },
             s"trial $trial wave $i: memo != table")
-          assert(memo === shardMap(jTbl), s"trial $trial wave $i: driver insert != join path")
+          assert(memo === shardMap(cTbl), s"trial $trial wave $i: driver insert != co-partitioned insert")
         }
     }
   }
@@ -169,13 +145,10 @@ class SeenShardsPathSpec extends AnyFunSuite {
 
   test("a Spark-gate batch past the driver bound commits co-partitioned, with the join path's result") {
     import spark.implicits._
-    def engine(mode: String) = {
-      val cfg = CrawlConfig(seed = 29L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
-        seenMode = mode)
-      (new CrawlEngine(spark, Files.createTempDirectory(s"seen_bound_$mode").toString, cfg), cfg)
-    }
-    val (b, cfg) = engine("broadcast")
-    val (j, _) = engine("join")
+    val cfg = CrawlConfig(seed = 29L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
+    def engine() = new CrawlEngine(spark, Files.createTempDirectory("seen_bound").toString, cfg)
+    // b runs with a test-sized driver bound, d with the default one
+    val (b, d) = (engine(), engine())
     val bound = 100
     // overlapping waves: the first two pass the bound (the first into an
     // empty table, as a first bulk ingest does), the third fits it
@@ -184,20 +157,36 @@ class SeenShardsPathSpec extends AnyFunSuite {
       val seeds = spark.createDataset((lo until hi).map(k => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)))
       def entries = graft.frontier.Frontier.toEntries(spark, seeds, batchNo = i.toLong, cfg.seed)
       val nb = b.enqueue(entries, i.toLong, maxLocal = bound)
-      val nj = j.enqueue(entries, i.toLong)
-      assert(nb === nj, s"wave $i: enqueued counts differ")
+      val nd = d.enqueue(entries, i.toLong)
+      assert(nb === nd, s"wave $i: enqueued counts differ")
       assert(nb === (if (i == 0) hi - lo else hi - waves(i - 1)._2), s"wave $i")
       assert((nb > bound) === (i < 2))
       // a co-partitioned commit leaves the memo behind (the next snapshot
       // reads the table); a driver insert publishes its version
       val (snap, jobs) = jobsRunBy(b.seen.snapshotBytes())
-      if (i < 2) assert(jobs > 0, s"wave $i: past the bound, yet the memo was current")
-      else assert(jobs === 0, s"wave $i: within the bound, yet snapshotBytes ran $jobs jobs")
-      assert(snap.map { case (s, bytes) => s -> bytes.toSeq } === shardMap(j.seenTbl),
-        s"wave $i: shard bytes differ from the join path")
+      if (i < 2) assert(jobs.nonEmpty, s"wave $i: past the bound, yet the memo was current")
+      else assert(jobs.isEmpty, s"wave $i: within the bound, yet snapshotBytes ran ${jobs.mkString(", ")}")
+      assert(snap.map { case (s, bytes) => s -> bytes.toSeq } === shardMap(d.seenTbl),
+        s"wave $i: shard bytes differ from the driver insert's")
       def rows(e: CrawlEngine) = e.frontierDf.select("fp", "seq").as[(Long, Long)].collect().sorted.toSeq
-      assert(rows(b) === rows(j), s"wave $i: frontiers differ")
+      assert(rows(b) === rows(d), s"wave $i: frontiers differ")
     }
+  }
+
+  test("a Spark-gate enqueue with no survivors reads no shards, even after a co-partitioned commit") {
+    import spark.implicits._
+    val cfg = CrawlConfig(seed = 37L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
+    val eng = new CrawlEngine(spark, Files.createTempDirectory("seen_no_survivors").toString, cfg)
+    val seeds = spark.createDataset((0 until 300).map(k => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)))
+    def entries(batchNo: Long) = graft.frontier.Frontier.toEntries(spark, seeds, batchNo, cfg.seed)
+    // past the bound: the insert co-partitions and the memo goes stale
+    assert(eng.enqueue(entries(0L), 0L, maxLocal = 100) === 300L)
+    // a replay of the known seeds: nothing survives the gate
+    val (n, sites) = jobsRunBy(eng.enqueue(entries(1L), 1L))
+    assert(n === 0L)
+    assert(sites.nonEmpty, "the gate ran no job")
+    val reads = sites.filter(_.contains("SeenShards.scala"))
+    assert(reads.isEmpty, s"the gate read the shard table: ${reads.mkString(", ")}")
   }
 
   /** Analyzed plans of the queries `body` runs on this session, in the
@@ -229,38 +218,35 @@ class SeenShardsPathSpec extends AnyFunSuite {
 
   test("the Spark gate verifies candidates with one exact anti-join: no UDF, no cogroup, on both seen paths") {
     import spark.implicits._
-    val problems = Seq("broadcast", "join").flatMap { mode =>
-      val cfg = CrawlConfig(seed = 31L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8,
-        seenMode = mode)
-      val eng = new CrawlEngine(spark, Files.createTempDirectory(s"seen_gate_$mode").toString, cfg)
-      eng.init(200)
-      assert(eng.seen.snapshotBytes().nonEmpty, s"$mode: the seen table is empty")
-      // half the candidates are already in the frontier
-      val url = (k: Int) => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)
-      val seeds = spark.createDataset((100 until 300).map(url))
-      val seedIds = seeds.queryExecution.analyzed.output.map(_.exprId).toSet
-      var n = 0L
-      val plans = queriesRunBy {
-        n = eng.enqueue(graft.frontier.Frontier.toEntries(spark, seeds, batchNo = 1L, cfg.seed), 1L)
-      }
-      val known = (0 until 200).map(k => Hashing.fp(url(k).url)).toSet
-      val expected = (100 until 300).map(k => Hashing.fp(url(k).url)).filterNot(known).distinct
-      assert(n === expected.size.toLong, s"$mode: enqueued count")
-      // the gate is the first query that reads the candidates; the seen
-      // and frontier commits read its cached output after it
-      val gate = plans.find(_.exists {
-        case l: LocalRelation => l.output.exists(a => seedIds(a.exprId))
-        case _                => false
-      }).getOrElse(fail(s"$mode: no query read the candidates"))
-      val joins = gate.collect { case j: Join => j.joinType }
-      val udfs = gate.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
-      val cogroups = gate.collect { case c: CoGroup => c }
-      Seq(
-        if (joins == Seq(LeftAnti)) None else Some(s"joins ${joins.mkString(", ")}"),
-        if (udfs.isEmpty) None else Some(s"Scala UDFs ${udfs.mkString(", ")}"),
-        if (cogroups.isEmpty) None else Some(s"${cogroups.size} cogroup(s)")
-      ).flatten.map(p => s"$mode: $p")
+    val cfg = CrawlConfig(seed = 31L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
+    val eng = new CrawlEngine(spark, Files.createTempDirectory("seen_gate").toString, cfg)
+    eng.init(200)
+    assert(eng.seen.snapshotBytes().nonEmpty, "the seen table is empty")
+    // half the candidates are already in the frontier
+    val url = (k: Int) => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)
+    val seeds = spark.createDataset((100 until 300).map(url))
+    val seedIds = seeds.queryExecution.analyzed.output.map(_.exprId).toSet
+    var n = 0L
+    val plans = queriesRunBy {
+      n = eng.enqueue(graft.frontier.Frontier.toEntries(spark, seeds, batchNo = 1L, cfg.seed), 1L)
     }
+    val known = (0 until 200).map(k => Hashing.fp(url(k).url)).toSet
+    val expected = (100 until 300).map(k => Hashing.fp(url(k).url)).filterNot(known).distinct
+    assert(n === expected.size.toLong, "enqueued count")
+    // the gate is the first query that reads the candidates; the seen
+    // and frontier commits read its cached output after it
+    val gate = plans.find(_.exists {
+      case l: LocalRelation => l.output.exists(a => seedIds(a.exprId))
+      case _                => false
+    }).getOrElse(fail("no query read the candidates"))
+    val joins = gate.collect { case j: Join => j.joinType }
+    val udfs = gate.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    val cogroups = gate.collect { case c: CoGroup => c }
+    val problems = Seq(
+      if (joins == Seq(LeftAnti)) None else Some(s"joins ${joins.mkString(", ")}"),
+      if (udfs.isEmpty) None else Some(s"Scala UDFs ${udfs.mkString(", ")}"),
+      if (cogroups.isEmpty) None else Some(s"${cogroups.size} cogroup(s)")
+    ).flatten
     assert(problems.isEmpty, problems.mkString("; "))
   }
 }
