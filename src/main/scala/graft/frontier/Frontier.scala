@@ -150,9 +150,9 @@ object Frontier {
     * Expects unique fps. No cuckoo tier: the join reads every candidate
     * anyway, so a filter verdict would skip no work. This is the gate of
     * the unbounded enqueue paths (bulk seeding, executor-side keyword
-    * expansion, claim waves past the driver bound); batch-bounded
-    * candidates already on the driver take `firstOccurrenceLocal` +
-    * `verifyHits` instead, where the filter does skip the verify. */
+    * expansion); batch-bounded candidates already on the driver (the
+    * drain's discovery waves, `searchBatch`) take `firstOccurrenceLocal`
+    * + `verifyHits` instead, where the filter does skip the verify. */
   def dedupGate(candidates: DataFrame, frontierKeys: DataFrame): DataFrame =
     candidates.join(frontierKeys, Seq("fp"), "left_anti")
 

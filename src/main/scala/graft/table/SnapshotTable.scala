@@ -518,15 +518,6 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     nextId
   }
 
-  /** Set/overwrite a durable table property (carried across commits
-    * via a props-only commit). */
-  def setProp(key: String, value: String): Unit = {
-    val m = currentManifest.getOrElse(
-      throw new IllegalStateException("setProp before first commit"))
-    publish(m.copy(id = m.id + 1, parent = Some(m.id),
-      props = m.props + (key -> value)))
-  }
-
   def getProp(key: String): Option[String] = currentManifest.flatMap(_.props.get(key))
 
   /** Restore CURRENT to an older snapshot (rollback). */
@@ -634,9 +625,8 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * min/max of the key column when its statistics are present. Costs
     * a metadata read, zero Spark jobs (the Iceberg approach). */
   private def footerStats(file: Path): (Long, String, String) = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file.toString), conf)
+      .fromPath(new org.apache.hadoop.fs.Path(file.toString), SnapshotTable.footerConf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
@@ -738,6 +728,11 @@ object SnapshotTable {
           t
         }
       })
+
+  /** The Hadoop configuration every footer read opens its file with.
+    * Built once (a `Configuration` loads its default resources on first
+    * use) and never mutated, so the footer pool's threads only read it. */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   final case class FileEntry(path: String, kind: String, deltaSeq: Long,
                              rows: Long, bytes: Long, minKey: String,

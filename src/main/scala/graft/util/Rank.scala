@@ -84,54 +84,6 @@ object Rank {
     (ranked, total)
   }
 
-  /** Global EXCLUSIVE prefix sums of a weight column in `order` — the
-    * offsets that densely rank a grouped EXPANSION without ever
-    * materializing the expanded rows. For discovery waves: each parent
-    * emits `weight` children (outlinks), so the child at (parent,
-    * idx) has dense global rank `offset(parent) + idx + 1` — identical
-    * to sorting the exploded children by (parent, idx), but computed
-    * from the PER-PARENT table (one narrow row per parent, ~1000× fewer
-    * rows than the expansion at fan-out 3+ with url-string payloads).
-    * Protocol: range-partition the parents (one shuffle of the small
-    * table), per-partition weight sums → driver prefix (one long per
-    * partition), partition-LOCAL running sum via a partitioned window
-    * (partition id is the partition key — never a global window).
-    * Returns (parent rows + exclusive-offset column, total weight). */
-  def withPrefixOffsets(df: DataFrame, order: Seq[Column], weightCol: Column,
-                        offCol: String, numParts: Int = 0): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val np = if (numParts > 0) numParts
-             else spark.sessionState.conf.numShufflePartitions
-    // pid pinned as a COLUMN on the checkpoint: every later operator
-    // (the tiny agg's shuffle, the window's exchange) must see the
-    // range-partition id, and a bare spark_partition_id() downstream of
-    // an exchange evaluates to the post-shuffle id
-    // lazy for the same one-job reason as withGlobalRank: the sums
-    // collect below is the materializing action
-    val sorted = df.withColumn("__w", weightCol.cast("long"))
-      .repartitionByRange(np, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
-    // per-partition totals: tiny shuffle (np rows after partial agg)
-    val sums = sorted.groupBy(col("__pid"))
-      .agg(sum(col("__w")).as("__s"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val perPart = (0 until np).map(p => sums.getOrElse(p, 0L))
-    val offsets = perPart.scanLeft(0L)(_ + _)
-    val total = offsets.last
-    // exclusive running sum within the pinned range partition — a
-    // PARTITIONED window (np bounded partitions), never a global one
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__pid"))
-      .orderBy(order: _*)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val out = sorted.withColumn(offCol,
-        element_at(typedlit(offsets.dropRight(1).toSeq), col("__pid") + 1)
-          + coalesce(sum(col("__w")).over(w), lit(0L)))
-      .drop("__w", "__pid")
-    (out, total)
-  }
-
   /** Append a 1-based index column in the EXISTING partition/row order
     * (no shuffle) — for sources whose physical order is the semantic
     * order, e.g. seed text files where seq = line number. Kept on the

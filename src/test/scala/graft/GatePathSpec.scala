@@ -108,4 +108,14 @@ class GatePathSpec extends AnyFunSuite {
     assert(sparkGate(viaSpark, BatchNo + 1) === 0L)
     assert(shardBytes(viaDriver) === shardBytes(viaSpark))
   }
+
+  test("CrawlConfig rejects a batch past the driver bound and an unknown claim mode") {
+    // the drain gates every claim's discovery wave on the driver, so a
+    // claim may never hold more than DriverRankMaxRows rows
+    intercept[IllegalArgumentException](
+      CrawlConfig(batchSize = (CrawlEngine.DriverRankMaxRows + 1).toInt))
+    intercept[IllegalArgumentException](CrawlConfig(batchSize = 0))
+    intercept[IllegalArgumentException](CrawlConfig(claimMode = "buckted"))
+    CrawlConfig(batchSize = CrawlEngine.DriverRankMaxRows.toInt, claimMode = "bucketed")
+  }
 }
