@@ -63,25 +63,26 @@ final case class CrawlConfig(
   *
   * Action budget per batch (driver-loop latency is the sandbox
   * bottleneck, so it is engineered; a claim holds ≤ batchSize ≤
-  * DriverRankMaxRows rows): claim-count, processing-commit,
-  * process-collect (the ok rows' (seq, outlinks): discovery ranking,
-  * entries, first occurrence and the cuckoo tier then run on the
-  * driver), terminal-commit, payload-commit, maxSeq and next-batch
-  * (prop reads, zero jobs), enqueue (one verify job over the filter
-  * positives — none when there are none — then, only when something
-  * survives, the seen commit and the append commit) ≈ 6–8 Spark
-  * actions plus hygiene. The seen commit is a driver-side insert into
-  * the memoized shard snapshot plus one one-file write: no shuffle, and no
-  * job re-reads the shards after it (the snapshot costs one collect
-  * per table version the engine did not build itself, i.e. after a
+  * DriverRankMaxRows rows): the claim collect (the claimed rows), the
+  * process collect (every row's (fp, ok, error) and the ok rows'
+  * (seq, outlinks): discovery ranking, entries, first occurrence and the
+  * cuckoo tier then run on the driver), the payload write, and the
+  * enqueue's verify job over the filter positives (none when there are
+  * none) ≈ 3–4 Spark jobs plus hygiene (compaction). Every other commit
+  * of the batch — processing, terminal, seen and append — writes rows
+  * the driver already holds with `SnapshotTable.commitLocal`: no job.
+  * maxSeq and next-batch are prop reads. The seen commit is a driver
+  * insert into the memoized shard snapshot: no shuffle, and no job
+  * re-reads the shards after it (the snapshot costs one collect per
+  * table version the engine did not build itself, i.e. after a
   * compaction or an over-bound insert). The bulk paths (init, seed
   * files and streams, executor-side keyword expansion) run the Spark
-  * gate — one action that also collects the survivors' (fp, seq) for
-  * that driver insert, up to `SeenShards.LocalInsertMaxFps` of them (a
-  * bigger batch aggregates and inserts co-partitioned instead; a batch
-  * with no survivor reads no shards) — then the append and the seen
-  * table's hygiene check (a manifest read; compaction once more than 6
-  * seen deltas pile up).
+  * gate — one action that also collects the survivors' rows, up to
+  * `LocalCommitMaxRows` of them, so their seen insert and append are
+  * driver commits too (a bigger batch aggregates, inserts
+  * co-partitioned and appends with a Spark write instead; a batch with
+  * no survivor reads no shards) — then the seen table's hygiene check
+  * (a manifest read; compaction once more than 6 seen deltas pile up).
   * The batch's WALL time is the critical path,
   * not the sum: commits ride a single-thread commit lane that overlaps
   * compute wherever the crash-safety order allows. Per batch:
@@ -176,6 +177,11 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
   val keywords = new SnapshotTable(spark, s"$workDir/keywords", "query",
     tagCol = Some("state"), frozenTags = Set("searched"))
   val seen     = new SeenShards(spark, seenTbl, cfg.nShards, cfg.shardBuckets)
+
+  /** Driver-held frontier and keyword rows as `commitLocal` takes them. */
+  private val entryRows = SnapshotTable.LocalRows.encoder[FrontierEntry]()
+  private val keywordRows =
+    SnapshotTable.LocalRows.encoder[(String, Long, String)]("query", "seq", "state")
 
   /** Payload table, or a correctly-typed empty frame before the first
     * commit (a drain where every fetch failed commits nothing — views
@@ -309,25 +315,21 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val base = keywords.getProp(CrawlEngine.MaxSeqProp).map(_.toLong + 1).getOrElse(0L)
     val entries = qs.distinct.zipWithIndex
       .map { case (q, i) => (q, base + i, "pending") }
-    val df = spark.createDataset(entries).toDF("query", "seq", "state")
     // dedup gate against keys-ever-enqueued: a pruned single-column
     // base-file scan (readKeys — appends introduce every key; state
-    // flips are deltas), not the resolved view's merge-on-read window
+    // flips are deltas), not the resolved view's merge-on-read window.
+    // ONE collect of the survivors; they commit from the driver (the
+    // queries are a driver-side list to begin with)
     val fresh =
-      (if (!tableLive) df
-       else df.join(keywords.readKeys(), Seq("query"), "left_anti")).cache()
-    // ONE action reads both facts (count + max surviving seq) — the
-    // prop must track the TABLE max, i.e. survivors only, exactly as
-    // the old per-call aggregate observed it
-    val stats = fresh.agg(count(lit(1)), max("seq")).head
-    val n = stats.getLong(0)
-    if (n > 0) {
-      val newMax = math.max(base - 1, stats.getLong(1))
-      keywords.commitAppend(fresh,
-        props = Map(CrawlEngine.MaxSeqProp -> newMax.toString))
-    }
-    fresh.unpersist()
-    n
+      if (!tableLive) entries
+      else entries.toDF("query", "seq", "state")
+        .join(keywords.readKeys(), Seq("query"), "left_anti")
+        .as[(String, Long, String)].collect().toSeq
+    // the prop tracks the TABLE max, i.e. survivors only
+    if (fresh.nonEmpty)
+      keywords.commitLocal(keywordRows(fresh),
+        props = Map(CrawlEngine.MaxSeqProp -> math.max(base - 1, fresh.map(_._2).max).toString))
+    fresh.size.toLong
   }
 
   /** Claim up to `k` pending queries (FIFO by seq — the reference's
@@ -359,9 +361,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val n = enqueueLocal(expanded.toSeq.zipWithIndex.map { case (u, i) =>
       SeedUrl(u, Frontier.NormalPriority, base + i.toLong)
     }, batchNo = 0L)
-    keywords.commitUpsert(
-      spark.createDataset(claimed.map { case (q, s) => (q, s, "searched") }.toSeq)
-        .toDF("query", "seq", "state"))
+    keywords.commitLocal(keywordRows(claimed.map { case (q, s) => (q, s, "searched") }.toSeq),
+      upsert = true)
     // same table hygiene as the crawl tables: bound read amplification
     // and snapshot accumulation over long keyword drains
     if (keywords.compactIfNeeded(maxDeltaCommits = 6).isDefined)
@@ -451,18 +452,20 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * keyword expansion). Batch-bounded candidates already on the driver
     * (every drain's discovery wave, `searchBatch`) take `enqueueLocal`.
     *
-    * The gate's one action collects the survivors' (fp, seq), 16 B
-    * each: n, the max seq and the driver's seen insert
-    * (`SeenShards.insertLocal`) all come from that array, so the seen
-    * commit adds a one-file write and no read. The collect is cut at
-    * `maxLocal` + 1 rows (default `SeenShards.LocalInsertMaxFps`, 64 MB
-    * of pairs), because nothing bounds the input: a first ingest of
-    * 10^9 seeds would otherwise collect them all. A batch past the cut
-    * keeps the fps distributed: one aggregate reads n and the max seq,
-    * and the insert co-partitions. The shard snapshot is read only
-    * when the driver insert will run, i.e. for 1..`maxLocal` survivors. */
+    * The gate's one action collects the survivors' full rows: n, the
+    * max seq, the driver's seen insert (`SeenShards.insertLocal`) and
+    * the append all come from that array, so both commits are
+    * driver-written files (`commitLocal`) and the gate is the call's
+    * only job. The collect is cut at `maxLocal` + 1 rows (default
+    * `CrawlEngine.LocalCommitMaxRows`, 64 MB of rows on the driver),
+    * because nothing bounds the input: a first ingest of 10^9 seeds
+    * would otherwise collect them all. A batch past the cut stays
+    * distributed: one aggregate reads n and the max seq, the seen insert
+    * co-partitions and the append is a Spark write. The shard snapshot
+    * is read only when the driver insert will run, i.e. for
+    * 1..`maxLocal` survivors. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long,
-                             maxLocal: Int = SeenShards.LocalInsertMaxFps): Long = {
+                             maxLocal: Int = CrawlEngine.LocalCommitMaxRows): Long = {
     // exact anti-join against the cache-resident key set (seenSet): all
     // keys live in base files (appends introduce every key; deltas only
     // revise them), and the base-file set only changes on an append or
@@ -474,7 +477,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // max seq is parity-relevant: the oracle assigns the next batch's
     // seq base from surviving rows only
     val survivors = phase("enqueue-gate")(
-      fresh.select("fp", "seq").as[(Long, Long)].limit(maxLocal + 1).collect())
+      fresh.as[FrontierEntry].limit(maxLocal + 1).collect())
     val n =
       if (survivors.length <= maxLocal) {
         if (survivors.nonEmpty) {
@@ -482,15 +485,14 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           // (ONE collect per table version), so insertLocal finds it
           // memoized
           phase("enqueue-probe")(seen.snapshotBytes())
-          commitFresh(fresh, survivors.length.toLong, survivors.iterator.map(_._2).max,
-            batchNo, Some(survivors.map(_._1)))
+          commitFresh(Right(survivors.toSeq), batchNo)
         }
         survivors.length.toLong
       } else {
         val stats = phase("enqueue-gate")(
-          fresh.agg(count(lit(1)), max("seq")).head)
+          fresh.agg(count(lit(1)), max("seq")).head())
         val n = stats.getLong(0)
-        commitFresh(fresh, n, stats.getLong(1), batchNo, None)
+        commitFresh(Left((fresh, n, stats.getLong(1))), batchNo)
         n
       }
     fresh.unpersist()
@@ -520,8 +522,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * reach Spark, in ONE map-side verify job over the resident key
     * cache (Frontier.verifyHits) — the key table is never shuffled or
     * broadcast, and a batch with no positive runs no gate job at all.
-    * The survivors' fps go straight to the driver seen insert, which
-    * builds on the snapshot the tier-1 verdict already read.
+    * The survivors commit from the driver as they are: their fps go to
+    * the driver seen insert, which builds on the snapshot the tier-1
+    * verdict already read, and their rows to a driver-written append —
+    * a batch with no positive runs no Spark job at all.
     * Output (fresh rows, seen-shard bytes) is identical to
     * `enqueue(toEntries(...))` — GatePathSpec feeds both the same
     * adversarial list. */
@@ -542,34 +546,40 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         cands.filterNot(e => hits.contains(e.fp))
       }
     }
-    if (fresh.nonEmpty)
-      commitFresh(spark.createDataset(fresh).toDF(), fresh.size.toLong,
-        fresh.iterator.map(_.seq).max, batchNo, Some(fresh.iterator.map(_.fp).toArray))
+    if (fresh.nonEmpty) commitFresh(Right(fresh), batchNo)
     fresh.size.toLong
   }
 
-  /** Commit `n` gate survivors (max seq `freshMaxSeq`): seen-insert
-    * strictly BEFORE the frontier append — the filter must be a
-    * superset of frontier keys, or a crash between the two turns the
-    * driver gate's tier-1 fast path into duplicate appends. `localFps`
-    * = the survivor fps when they are on the driver (every driver-gate
-    * batch, and a Spark-gate batch of at most `maxLocal` survivors): the
-    * driver inserts them. Otherwise the insert co-partitions. */
-  private def commitFresh(fresh: DataFrame, n: Long, freshMaxSeq: Long, batchNo: Long,
-                          localFps: Option[Array[Long]]): Unit = {
-    val newMax = math.max(currentMaxSeq, freshMaxSeq)
-    val metrics = Map("batch" -> batchNo.toDouble)
-    phase("seen-commit")(localFps match {
-      case Some(fps) => seen.insertLocal(fps, metrics)
-      case None      => seen.insert(fresh.select("fp"), metrics)
-    })
-    // coalesce(1): a few-thousand-row append across 32 shuffle
-    // partitions would write 32 tiny files whose footers the manifest
-    // then reads; one writer task over the survivors is cheaper than
-    // the per-file fixed costs it saves
-    phase("append-commit")(frontier.commitAppend(fresh.coalesce(1), Map(
-      "batch" -> batchNo.toDouble, "enqueued" -> n.toDouble),
-      props = Map(CrawlEngine.MaxSeqProp -> newMax.toString)))
+  /** Commit the gate survivors: seen-insert strictly BEFORE the
+    * frontier append — the filter must be a superset of frontier keys,
+    * or a crash between the two turns the driver gate's tier-1 fast path
+    * into duplicate appends. Survivors on the driver (`Right`: every
+    * driver-gate batch, and a Spark-gate batch of at most `maxLocal`)
+    * commit from the driver, with no Spark job: the driver seen insert,
+    * then a driver-written append. A Spark-gate batch past the bound
+    * (`Left`: the cached survivors, their count and max seq) inserts
+    * co-partitioned and appends with a Spark write. */
+  private def commitFresh(fresh: Either[(DataFrame, Long, Long), Seq[FrontierEntry]],
+                          batchNo: Long): Unit = {
+    val (n, freshMaxSeq) = fresh match {
+      case Left((_, n, maxSeq)) => (n, maxSeq)
+      case Right(rows)          => (rows.size.toLong, rows.iterator.map(_.seq).max)
+    }
+    val seenMetrics = Map("batch" -> batchNo.toDouble)
+    val metrics = seenMetrics + ("enqueued" -> n.toDouble)
+    val props = Map(CrawlEngine.MaxSeqProp -> math.max(currentMaxSeq, freshMaxSeq).toString)
+    fresh match {
+      case Right(rows) =>
+        phase("seen-commit")(seen.insertLocal(rows.iterator.map(_.fp).toArray, seenMetrics))
+        phase("append-commit")(frontier.commitLocal(entryRows(rows),
+          metrics = metrics, props = props))
+      case Left((df, _, _)) =>
+        phase("seen-commit")(seen.insert(df.select("fp"), seenMetrics))
+        // coalesce(1): an append across 32 shuffle partitions would
+        // write 32 files whose footers the manifest then reads; one
+        // writer task is cheaper than the per-file fixed costs it saves
+        phase("append-commit")(frontier.commitAppend(df.coalesce(1), metrics, props))
+    }
   }
 
   private val phaseSums =
@@ -610,10 +620,16 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       })
 
   /** One politeness-budgeted claim against the CURRENT frontier state:
-    * lineage-truncated (localCheckpoint) plus the one action that reads
-    * the row count and the replay marker. Pure read — safe to run from
-    * the speculation thread concurrently with the dedup-gate chain. */
-  private final case class ClaimedBatch(df: DataFrame, n: Long, hasReplay: Boolean)
+    * lineage-truncated (localCheckpoint) plus the one action that
+    * collects the claimed rows (≤ batchSize ≤ DriverRankMaxRows). Pure
+    * read — safe to run from the speculation thread concurrently with
+    * the dedup-gate chain. */
+  private final class ClaimedBatch(val df: DataFrame, val rows: Array[FrontierEntry]) {
+    def n: Long = rows.length.toLong
+    /** The claim replays rows recovered from a crash (min priority). */
+    def hasReplay: Boolean =
+      rows.nonEmpty && rows.iterator.map(_.priority).min == FrontierState.RecoveryPriority
+  }
   private def claimBatch(): ClaimedBatch = {
     val bucketed = cfg.claimMode == "bucketed"
     // NOT cached: its single consumer is the checkpointed claim
@@ -632,12 +648,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         cfg.batchSize, cfg.batchMs)
     else Frontier.claimBySynthPolicy(pending, cfg.seed,
       cfg.batchSize, cfg.batchMs)).localCheckpoint(false)
-    // ONE action materializes the checkpoint AND reads both facts the
-    // driver needs from it: the row count and the replay marker
-    val stats = phase("claim")(
-      claimed.agg(count(lit(1)), min("priority")).head)
-    ClaimedBatch(claimed, stats.getLong(0),
-      !stats.isNullAt(1) && stats.getInt(1) == FrontierState.RecoveryPriority)
+    // ONE action materializes the checkpoint AND collects the claimed
+    // rows: the processing and terminal commits are built from them on
+    // the driver
+    new ClaimedBatch(claimed, phase("claim")(claimed.as[FrontierEntry].collect()))
   }
 
   /** Join the deferred tail, surfacing its failure. Idempotent. */
@@ -706,7 +720,6 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // excluded) when this batch started. So the claim job runs while
     // the previous tail commits.
     var processed: org.apache.spark.sql.Dataset[ProcessedUrl] = null
-    var tailOwnsProcessed = false
     var procFuture: java.util.concurrent.Future[_] = null
     var procJoined = false
     var payloadFuture: java.util.concurrent.Future[_] = null
@@ -725,15 +738,15 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
 
       // checkpoint: claimed rows become `processing` — crash after this
       // commit is what resume() recovers from. It runs on the commit
-      // lane CONCURRENT with the process materialization below (both
-      // read only the checkpointed claim); the join after the process count
-      // keeps it strictly before every later commit. A crash while it
-      // is in flight leaves the rows `pending` — the batch replays from
-      // scratch, idempotently.
+      // lane CONCURRENT with the process job below, and writes the
+      // collected claim from the driver (no job); the join after the
+      // process collect keeps it strictly before every later commit. A
+      // crash while it is in flight leaves the rows `pending` — the
+      // batch replays from scratch, idempotently.
       procFuture = commitPool.submit(runnable {
-        phase("processing-commit")(frontier.commitUpsert(
-          claimed.withColumn("state", lit(FrontierState.Processing)).coalesce(1),
-          Map("batch" -> batchNo.toDouble, "claimed" -> nClaimed.toDouble)))
+        phase("processing-commit")(frontier.commitLocal(
+          entryRows(cb.rows.toSeq.map(_.copy(state = FrontierState.Processing))),
+          upsert = true, Map("batch" -> batchNo.toDouble, "claimed" -> nClaimed.toDouble)))
       })
 
       // fetch + per-url pipeline (2nd shuffle of the batch): ROUND-ROBIN
@@ -792,13 +805,17 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       // The typed-deser versions measurably capped drain scaling: three
       // full-object passes per batch of pure allocation churn.)
       //
-      // The process job COLLECTS each ok row's (seq, outlinks) instead
-      // of only counting: that one collect is the whole discovery wave
-      // (a claim holds ≤ batchSize ≤ DriverRankMaxRows rows), so
-      // ranking, entries, first occurrence and the cuckoo tier run on
-      // the driver (enqueueLocal).
-      val wave = phase("process")(processed.filter(col("ok"))
-        .select("seq", "outlinks").as[(Long, Seq[String])].collect())
+      // The process job COLLECTS every row's (fp, ok, error) and each
+      // ok row's (seq, outlinks) instead of only counting (a claim holds
+      // ≤ batchSize ≤ DriverRankMaxRows rows): the outcomes build the
+      // terminal commit on the driver, and the ok rows' links are the
+      // whole discovery wave, so ranking, entries, first occurrence and
+      // the cuckoo tier run on the driver (enqueueLocal). A failed row's
+      // outlinks are empty by construction.
+      val outcomes = phase("process")(processed
+        .select("fp", "ok", "error", "seq", "outlinks")
+        .as[(Long, Boolean, String, Long, Seq[String])].collect())
+      val wave = outcomes.collect { case (_, true, _, seq, links) => (seq, links) }
       val nOk = wave.length.toLong
       // the processing checkpoint must be durable before any downstream
       // commit; its failure aborts the batch here
@@ -922,37 +939,29 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       // — without this a long drain accumulates every snapshot json +
       // data file forever. keepLast=8 retains enough history for
       // restore() while bounding disk.
-      // the tail owns the `processed` cache from here: it unpersists
-      // after the terminal commit (a recompute in between is safe —
-      // deterministic lineage over the pinned claim — just wasteful)
-      val processedLocal = processed
-      val tail = runnable {
-        try {
-          // FrontierEntry as a column projection: the old typed map +
-          // coalesce(1) pulled the WHOLE wide cache (bytes included)
-          // through one task's deserializer; this reads 8 narrow
-          // columns from the columnar cache
-          phase("terminal-commit")(frontier.commitUpsert(
-            processedLocal.select(col("fp"), col("url"), col("host"),
-              col("priority"), col("seq"),
-              when(col("ok"), lit(FrontierState.Processed))
-                .otherwise(lit(FrontierState.Failed)).as("state"),
-              col("error"), col("discoveredAt"),
-              lit(batchNo).as("processedAt")).coalesce(1),
-            Map("batch" -> batchNo.toDouble, "ok" -> nOk.toDouble,
-              "failed" -> (nClaimed - nOk).toDouble),
-            props = Map(CrawlEngine.NextBatchProp ->
-              math.max(batchNo + 1L, nextBatchNo).toString)))
-          phase("hygiene") {
-            if (frontier.compactIfNeeded(maxDeltaCommits = cfg.compactEvery).isDefined)
-              frontier.expire(keepLast = 8)
-            seenHygiene()
-            if (payload.compactIfNeeded(maxDeltaCommits = 12).isDefined)
-              payload.expire(keepLast = 8)
-          }
-        } finally processedLocal.unpersist()
+      // the terminal rows: each claimed row with its process outcome,
+      // built on the driver — the `processed` cache is not read again
+      val outcome = outcomes.iterator.map { case (fp, ok, err, _, _) => fp -> (ok, err) }.toMap
+      val terminal = cb.rows.toSeq.map { e =>
+        val (ok, err) = outcome(e.fp)
+        e.copy(state = if (ok) FrontierState.Processed else FrontierState.Failed,
+          error = err, processedAt = batchNo)
       }
-      tailOwnsProcessed = true
+      val tail = runnable {
+        phase("terminal-commit")(frontier.commitLocal(entryRows(terminal),
+          upsert = true,
+          Map("batch" -> batchNo.toDouble, "ok" -> nOk.toDouble,
+            "failed" -> (nClaimed - nOk).toDouble),
+          props = Map(CrawlEngine.NextBatchProp ->
+            math.max(batchNo + 1L, nextBatchNo).toString)))
+        phase("hygiene") {
+          if (frontier.compactIfNeeded(maxDeltaCommits = cfg.compactEvery).isDefined)
+            frontier.expire(keepLast = 8)
+          seenHygiene()
+          if (payload.compactIfNeeded(maxDeltaCommits = 12).isDefined)
+            payload.expire(keepLast = 8)
+        }
+      }
       if (defer) inflight = commitPool.submit(tail)
       else tail.run()
       (nClaimed, spec)
@@ -982,7 +991,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           System.err.println(s"[crawl] speculative claim failed during batch abort: $e")
         }
       }
-      if (!tailOwnsProcessed && processed != null) processed.unpersist()
+      // the payload commit is joined by now (above, or on the normal
+      // path before the tail), and nothing else reads the cache
+      if (processed != null) processed.unpersist()
     }
   }
 
@@ -1128,6 +1139,22 @@ object CrawlEngine {
     * fan-out cap of 3 doubles these. At the 1.5–2.1k urls/s of the
     * drains in BENCH_LOCAL.json, fetching and processing that claim
     * takes 8–12 minutes, so the driver's wave work stays about 1 % of
-    * the batch at the bound. */
+    * the batch at the bound. The claim's rows are collected as well,
+    * for the driver-written processing and terminal commits: ~0.5 KB
+    * per row while they commit (see `LocalCommitMaxRows`), 62 MB at the
+    * 131,072-url batches of `graft.Bench`, ~0.5 GB at the bound. */
   val DriverRankMaxRows: Long = 1L << 20
+  /** Most survivors a Spark-gate batch commits from the driver
+    * (`enqueue`'s default `maxLocal`; the gate collects at most one
+    * more): its seen insert and append are then driver writes with no
+    * Spark job. A bigger batch inserts co-partitioned and appends with a
+    * Spark write. The driver holds each survivor twice while it commits,
+    * as the collected `FrontierEntry` and as its encoded row: 477 B per
+    * survivor (`SizeEstimator` over 65,536 seed-list rows, 4-core box),
+    * so the 64 MB driver budget holds ~140k; rounded down to 2^17 =
+    * 131,072 (62.5 MB). A seed-ingest batch (~40k survivors) fits; a
+    * first bulk ingest of 10^9 seeds does not. Below it a commit is cheaper on the driver at every measured
+    * size: 512 rows 28 ms against 193 ms for the Spark write, 40k rows
+    * 94 ms against 274 ms (CHANGES.md). */
+  val LocalCommitMaxRows: Int = 1 << 17
 }

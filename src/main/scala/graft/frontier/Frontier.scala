@@ -226,17 +226,19 @@ object Frontier {
   }
 
   /** Scalar twin of `toEntries` for candidates already on the driver
-    * (the batch-bounded enqueue): the same row per url from
-    * `Hashing.fp`/`host` and `Synth.hostPolicy`/`isDisallowed` — the
-    * scalars SourcesOpsSpec pins to the column form — with one policy
-    * derivation per distinct host. */
+    * (the batch-bounded enqueue): the same row per url as
+    * `Hashing.fp`/`host` and `Synth.hostPolicy`/`isDisallowed` give — the
+    * scalars SourcesOpsSpec pins to the column form — with each url
+    * canonicalized once (fp, host and path all derive from that string)
+    * and one policy derivation per distinct host. */
   def toEntriesLocal(urls: Seq[SeedUrl], batchNo: Long, seed: Long): Seq[FrontierEntry] = {
     val policies = scala.collection.mutable.HashMap.empty[String, HostPolicy]
     urls.map { s =>
-      val host = Hashing.host(s.url)
-      val dis = Synth.isDisallowed(s.url,
+      val c = Hashing.canonicalize(s.url)
+      val host = Hashing.canonicalHost(c)
+      val dis = Synth.isDisallowedCanonical(c,
         policies.getOrElseUpdate(host, Synth.hostPolicy(host, seed)))
-      FrontierEntry(Hashing.fp(s.url), s.url, host, s.priority, s.seq,
+      FrontierEntry(Hashing.xx64(c), s.url, host, s.priority, s.seq,
         if (dis) FrontierState.Failed else FrontierState.Pending,
         if (dis) RobotsError else null, batchNo, -1L)
     }

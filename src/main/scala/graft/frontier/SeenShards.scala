@@ -20,11 +20,13 @@ import org.apache.spark.sql.functions._
   * verify; the Spark gate needs no probe — its exact anti-join reads
   * every candidate anyway. One insert, `insertLocal`, merges a batch's
   * fps into the touched shards of that snapshot, commits them as one
-  * small file and publishes the result as the next memoized version, so
-  * no job re-reads what the driver just built.
+  * small driver-written file and publishes the result as the next
+  * memoized version, so no job writes or re-reads what the driver just
+  * built.
   *
-  * The one fallback: a Spark-gate batch of more than `LocalInsertMaxFps`
-  * survivors, too many to collect, inserts through `insert`, which
+  * The one fallback: a Spark-gate batch of more than
+  * `CrawlEngine.LocalCommitMaxRows` survivors, too many to collect,
+  * inserts through `insert`, which
   * co-partitions the fps with the shard rows on the executors. Both
   * inserts run the same `mergeShard`, so their shard bytes are
   * identical by construction.
@@ -35,6 +37,10 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   import spark.implicits._
 
   private def hasState: Boolean = table.currentId.nonEmpty && !table.isEmpty
+
+  /** (shard, bytes, count) rows as the driver insert commits them. */
+  private val localShardRows =
+    SnapshotTable.LocalRows.encoder[(Int, Array[Byte], Long)]("shard", "bytes", "count")
 
   /** Version-keyed memo of the shard bytes: the shard table only
     * changes on an insert or a compaction, so consecutive gates over an
@@ -105,12 +111,13 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     }.toDF("shard", "bytes", "count"), metrics)
   }
 
-  /** The driver insert, for batches of at most `LocalInsertMaxFps` fps:
-    * each touched shard of the current snapshot takes its fps. Only the
-    * touched rows commit, as one file, and the memo moves to the
-    * committed version holding snapshot ++ touched: the next
-    * `snapshotBytes()`/`probeLocal` runs no job. The snapshot read is
-    * free when the gate already read this version. */
+  /** The driver insert, for batches whose fps are on the driver: each
+    * touched shard of the current snapshot takes its fps. Only the
+    * touched rows commit, as one driver-written file (`commitLocal`, no
+    * job), and the memo moves to the committed version holding
+    * snapshot ++ touched: the next `snapshotBytes()`/`probeLocal` runs
+    * no job either. The snapshot read is free when the gate already
+    * read this version. */
   def insertLocal(fps: Array[Long], metrics: Map[String, Double] = Map.empty): Unit = {
     if (fps.isEmpty) return
     val snapshot = snapshotBytes()
@@ -122,7 +129,7 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     val c = snapCache
     // the memo may only advance from the version the commit builds on
     val current = !hasState || (c != null && (c._2 eq snapshot) && table.currentId.contains(c._1))
-    val id = commit(touched.toDF("shard", "bytes", "count").coalesce(1), metrics)
+    val id = table.commitLocal(localShardRows(touched), upsert = table.currentId.nonEmpty, metrics)
     snapCache =
       if (current) (id, snapshot ++ touched.map { case (s, b, _) => s -> b })
       else null
@@ -134,12 +141,6 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
 }
 
 object SeenShards {
-  /** Most fps one driver insert takes: the Spark gate collects their
-    * (fp, seq) pairs, 16 B each, so 4M of them hold the driver to 64 MB
-    * per batch. The gate collects at most one more than this; a bigger
-    * batch commits through the co-partitioned `insert`. */
-  val LocalInsertMaxFps: Int = 1 << 22
-
   /** The shard merge both inserts run: the shard's filter (or an empty
     * one of `buckets` buckets) takes `fps` in sorted order, so the
     * result depends only on the shard bytes and the fps, not on their

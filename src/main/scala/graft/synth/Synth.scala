@@ -85,13 +85,15 @@ object Synth {
       (pmod(nnCol, lit(Delays.length.toLong)) + 1L).cast("int"))
   }
 
-  def isDisallowed(url: String, policy: HostPolicy): Boolean = {
-    val c = Hashing.canonicalize(url)
+  def isDisallowed(url: String, policy: HostPolicy): Boolean =
+    isDisallowedCanonical(Hashing.canonicalize(url), policy)
+
+  /** `isDisallowed` of an already canonical url `c`. */
+  def isDisallowedCanonical(c: String, policy: HostPolicy): Boolean = {
     val i = c.indexOf("://")
     val path = if (i < 0) c else {
-      val rest = c.substring(i + 3)
-      val j = rest.indexOf('/')
-      if (j < 0) "/" else rest.substring(j)
+      val j = c.indexOf('/', i + 3)
+      if (j < 0) "/" else c.substring(j)
     }
     policy.disallowPrefixes.exists(path.startsWith)
   }

@@ -1,10 +1,16 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, Pmod}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-shaped snapshot table: Parquet data files + JSON manifests +
@@ -69,9 +75,23 @@ import scala.jdk.CollectionConverters._
   *
   * Commit protocol (single-writer = the driver, same linearization the
   * reference got from its writer thread, utils/csv_utils.py:105-173):
-  * write data files → write manifest json → atomic-rename CURRENT.
+  * stage data files under `.stage-<id>-*` → atomic-move them into
+  * `data/` → write manifest json → atomic-rename CURRENT.
   * Crash between steps leaves the previous snapshot current (the
   * recovery suite exploits this).
+  *
+  * Two writers stage the data files, under that one protocol, with
+  * the same file names, (tag, bucket) split, manifest entries and
+  * parquet encoding (SnapshotTableSpec reads both back identically):
+  *  - `writeData` (`commitAppend`/`commitUpsert`, compaction): a Spark
+  *    write job, for rows that are distributed; its entries' row
+  *    counts and key ranges come from the written footers;
+  *  - `writeLocal` (`commitLocal`): Spark's parquet writer run on the
+  *    driver over rows the driver holds, one file per (tag, bucket),
+  *    no job; its entries' stats come from the rows. Every
+  *    batch-bounded engine commit takes it: at batch sizes the job
+  *    round trip, not the encoding, is most of a commit (512 rows:
+  *    193 ms as a job, 28 ms on the driver; CHANGES.md).
   *
   * Replaces: whole-file CSV sync (utils/csv_utils.py:83-101).
   */
@@ -423,12 +443,25 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
   /** Append new rows (new keys) as base files. */
   def commitAppend(df: DataFrame, metrics: Map[String, Double] = Map.empty,
                    props: Map[String, String] = Map.empty): Long =
-    commit(df, kind = "base", metrics, props)
+    commit(df.schema, kind = "base", metrics, props)(writeData(df, _, _, _))
 
   /** Upsert rows by key as a merge-on-read delta. */
   def commitUpsert(df: DataFrame, metrics: Map[String, Double] = Map.empty,
                    props: Map[String, String] = Map.empty): Long =
-    commit(df, kind = "delta", metrics, props)
+    commit(df.schema, kind = "delta", metrics, props)(writeData(df, _, _, _))
+
+  /** `commitAppend` (or, with `upsert`, `commitUpsert`) of rows held on
+    * the driver, written by the driver: no Spark job. Same file names,
+    * footers, manifest entries (all but `bytes`) and reads as the Spark
+    * writer gives for these rows (SnapshotTableSpec), so it is for
+    * writes whose rows are already on the driver and bounded — a
+    * few-file commit of a batch is then a few milliseconds of encoding
+    * instead of a job round trip. */
+  def commitLocal(data: LocalRows, upsert: Boolean = false,
+                  metrics: Map[String, Double] = Map.empty,
+                  props: Map[String, String] = Map.empty): Long =
+    commit(data.schema, kind = if (upsert) "delta" else "base", metrics, props)(
+      writeLocal(data, _, _, _))
 
   /** Fold deltas into a fresh base when read amplification grows.
     * The trigger counts distinct delta COMMITS (deltaSeq values), not
@@ -500,14 +533,18 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
       case _ => None
     }
 
-  private def commit(df: DataFrame, kind: String, metrics: Map[String, Double],
-                     props: Map[String, String]): Long = {
+  /** The commit protocol both writers share: `write(snapId, kind,
+    * deltaSeq)` stages and moves the data files, then the manifest is
+    * published and CURRENT renamed. */
+  private def commit(schema: StructType, kind: String, metrics: Map[String, Double],
+                     props: Map[String, String])
+                    (write: (Long, String, Long) => Seq[FileEntry]): Long = {
     val parent = currentManifest
     parent.foreach(validateLayout)
     val nextId = parent.map(_.id + 1).getOrElse(0L)
-    val schemaDdl = parent.map(_.schemaDdl).getOrElse(df.schema.toDDL)
+    val schemaDdl = parent.map(_.schemaDdl).getOrElse(schema.toDDL)
     val deltaSeq = if (kind == "delta") nextId else 0L
-    val newFiles = writeData(df, nextId, kind, deltaSeq)
+    val newFiles = write(nextId, kind, deltaSeq)
     val files = parent.map(_.files).getOrElse(Seq.empty) ++ newFiles
     // layoutProps merged LAST (ADVICE r4): a caller-supplied prop
     // colliding with a layout.* key must never shadow the persisted
@@ -578,7 +615,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
       val writer = out.write.mode("overwrite").options(writeOptions)
       if (partCols.isEmpty) writer.parquet(tmp.toString)
       else writer.partitionBy(partCols: _*).parquet(tmp.toString)
-      val parts: Seq[(String, Int, Path)] =
+      val parts: Seq[Staged] =
         Files.walk(tmp).iterator().asScala
           .filter(p => Files.isRegularFile(p) &&
             p.getFileName.toString.endsWith(".parquet"))
@@ -592,34 +629,123 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
               else if (seg.startsWith("__bucket="))
                 bucket = seg.stripPrefix("__bucket=").toInt
             }
-            (tag, bucket, p)
-          }.toSeq.sortBy { case (t, b, p) => (t, b, p.getFileName.toString) }
-      val moved = parts.zipWithIndex.map { case ((tag, bucket, p), i) =>
-        val tagPart = if (tag.isEmpty) "" else "-" + tag.filter(_.isLetterOrDigit)
-        val bucketPart = if (bucket < 0) "" else s"-b$bucket"
-        val name = f"snap-$snapId%06d-$kind$tagPart$bucketPart-part-$i%05d.parquet"
-        val dest = dataDir.resolve(name)
-        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-        (tag, bucket, name, dest)
-      }
+            Staged(tag, bucket, p)
+          }.toSeq
       // footer reads are independent metadata IO — serial reads were a
       // measurable slice of the per-batch fixed cost at 32-file commits;
       // the pool is shared (a crawl batch commits 5-6 times — per-commit
       // pool churn would be thousands of short-lived threads per drain)
-      moved.map { case (tag, bucket, name, dest) =>
+      place(parts, snapId, kind, deltaSeq).map { case (s, name, dest) =>
         SnapshotTable.footerPool.submit(new java.util.concurrent.Callable[FileEntry] {
-          override def call(): FileEntry = {
-            val (rows, minK, maxK) = footerStats(dest)
-            FileEntry(s"data/$name", kind, deltaSeq, rows, Files.size(dest),
-              minK, maxK, tag, bucket)
-          }
+          override def call(): FileEntry = entry(s, name, dest, kind, deltaSeq, footerStats(dest))
         })
       }.map(_.get())
-    } finally {
-      // clean any leftovers (_SUCCESS, crc files, the dir itself)
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+    } finally clearStage(tmp)
+  }
+
+  /** The driver writer behind `commitLocal`: one file per (tag, bucket)
+    * group — the groups `writeData` splits by, with the bucket from the
+    * same `pmod(hash(col), n)` expression evaluated on the row — encoded
+    * by Spark's own parquet writer (`ParquetFileFormat.prepareWrite` with
+    * the table's write options, as a `df.write` task sets it up), so
+    * types, nullability and footer metadata are what `writeData` writes.
+    * Rows, min and max key come from the rows, not from a footer read. */
+  private def writeLocal(data: LocalRows, snapId: Long, kind: String,
+                         deltaSeq: Long): Seq[FileEntry] = {
+    val schema = data.schema
+    val keyIdx = schema.fieldIndex(keyCol)
+    val keyType = schema(keyIdx).dataType
+    require(LocalKeyTypes(keyType), s"commitLocal: key type $keyType has no local key stats")
+    currentManifest.foreach { m =>
+      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+      require(shape(StructType.fromDDL(m.schemaDdl)) == shape(schema),
+        s"commitLocal rows (${schema.toDDL}) do not match the table (${m.schemaDdl})")
+    }
+    val tagOf: InternalRow => String = tagCol match {
+      case None => _ => ""
+      case Some(tc) =>
+        val i = schema.fieldIndex(tc)
+        require(schema(i).dataType == StringType, s"commitLocal: tag column $tc is not a string")
+        // null and "" land in Spark's default partition, as with partitionBy
+        r => if (r.isNullAt(i) || r.getUTF8String(i).numBytes == 0) DefaultPartition
+             else r.getUTF8String(i).toString
+    }
+    val bucketOf: InternalRow => Int = bucketBy match {
+      case Some((src, n)) if kind == "base" =>
+        val i = schema.fieldIndex(src)
+        val e = Pmod(new Murmur3Hash(Seq(BoundReference(i, schema(i).dataType, nullable = true))),
+          Literal(n))
+        r => e.eval(r).asInstanceOf[Int]
+      case _ => _ => -1
+    }
+    val groups = data.rows.groupBy(r => (tagOf(r), bucketOf(r))).toSeq.sortBy(_._1)
+    val tmp = Files.createTempDirectory(root, s".stage-$snapId-")
+    try {
+      val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConfWithOptions(writeOptions)
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[InternalRow])
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, writeOptions, schema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration, LocalAttempt)
+      val staged = groups.zipWithIndex.map { case (((tag, bucket), rows), i) =>
+        val s = Staged(tag, bucket, tmp.resolve(f"part-$i%05d.parquet"))
+        val w = factory.newInstance(s.file.toString, schema, ctx)
+        try rows.foreach(w.write)
+        catch { case t: Throwable =>
+          try w.close() catch { case c: Throwable => t.addSuppressed(c) }
+          throw t
+        }
+        w.close()
+        s -> keyStats(rows, keyIdx, keyType)
+      }.toMap
+      place(staged.keys.toSeq, snapId, kind, deltaSeq).map { case (s, name, dest) =>
+        entry(s, name, dest, kind, deltaSeq, staged(s))
+      }
+    } finally clearStage(tmp)
+  }
+
+  /** (rows, min key, max key) of one file's rows, as `footerStats` reads
+    * them from a footer: numbers in numeric order, strings as unsigned
+    * UTF-8 bytes (the order parquet statistics keep, and `UTF8String`'s),
+    * "" when no row has a key. */
+  private def keyStats(rows: Seq[InternalRow], i: Int, t: DataType): (Long, String, String) = {
+    val keys = rows.iterator.filterNot(_.isNullAt(i))
+    if (!keys.hasNext) (rows.size.toLong, "", "")
+    else t match {
+      case StringType =>
+        val ks = keys.map(_.getUTF8String(i)).toSeq
+        (rows.size.toLong, ks.min.toString, ks.max.toString)
+      case _ =>
+        val ks = keys.map(r => if (t == LongType) r.getLong(i) else r.getInt(i).toLong).toSeq
+        (rows.size.toLong, ks.min.toString, ks.max.toString)
     }
   }
+
+  /** The tail both writers share: moves each staged file into `data/`
+    * under its snapshot name, numbered in (tag, bucket, staged name)
+    * order. Returns (staged, name, moved path) in that order. */
+  private def place(staged: Seq[Staged], snapId: Long,
+                    kind: String, deltaSeq: Long): Seq[(Staged, String, Path)] =
+    staged.sortBy(s => (s.tag, s.bucket, s.file.getFileName.toString)).zipWithIndex.map {
+      case (s, i) =>
+        val tagPart = if (s.tag.isEmpty) "" else "-" + s.tag.filter(_.isLetterOrDigit)
+        val bucketPart = if (s.bucket < 0) "" else s"-b${s.bucket}"
+        val name = f"snap-$snapId%06d-$kind$tagPart$bucketPart-part-$i%05d.parquet"
+        val dest = dataDir.resolve(name)
+        Files.move(s.file, dest, StandardCopyOption.ATOMIC_MOVE)
+        (s, name, dest)
+    }
+
+  private def entry(s: Staged, name: String, dest: Path, kind: String, deltaSeq: Long,
+                    stats: (Long, String, String)): FileEntry =
+    FileEntry(s"data/$name", kind, deltaSeq, stats._1, Files.size(dest), stats._2, stats._3,
+      s.tag, s.bucket)
+
+  /** Deletes a stage dir and whatever a writer left in it (_SUCCESS,
+    * crc files, the files of an aborted commit). */
+  private def clearStage(tmp: Path): Unit =
+    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 
   /** Per-file lineage from the parquet footer — rowCount always, plus
     * min/max of the key column when its statistics are present. Costs
@@ -733,6 +859,46 @@ object SnapshotTable {
     * Built once (a `Configuration` loads its default resources on first
     * use) and never mutated, so the footer pool's threads only read it. */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
+  /** Rows held on the driver, as `commitLocal` takes them: `rows` laid
+    * out by `schema`. */
+  final case class LocalRows(schema: StructType, rows: Seq[InternalRow])
+
+  object LocalRows {
+    /** Encodes driver-held `T` values as `LocalRows`: the rows and schema
+      * `spark.createDataset(values)` holds, its columns renamed to
+      * `names` when given (as `toDF(names)` does). Build it once per
+      * type and reuse it — deriving the encoder and generating its
+      * projection cost more than encoding a batch; each thread gets its
+      * own projection, whose output row is reused. */
+    def encoder[T: Encoder](names: String*): Seq[T] => LocalRows = {
+      val enc = org.apache.spark.sql.catalyst.encoders.encoderFor[T]
+      val schema =
+        if (names.isEmpty) enc.schema
+        else StructType(enc.schema.fields.zip(names).map { case (f, n) => f.copy(name = n) })
+      val ser = ThreadLocal.withInitial[ExpressionEncoder.Serializer[T]](() => enc.createSerializer())
+      values => {
+        val s = ser.get()
+        LocalRows(schema, values.map(v => s(v).copy()))
+      }
+    }
+  }
+
+  /** Key types whose min/max `writeLocal` derives from the rows, in
+    * the form `footerStats` reads them from a footer. */
+  private val LocalKeyTypes: Set[DataType] = Set(LongType, IntegerType, StringType)
+
+  /** The partition dir Spark's `partitionBy` writes a null or empty tag
+    * value under, i.e. the tag `writeData` records for such rows. */
+  private val DefaultPartition =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
+  /** The task attempt a driver-written file is encoded under. */
+  private val LocalAttempt =
+    new TaskAttemptID(new TaskID(new JobID("graft-local", 0), TaskType.MAP, 0), 0)
+
+  /** A data file in a commit's stage dir and its (tag, bucket) group. */
+  private final case class Staged(tag: String, bucket: Int, file: Path)
 
   final case class FileEntry(path: String, kind: String, deltaSeq: Long,
                              rows: Long, bytes: Long, minKey: String,

@@ -55,13 +55,14 @@ object Hashing {
   def fp(url: String): Long = xx64(canonicalize(url))
 
   /** Host of a canonical URL (JVM). */
-  def host(url: String): String = {
-    val c = canonicalize(url)
+  def host(url: String): String = canonicalHost(canonicalize(url))
+
+  /** `host` of an already canonical url `c`. */
+  def canonicalHost(c: String): String = {
     val i = c.indexOf("://")
     if (i < 0) return ""
-    val rest = c.substring(i + 3)
-    val j = rest.indexOf('/')
-    if (j < 0) rest else rest.substring(0, j)
+    val j = c.indexOf('/', i + 3)
+    if (j < 0) c.substring(i + 3) else c.substring(i + 3, j)
   }
 
   private val HexUpper = "0123456789ABCDEF".toCharArray

@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class SnapshotTableSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -321,5 +322,103 @@ class SnapshotTableSpec extends AnyFunSuite {
     val t = new SnapshotTable(spark, freshDir(), "k")
     t.commitAppend(Seq.empty[(Long, String)].toDF("k", "v"))
     assert(t.read().count() === 0)
+  }
+
+  /** Rows of `df` as sorted strings — an order-free, null-safe
+    * comparison of two reads. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+
+  /** The parquet schema and key-value metadata of one data file. */
+  private def footerOf(t: SnapshotTable, path: String) = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(Paths.get(t.tableRoot).resolve(path).toString),
+      new org.apache.hadoop.conf.Configuration())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      val meta = r.getFooter.getFileMetaData
+      (meta.getSchema.toString, meta.getKeyValueMetaData.toString, meta.getCreatedBy)
+    } finally r.close()
+  }
+
+  test("driver-written and Spark-written commits of the same rows read back identically") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import SnapshotTable.LocalRows
+    def twins(mk: () => SnapshotTable, ddl: String, appended: Seq[Row], upserted: Seq[Row],
+              states: Seq[Set[String]]): Unit = {
+      val schema = StructType.fromDDL(ddl)
+      val toInternal = ExpressionEncoder(schema).createSerializer()
+      def local(rows: Seq[Row]) = LocalRows(schema, rows.map(r => toInternal(r).copy()))
+      def df(rows: Seq[Row]) =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+      val (sparkT, localT) = (mk(), mk())
+      sparkT.commitAppend(df(appended), Map("m" -> 1.0), Map("p" -> "a"))
+      localT.commitLocal(local(appended), metrics = Map("m" -> 1.0), props = Map("p" -> "a"))
+      sparkT.commitUpsert(df(upserted), Map("m" -> 2.0))
+      localT.commitLocal(local(upserted), upsert = true, metrics = Map("m" -> 2.0))
+      val (ms, ml) = (sparkT.currentManifest.get, localT.currentManifest.get)
+      assert(ml.copy(files = Nil) === ms.copy(files = Nil), s"$ddl: manifests differ")
+      assert(ml.files.map(_.copy(bytes = 0L)) === ms.files.map(_.copy(bytes = 0L)),
+        s"$ddl: file entries differ")
+      ms.files.zip(ml.files).foreach { case (a, b) =>
+        assert(footerOf(localT, b.path) === footerOf(sparkT, a.path), s"$ddl: footer of ${b.path}")
+      }
+      assert(rowsOf(localT.read()) === rowsOf(sparkT.read()), s"$ddl: read")
+      assert(rowsOf(localT.readRaw()) === rowsOf(sparkT.readRaw()), s"$ddl: readRaw")
+      states.foreach { want =>
+        assert(rowsOf(localT.readStates(want)) === rowsOf(sparkT.readStates(want)),
+          s"$ddl: readStates($want)")
+      }
+    }
+    val tagged = "k BIGINT NOT NULL, st STRING, v STRING"
+    twins(() => new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st")), tagged,
+      // null and "" tags land in Spark's default partition
+      (1L to 9L).map(i => Row(i, if (i % 3 == 0) "done" else "todo", s"v$i")) ++
+        Seq(Row(10L, null, "v10"), Row(11L, "", null)),
+      Seq(Row(1L, "done", "w1"), Row(4L, "gone", "w4"), Row(3L, "todo", "w3")),
+      Seq(Set("todo"), Set("done"), Set("gone", "todo")))
+    twins(() => new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st"),
+        bucketBy = Some(("h", 4))),
+      "k BIGINT NOT NULL, h STRING, st STRING",
+      (1L to 24L).map(i => Row(i, s"host${i % 7}", if (i % 5 == 0) "done" else "todo")),
+      Seq(Row(2L, "host2", "done"), Row(7L, "host0", "done")),
+      Seq(Set("todo"), Set("done")))
+    // string keys compare as unsigned UTF-8 bytes in parquet statistics:
+    // U+FF21 sorts below U+1F600 there, above it as UTF-16
+    twins(() => new SnapshotTable(spark, freshDir(), "id"), "id STRING, n BIGINT, note STRING",
+      Seq(Row("b", 1L, null), Row("\u00e9t\u00e9", 2L, "x"), Row("\uFF21", 3L, null),
+        Row("\uD83D\uDE00", 4L, "y"), Row("a", null, "z")),
+      Seq(Row("\u00e9t\u00e9", 5L, null), Row("\u4e2d", 6L, "new")),
+      Nil)
+  }
+
+  test("an aborted driver-written commit leaves no trace") {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    import SnapshotTable.LocalRows
+    val dir = freshDir()
+    val t = new SnapshotTable(spark, dir, "k", tagCol = Some("st"))
+    val schema = StructType.fromDDL("k BIGINT NOT NULL, st STRING, v STRING")
+    def row(k: Long, st: String, v: Any) =
+      new GenericInternalRow(Array[Any](k, UTF8String.fromString(st), v))
+    t.commitLocal(LocalRows(schema, (1L to 4L).map(k => row(k, "a", UTF8String.fromString(s"v$k")))))
+    val before = rowsOf(t.read())
+    val id = t.currentId
+    // the "b" file is written after the complete "a" file, and its
+    // second row holds a long where a string belongs
+    val bad = Seq(row(5L, "a", UTF8String.fromString("v5")), row(6L, "b", UTF8String.fromString("v6")),
+      row(7L, "b", 7L), row(8L, "b", UTF8String.fromString("v8")))
+    intercept[ClassCastException](t.commitLocal(LocalRows(schema, bad)))
+    assert(t.currentId === id)
+    val root = Paths.get(dir)
+    val stages = Files.list(root).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".stage-")).toSeq
+    assert(stages.isEmpty, s"stage dirs left: $stages")
+    val listed = t.retainedSnapshotIds.flatMap(i => t.manifest(i).files.map(_.path)).toSet
+    val onDisk = Files.list(root.resolve("data")).iterator().asScala
+      .map(p => s"data/${p.getFileName}").toSet
+    assert(onDisk.diff(listed).isEmpty, s"orphan data files: ${onDisk.diff(listed)}")
+    assert(rowsOf(t.read()) === before)
   }
 }
