@@ -129,13 +129,13 @@ object Frontier {
     * is skipped (T4 first-occurrence semantics). Must run BEFORE the
     * dedup gate so fps are unique downstream. */
   def firstOccurrence(candidates: DataFrame): DataFrame = {
-    // min_by aggregation, NOT a row_number window: same row selected
-    // (ties impossible — seq unique within a batch), but an aggregate
-    // has a map-side PARTIAL: a discovery wave whose outlinks hit a hot
-    // key collapses to one row per fp per task BEFORE the exchange,
-    // where the window shuffles (and sorts) every candidate row. At a
-    // 100 TB discovery wave that is the difference between shuffling
-    // O(outlinks) and O(distinct fps × tasks).
+    // min_by aggregation, not a row_number window over (fp; priority,
+    // seq): the same row (ties impossible — seq unique within a batch),
+    // and the aggregate's map-side PARTIAL collapses a url repeated
+    // within a task to one row before the exchange, where the window
+    // shuffles and sorts every candidate. The bulk feeds repeat urls
+    // (overlapping seed files; `searchBatchParallel`'s keyword pages
+    // overlap); on distinct urls the two forms cost the same
     val others = candidates.columns.filterNot(_ == "fp").toSeq
     candidates.groupBy("fp")
       .agg(min_by(struct(others.map(col): _*),
@@ -149,10 +149,11 @@ object Frontier {
     * agg's hash partitioning on fp (no new candidate-side exchange).
     * Expects unique fps. No cuckoo tier: the join reads every candidate
     * anyway, so a filter verdict would skip no work. This is the gate of
-    * the unbounded enqueue paths (bulk seeding, executor-side keyword
-    * expansion); batch-bounded candidates already on the driver (the
-    * drain's discovery waves, `searchBatch`) take `firstOccurrenceLocal`
-    * + `verifyHits` instead, where the filter does skip the verify. */
+    * the unbounded bulk feeds only (`init`, seed files, seed streams,
+    * executor-side keyword expansion); batch-bounded candidates already
+    * on the driver (the drain's discovery waves, `searchBatch`) take
+    * `firstOccurrenceLocal` + `verifyHits` instead, where the filter does
+    * skip the verify. */
   def dedupGate(candidates: DataFrame, frontierKeys: DataFrame): DataFrame =
     candidates.join(frontierKeys, Seq("fp"), "left_anti")
 
@@ -180,60 +181,32 @@ object Frontier {
       .withColumn("state", lit(FrontierState.Pending))
       .withColumn("priority", lit(FrontierState.RecoveryPriority))
 
-  /** Candidate URLs → FrontierEntry rows. Robots-disallowed urls enter
-    * directly as `failed` (terminal; counted in the seen set).
-    *
-    * PURE COLUMN expressions (r6): the old typed `.map` forced an
-    * object ser/deser boundary in every enqueue — the gate's hot path —
-    * breaking whole-stage codegen between the discovery explode and the
-    * first-occurrence aggregation. Each scalar has a bit-identical
-    * column twin: `Hashing.fpCol`/`hostCol` (pinned by CodecHashSpec),
-    * and the robots decision re-derives `Synth.unit(key) <
-    * RobotsDisallowRate` as `shiftrightunsigned(xxhash64(key), 11) /
-    * 2^53` — the same XXH64 kernel and the same IEEE ops, over the same
-    * `Synth` robots constants (pinned by SourcesOpsSpec's twin test).
-    * The scalars are an engine path too (`toEntriesLocal`, the
-    * batch-bounded enqueue), and the parity oracle uses them, so
-    * CrawlParitySpec and GatePathSpec cross-validate the two forms. */
+  /** Candidate URLs → FrontierEntry rows, streamed per partition through
+    * the same per-url derivation as `toEntriesLocal` (`entryOf`), so the
+    * Spark gate, the driver gate and the parity oracle key every url
+    * alike. Robots-disallowed urls enter directly as `failed` (terminal;
+    * counted in the seen set). A null url fails the task: no feed emits
+    * one (`initFromTextFile` and `streamSeeds` drop blank lines; `init`
+    * and `searchBatchParallel` emit `Synth` urls). */
   def toEntries(spark: SparkSession, urls: Dataset[SeedUrl], batchNo: Long,
                 seed: Long): DataFrame = {
-    val c = Hashing.canonicalizeCol(col("url"))
-    // path of the canonical url — scalar twin: Synth.isDisallowed
-    // (canonical urls always carry a "/" after the authority, so the
-    // scalar's j<0 → "/" branch only fires for "://"-less strings,
-    // which keep the whole string as path on both sides)
-    val path = when(!col("__c").rlike("(?s)://"),
-      col("__c")).otherwise(regexp_replace(col("__c"), "(?s)^.*?://[^/]*", ""))
-    // Synth.unit(robotsKeyPrefix(seed) + host) < RobotsDisallowRate,
-    // column form
-    val robots =
-      shiftrightunsigned(xxhash64(concat(lit(Synth.robotsKeyPrefix(seed)), col("host"))), 11)
-        .cast("double") / lit((1L << 53).toDouble) < Synth.RobotsDisallowRate
-    val disallowed = robots && path.startsWith(Synth.RobotsPrefix)
-    urls.toDF()
-      .withColumn("__c", c)
-      .withColumn("fp", xxhash64(col("__c")))
-      .withColumn("host", regexp_extract(col("__c"), "(?s)^.*?://([^/]*)", 1))
-      .withColumn("state",
-        when(disallowed, FrontierState.Failed).otherwise(FrontierState.Pending))
-      .withColumn("error",
-        when(col("state") === FrontierState.Failed, lit(RobotsError))
-          .otherwise(lit(null).cast("string")))
-      .withColumn("discoveredAt", lit(batchNo))
-      .withColumn("processedAt", lit(-1L))
-      .select("fp", "url", "host", "priority", "seq", "state", "error",
-        "discoveredAt", "processedAt")
+    import spark.implicits._
+    urls.mapPartitions(it => it.map(entryOf(batchNo, seed))).toDF()
   }
 
-  /** Scalar twin of `toEntries` for candidates already on the driver
-    * (the batch-bounded enqueue): the same row per url as
-    * `Hashing.fp`/`host` and `Synth.hostPolicy`/`isDisallowed` give — the
-    * scalars SourcesOpsSpec pins to the column form — with each url
-    * canonicalized once (fp, host and path all derive from that string)
-    * and one policy derivation per distinct host. */
-  def toEntriesLocal(urls: Seq[SeedUrl], batchNo: Long, seed: Long): Seq[FrontierEntry] = {
+  /** `toEntries` for candidates already on the driver (the batch-bounded
+    * enqueue). */
+  def toEntriesLocal(urls: Seq[SeedUrl], batchNo: Long, seed: Long): Seq[FrontierEntry] =
+    urls.map(entryOf(batchNo, seed))
+
+  /** The url → entry derivation: the same row as `Hashing.fp`/`host` and
+    * `Synth.hostPolicy`/`isDisallowed` give, with each url canonicalized
+    * once (fp, host and path all derive from that string) and one policy
+    * derivation per distinct host of the function's lifetime (a
+    * partition, or a driver batch). */
+  private def entryOf(batchNo: Long, seed: Long): SeedUrl => FrontierEntry = {
     val policies = scala.collection.mutable.HashMap.empty[String, HostPolicy]
-    urls.map { s =>
+    s => {
       val c = Hashing.canonicalize(s.url)
       val host = Hashing.canonicalHost(c)
       val dis = Synth.isDisallowedCanonical(c,

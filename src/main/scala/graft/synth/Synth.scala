@@ -53,20 +53,14 @@ object Synth {
     * and its column twin below. */
   val Delays: Array[Long] = Array(100L, 200L, 500L, 1000L, 5000L)
 
-  /** The robots gate — single source for the scalar policy below and
-    * its column twin in `Frontier.toEntries`: a host disallows
-    * `RobotsPrefix` when `unit(robotsKeyPrefix(seed) + host)` falls
-    * under `RobotsDisallowRate`. */
-  val RobotsPrefix = "/v/"
-  val RobotsDisallowRate = 0.05
-  def robotsKeyPrefix(seed: Long): String = s"policy:$seed:robots:"
-
   /** Per-host policy: crawl delay in {100,200,500,1000,5000} ms by hash;
-    * ~5% of hosts disallow /v/ entirely (robots gate). */
+    * ~5% of hosts disallow /v/ entirely (robots gate). Every enqueue
+    * path derives its robots verdict from this one function
+    * (`Frontier.toEntries`/`toEntriesLocal`, the parity oracle). */
   def hostPolicy(host: String, seed: Long = DefaultSeed): HostPolicy = {
     val d = Delays((nn(s"policy:$seed:delay:$host") % Delays.length).toInt)
     val dis =
-      if (unit(robotsKeyPrefix(seed) + host) < RobotsDisallowRate) Seq(RobotsPrefix)
+      if (unit(s"policy:$seed:robots:$host") < 0.05) Seq("/v/")
       else Seq.empty
     HostPolicy(host, d, dis)
   }

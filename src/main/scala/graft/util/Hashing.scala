@@ -1,26 +1,21 @@
 package graft.util
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.sql.catalyst.expressions.XXH64
 
 /** URL canonicalization + 64-bit fingerprints (SURVEY.md §2.8 X12).
-  *
-  * Two implementations kept bit-identical by `HashingSpec`:
-  *  - JVM-side (`fp`) for the single-threaded parity oracle;
-  *  - column-side (`fpCol`) using Spark's native `xxhash64` so the
-  *    hot path stays inside whole-stage codegen.
-  * Spark's `xxhash64(col)` = XXH64 over the UTF-8 bytes with seed 42,
-  * which `fp` reproduces via the same catalyst XXH64 kernel.
+  * `xx64` is XXH64 over the UTF-8 bytes with seed 42 — the catalyst
+  * kernel behind Spark's `xxhash64(col)`, so the two agree bit for bit
+  * (CodecHashSpec); the column form is used only where a plan must stay
+  * UDF-free (`Synth.crawlDelayMsCol`).
   */
 object Hashing {
 
   val XxSeed = 42L
 
-  /** Deterministic canonical form: trim, lowercase scheme+host, strip
-    * fragment, strip default :80, empty path → "/". Pure string ops so
-    * the column twin is exactly expressible with builtins. */
+  /** Deterministic canonical form: trim (every char ≤ U+0020), lowercase
+    * scheme+host (locale-independent), strip fragment, strip default
+    * :80, empty path → "/". */
   // default-port strip, ANCHORED to the authority — ":80/" later in the
   // path must never match or distinct urls collapse to one fingerprint
   private val DefaultPort = java.util.regex.Pattern
@@ -36,7 +31,7 @@ object Hashing {
       else {
         val hostEnd0 = noFrag.indexOf('/', schemeEnd + 3)
         val hostEnd = if (hostEnd0 < 0) noFrag.length else hostEnd0
-        noFrag.substring(0, hostEnd).toLowerCase + noFrag.substring(hostEnd)
+        noFrag.substring(0, hostEnd).toLowerCase(java.util.Locale.ROOT) + noFrag.substring(hostEnd)
       }
     val noPort = DefaultPort.matcher(s).replaceFirst("$1$2")
     if (noPort.contains("://") && noPort.indexOf('/', noPort.indexOf("://") + 3) < 0)
@@ -85,31 +80,4 @@ object Hashing {
     d.foreach(b => out.append(f"${b & 0xff}%02x"))
     out.toString
   }
-
-  /** Column twin of `canonicalize` — builtins only (codegen'd). */
-  def canonicalizeCol(c: Column): Column = {
-    val t = trim(c)
-    // (?s): a '#' fragment may contain newlines; JVM twin cuts at the
-    // first '#' unconditionally
-    val noFrag = regexp_replace(t, "(?s)#.*", "")
-    // lower(scheme://host) + unchanged path: split at first '/' after the
-    // FIRST '://' — non-greedy .*? mirrors the JVM twin's indexOf("://")
-    // (an anchored [^:]+ would skip urls whose pre-scheme text contains
-    // ':' or '/', silently diverging fp from fpCol)
-    val prefix = regexp_extract(noFrag, "(?s)^(.*?://[^/]*)", 1)
-    val path = regexp_replace(noFrag, "(?s)^.*?://[^/]*", "")
-    val recombined = concat(lower(prefix), path)
-    val base = when(prefix === "", noFrag).otherwise(recombined)
-    // authority-anchored default-port strip — same pattern as the JVM twin
-    val noPort = regexp_replace(base, "^([a-z][a-z0-9+.-]*://[^/:]*):80(/|$)", "$1$2")
-    when(noPort.rlike("://") && !noPort.rlike("://[^/]*/"), concat(noPort, lit("/")))
-      .otherwise(noPort)
-  }
-
-  /** Column twin of `fp`. */
-  def fpCol(c: Column): Column = xxhash64(canonicalizeCol(c))
-
-  /** Column twin of `host`. */
-  def hostCol(c: Column): Column =
-    regexp_extract(canonicalizeCol(c), "(?s)^.*?://([^/]*)", 1)
 }

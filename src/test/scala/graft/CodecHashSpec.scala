@@ -56,24 +56,15 @@ class CodecHashSpec extends AnyFunSuite {
     assert(sparkSide.toSeq === jvmSide)
   }
 
-  test("canonicalizeCol matches JVM canonicalize on tricky urls") {
-    import spark.implicits._
-    val urls = Seq("http://HostA.example.com/v/ABC#frag", "  http://h.com  ",
-      "http://host1.example.com/v/xyz", "http://H.com:80/Path", "http://h.com",
-      "plainstring", "http://h.com/a/b#x#y")
-    val sparkSide = urls.toDF("u")
-      .select(Hashing.canonicalizeCol(org.apache.spark.sql.functions.col("u")))
-      .as[String].collect()
-    assert(sparkSide.toSeq === urls.map(Hashing.canonicalize))
-  }
-
-  test("fpCol matches JVM fp") {
-    import spark.implicits._
-    val urls = (0 until 50).map(i => s"http://host${i % 7}.example.com/v/id$i")
-    val sparkSide = urls.toDF("u")
-      .select(Hashing.fpCol(org.apache.spark.sql.functions.col("u")))
-      .as[Long].collect()
-    assert(sparkSide.toSeq === urls.map(Hashing.fp))
+  test("canonicalize lowercases scheme and host whatever the JVM locale") {
+    // a tr-locale toLowerCase maps 'I' to dotless 'ı': the same seed list
+    // would fingerprint differently on such a machine
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      assert(Hashing.canonicalize("HTTP://WIKI.EXAMPLE.COM/v/X") === "http://wiki.example.com/v/X")
+      assert(Hashing.fp("HTTP://WIKI.EXAMPLE.COM/v/x") === Hashing.fp("http://wiki.example.com/v/x"))
+    } finally java.util.Locale.setDefault(saved)
   }
 
   test("phash is stable and distinguishes images") {

@@ -36,7 +36,10 @@ class GatePathSpec extends AnyFunSuite {
     url.replace("http://host", "HTTP://Host"),
     url.replace(".example.com/", ".EXAMPLE.com:80/"),
     url + "#frag",
-    s"  $url  ")
+    s"  $url  ",
+    // control whitespace: trimmed like a space by `canonicalize`
+    "\t" + url,
+    s"\u000b$url\f")
 
   /** (candidate list, the false-positive urls in it). */
   private def adversarial(eng: CrawlEngine): (Seq[SeedUrl], Seq[String]) = {

@@ -233,8 +233,8 @@ class SeenShardsPathSpec extends AnyFunSuite {
     val known = (0 until 200).map(k => Hashing.fp(url(k).url)).toSet
     val expected = (100 until 300).map(k => Hashing.fp(url(k).url)).filterNot(known).distinct
     assert(n === expected.size.toLong, "enqueued count")
-    // the gate is the first query that reads the candidates; the seen
-    // and frontier commits read its cached output after it
+    // the gate is the first query that reads the candidates; within the
+    // driver bound the seen and frontier commits write its collected rows
     val gate = plans.find(_.exists {
       case l: LocalRelation => l.output.exists(a => seedIds(a.exprId))
       case _                => false

@@ -56,13 +56,15 @@ class SourcesOpsSpec extends AnyFunSuite {
 
   test("toEntries column twins == scalar derivation over adversarial urls") {
     import spark.implicits._
-    // the r6 columnized toEntries must reproduce the scalar path
-    // (Hashing.fp/host + Synth.hostPolicy/isDisallowed) bit-for-bit —
-    // the single-threaded parity oracle still uses the scalars
+    // the Spark gate's toEntries must reproduce the scalars the parity
+    // oracle uses (Hashing.fp/host + Synth.hostPolicy/isDisallowed)
+    // bit-for-bit, however the urls are partitioned
     val urls = Seq(
       "http://host1.example.com/v/abc",
       "http://host1.example.com/v/abc#frag",
       "  HTTP://Host9.EXAMPLE.com:80/v/x  ",
+      "\thttp://host1.example.com/v/abc",     // control whitespace
+      "\u000bHTTP://Host9.EXAMPLE.com/v/x\f",
       "http://host2.example.com",            // no path
       "plainstring",                          // no scheme
       "a://b",                                // minimal authority
@@ -73,8 +75,10 @@ class SourcesOpsSpec extends AnyFunSuite {
     val seed = graft.synth.Synth.DefaultSeed
     val ds = spark.createDataset(urls.zipWithIndex.map { case (u, i) =>
       graft.model.SeedUrl(u, 0, i.toLong) })
-    val got = graft.frontier.Frontier.toEntries(spark, ds, 7L, seed)
-      .as[graft.model.FrontierEntry].collect().sortBy(_.seq).toSeq
+    def entries(in: org.apache.spark.sql.Dataset[graft.model.SeedUrl]) =
+      graft.frontier.Frontier.toEntries(spark, in, 7L, seed)
+        .as[graft.model.FrontierEntry].collect().sortBy(_.seq).toSeq
+    val got = entries(ds)
     val want = urls.zipWithIndex.map { case (u, i) =>
       val host = graft.util.Hashing.host(u)
       val policy = graft.synth.Synth.hostPolicy(host, seed)
@@ -84,6 +88,7 @@ class SourcesOpsSpec extends AnyFunSuite {
         if (dis) "robots: disallowed" else null, 7L, -1L)
     }
     assert(got === want)
+    assert(entries(ds.repartition(5)) === want)
     // the corpus must actually exercise both branches
     assert(want.exists(_.state == graft.model.FrontierState.Failed),
       "no disallowed url in the twin corpus")
