@@ -248,9 +248,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val lines = spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
       .filter(l => l.trim.nonEmpty) // F1 blank-row drop
       .toDF("url")
-    val (zipped, _) = graft.util.Rank.zipInOrder(lines, "__idx")
+    val (zipped, _) = graft.util.Rank.zipInOrder(lines, "seq", first = base)
     val withSeq = zipped
-      .withColumn("seq", lit(base) + col("__idx") - 1)
       .withColumn("priority", lit(Frontier.NormalPriority))
       .select("url", "priority", "seq").as[SeedUrl]
     enqueueBulk(Frontier.toEntries(spark, withSeq, batchNo = 0L, cfg.seed), batchNo = 0L)
@@ -287,10 +286,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
           .filter(trim(col("value")) =!= "") // F1 blank-row drop
           .select(col("file"), col("value").as("url"))
         val (ranked, _) = graft.util.Rank.withGlobalRank(
-          lines, Seq(col("file"), col("url")), "__rn", numParts = 8)
-        val base = currentMaxSeq + 1
+          lines, Seq(col("file"), col("url")), "seq", numParts = 8,
+          first = currentMaxSeq + 1)
         val seeds = ranked
-          .withColumn("seq", lit(base) + col("__rn") - 1)
           .withColumn("priority", lit(Frontier.NormalPriority))
           .select("url", "priority", "seq").as[SeedUrl]
         enqueueBulk(Frontier.toEntries(spark, seeds, batchNo = batchId, cfg.seed),
@@ -401,11 +399,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         urls.iterator.zipWithIndex.map { case (u, i) => (u, qseq, page, i) }
       }
     }.toDF("url", "qseq", "page", "idx")
-    val base = currentMaxSeq + 1
     val (ranked, _) = graft.util.Rank.withGlobalRank(expanded,
-      Seq(col("qseq"), col("page"), col("idx")), "__rn", numParts = 8)
+      Seq(col("qseq"), col("page"), col("idx")), "seq", numParts = 8,
+      first = currentMaxSeq + 1)
     val seeds = ranked
-      .withColumn("seq", lit(base) + col("__rn") - 1)
       .withColumn("priority", lit(Frontier.NormalPriority))
       .select("url", "priority", "seq").as[SeedUrl]
     // the Spark gate: this is the unbounded-backlog path (a

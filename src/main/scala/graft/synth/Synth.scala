@@ -18,8 +18,9 @@ object Synth {
   val DefaultSeed = 42L
 
   /** Unit double in [0,1) from a string key (stable across JVMs). */
-  def unit(key: String): Double =
-    ((Hashing.xx64(key) >>> 11).toDouble) / (1L << 53).toDouble
+  def unit(key: String): Double = unitOf(Hashing.xx64(key))
+
+  private def unitOf(h: Long): Double = ((h >>> 11).toDouble) / (1L << 53).toDouble
 
   /** Non-negative long from a key. */
   def nn(key: String): Long = Hashing.xx64(key) & Long.MaxValue
@@ -35,11 +36,45 @@ object Synth {
     math.min(nHosts - 1, math.max(0, r - 1))
   }
 
-  /** Seed url for line i (pure — callable from executors). */
+  /** Seed url for line i (pure — callable from executors): host
+    * `zipfHost(unit("seed:<seed>:host:<i>"))`, id
+    * `nn("seed:<seed>:id:<i>")` in base 36. The ASCII keys and the url
+    * are written into one byte buffer and the keys hashed in place: a url
+    * allocates the buffer, its String and its SeedUrl (~210 B), where two
+    * key strings, their UTF-8 copies and a growing builder took ~625 B. */
   def seedUrl(i: Long, nHosts: Int = 100, seed: Long = DefaultSeed): SeedUrl = {
-    val h = zipfHost(unit(s"seed:$seed:host:$i"), nHosts)
-    val id = java.lang.Long.toString(nn(s"seed:$seed:id:$i"), 36)
-    SeedUrl(s"http://host$h.example.com/v/$id", 0, i)
+    val b = new Array[Byte](64) // the longest key, "seed:" + 2 longs + ":host:", is 51
+    val pre = putDigits(b, putAscii(b, 0, "seed:"), seed, 10)
+    val hostKey = putDigits(b, putAscii(b, pre, ":host:"), i, 10)
+    val h = zipfHost(unitOf(Hashing.xx64(b, hostKey)), nHosts)
+    val idKey = putDigits(b, putAscii(b, pre, ":id:"), i, 10)
+    val id = Hashing.xx64(b, idKey) & Long.MaxValue
+    var end = putAscii(b, 0, "http://host")
+    end = putDigits(b, end, h, 10)
+    end = putAscii(b, end, ".example.com/v/")
+    end = putDigits(b, end, id, 36)
+    SeedUrl(new String(b, 0, end, java.nio.charset.StandardCharsets.ISO_8859_1), 0, i)
+  }
+
+  /** Writes ASCII `s` at `at`; returns the end. */
+  private def putAscii(b: Array[Byte], at: Int, s: String): Int = {
+    var k = 0
+    while (k < s.length) { b(at + k) = s.charAt(k).toByte; k += 1 }
+    at + s.length
+  }
+
+  /** Writes `v` at `at` as `java.lang.Long.toString(v, radix)` spells it;
+    * returns the end. Digits come from the negated magnitude, which also
+    * holds Long.MinValue. */
+  private def putDigits(b: Array[Byte], at: Int, v: Long, radix: Int): Int = {
+    val start = if (v < 0) { b(at) = '-'; at + 1 } else at
+    var n = 0
+    var x = if (v > 0) -v else v
+    do { n += 1; x /= radix } while (x != 0)
+    x = if (v > 0) -v else v
+    var p = start + n
+    do { p -= 1; b(p) = Character.forDigit(-(x % radix).toInt, radix).toByte; x /= radix } while (x != 0)
+    start + n
   }
 
   /** The seed list: n urls over ~nHosts hosts, zipf-skewed; seq = line

@@ -43,8 +43,12 @@ object Hashing {
     * `xxhash64` Spark SQL function on a StringType column. */
   def xx64(s: String): Long = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, XxSeed)
+    xx64(b, b.length)
   }
+
+  /** `xx64` of the first `len` bytes of `b` (a key already encoded). */
+  def xx64(b: Array[Byte], len: Int): Long =
+    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, len, XxSeed)
 
   /** URL fingerprint (JVM). */
   def fp(url: String): Long = xx64(canonicalize(url))

@@ -34,7 +34,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Rank {
 
-  /** Append a 1-based global rank column ordered by `order`.
+  /** Append a global rank column ordered by `order`, numbering the rows
+    * `first`, `first` + 1, … (the offsets carry `first`, so no long
+    * literal, which codegen would inline, varies with it).
     * Returns (ranked df, total row count) — callers that need the count
     * (positional split thresholds) get it for free from step 2.
     * The returned frame is materialization-stable: ranks depend only on
@@ -55,7 +57,7 @@ object Rank {
     * collect directly on the returned frame is safe (the projection
     * runs in checkpoint-aligned tasks first). */
   def withGlobalRank(df: DataFrame, order: Seq[Column], rankCol: String,
-                     numParts: Int = 0): (DataFrame, Long) = {
+                     numParts: Int = 0, first: Long = 1L): (DataFrame, Long) = {
     val spark = df.sparkSession
     val np = if (numParts > 0) numParts
              else spark.sessionState.conf.numShufflePartitions
@@ -75,7 +77,7 @@ object Rank {
     val total = offsets.last
     // monotonically_increasing_id() = (pid << 33) | local-index, counted
     // in partition-iterator order — exactly the sorted order here
-    val offArr = typedlit(offsets.dropRight(1).toSeq)
+    val offArr = typedlit(offsets.dropRight(1).map(_ + first - 1).toSeq)
     val ranked = sorted.withColumn(rankCol,
       element_at(offArr, spark_partition_id() + 1)
         + (monotonically_increasing_id()
@@ -84,13 +86,16 @@ object Rank {
     (ranked, total)
   }
 
-  /** Append a 1-based index column in the EXISTING partition/row order
-    * (no shuffle) — for sources whose physical order is the semantic
-    * order, e.g. seed text files where seq = line number. Kept on the
-    * recompute-twice RDD protocol deliberately: pinning a 10^10-line
-    * seed file in block storage (the checkpoint approach above) costs
-    * more than a second pass over the text source. */
-  def zipInOrder(df: DataFrame, idxCol: String): (DataFrame, Long) = {
+  /** Append an index column in the EXISTING partition/row order (no
+    * shuffle), numbering the rows `first`, `first` + 1, … — for sources
+    * whose physical order is the semantic order, e.g. seed text files
+    * where seq = line number. Kept on the recompute-twice RDD protocol
+    * deliberately: pinning a 10^10-line seed file in block storage (the
+    * checkpoint approach above) costs more than a second pass over the
+    * text source. `first` is applied in the zip, not as a literal in a
+    * later projection: codegen inlines a long literal, so a projection
+    * per distinct `first` would compile classes of its own. */
+  def zipInOrder(df: DataFrame, idxCol: String, first: Long = 1L): (DataFrame, Long) = {
     val spark = df.sparkSession
     val rdd = df.rdd
     val counts = spark.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
@@ -101,7 +106,7 @@ object Rank {
     val outSchema = StructType(
       df.schema.fields :+ StructField(idxCol, LongType, nullable = false))
     val indexed = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var i = offsets(pid)
+      var i = offsets(pid) + first - 1
       it.map { r => i += 1; Row.fromSeq(r.toSeq :+ i) }
     }
     (spark.createDataFrame(indexed, outSchema), total)

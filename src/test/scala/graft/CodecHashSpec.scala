@@ -67,6 +67,24 @@ class CodecHashSpec extends AnyFunSuite {
     } finally java.util.Locale.setDefault(saved)
   }
 
+  test("seedUrl hashes its keys in place exactly as the string keys hash") {
+    def byStrings(i: Long, nHosts: Int, seed: Long) = {
+      val h = Synth.zipfHost(Synth.unit(s"seed:$seed:host:$i"), nHosts)
+      val id = java.lang.Long.toString(Synth.nn(s"seed:$seed:id:$i"), 36)
+      s"http://host$h.example.com/v/$id"
+    }
+    val edges = Seq(0L, 1L, 9L, 10L, -1L, -10L, 123456789L, Long.MaxValue, Long.MinValue)
+    for {
+      seed <- edges :+ Synth.DefaultSeed
+      i <- edges ++ (0L until 300L)
+      nHosts <- Seq(1, 100, 100000)
+    } {
+      val s = Synth.seedUrl(i, nHosts, seed)
+      assert(s.url === byStrings(i, nHosts, seed), s"i=$i nHosts=$nHosts seed=$seed")
+      assert(s.seq === i && s.priority === 0)
+    }
+  }
+
   test("phash is stable and distinguishes images") {
     val a = ImageCodec.synthPixels(64, 64, 1L)
     val b = ImageCodec.synthPixels(64, 64, 2L)

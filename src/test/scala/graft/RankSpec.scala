@@ -29,6 +29,11 @@ class RankSpec extends AnyFunSuite {
           .select("id", "rn").as[(Long, Int)].collect()
           .map { case (i, v) => i -> v.toLong }.toMap
         assert(got === want, s"trial $trial parts $parts")
+        // numbered from `first`: the same order, shifted
+        val (from, _) = Rank.withGlobalRank(df, Seq(col("key"), col("id")), "rn",
+          first = 1000L)
+        assert(from.select("id", "rn").as[(Long, Long)].collect().toMap ===
+          want.map { case (i, v) => i -> (v + 999L) }, s"first, trial $trial parts $parts")
       }
     }
   }
@@ -49,5 +54,11 @@ class RankSpec extends AnyFunSuite {
     val got = zipped.select("v", "idx").as[(String, Long)].collect().sortBy(_._2)
     assert(got.map(_._1).toSeq === Seq("a", "b", "c", "d", "e"))
     assert(got.map(_._2).toSeq === Seq(1L, 2L, 3L, 4L, 5L))
+    // numbering from `first`, as initFromTextFile numbers a file's lines
+    // from the frontier's next seq
+    val (from, n) = Rank.zipInOrder(rdd.toDF("v"), "idx", first = 41L)
+    assert(n === 5)
+    val got41 = from.select("v", "idx").as[(String, Long)].collect().sortBy(_._2)
+    assert(got41.toSeq === Seq("a", "b", "c", "d", "e").zip(41L to 45L))
   }
 }
