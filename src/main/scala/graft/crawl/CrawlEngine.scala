@@ -72,10 +72,11 @@ final case class CrawlConfig(
   * of the batch — processing, terminal, seen and append — writes rows
   * the driver already holds with `SnapshotTable.commitLocal`: no job.
   * maxSeq and next-batch are prop reads. The seen commit is a driver
-  * insert into the memoized shard snapshot: no shuffle, and no job
-  * re-reads the shards after it (the snapshot costs one collect per
-  * table version the engine did not build itself, i.e. after a
-  * compaction or an over-bound insert). The bulk paths (init, seed
+  * insert into copies of the memoized shard filters, published as the
+  * next version once committed: no shuffle, and no job re-reads the
+  * shards after it (the filters cost one collect and decode per table
+  * version the engine did not build itself, i.e. after a compaction or
+  * an over-bound insert). The bulk paths (init, seed
   * files and streams, executor-side keyword expansion) run the Spark
   * gate — one action that also collects the survivors' rows, up to
   * `LocalCommitMaxRows` of them, so their seen insert and append are
@@ -246,7 +247,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val base = currentMaxSeq + 1
     // full width: textFile's default is min(defaultParallelism, 2) splits
     val lines = spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
-      .filter(l => l.trim.nonEmpty) // F1 blank-row drop
+      .filter(CrawlEngine.isSeedLine)
       .toDF("url")
     val (zipped, _) = graft.util.Rank.zipInOrder(lines, "seq", first = base)
     val withSeq = zipped
@@ -281,9 +282,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       .writeStream
       .option("checkpointLocation", s"$workDir/seed_stream_checkpoint")
       .foreachBatch { (batch: Dataset[String], batchId: Long) =>
-        val lines = batch
+        val lines = batch.filter(CrawlEngine.isSeedLine)
           .withColumn("file", input_file_name())
-          .filter(trim(col("value")) =!= "") // F1 blank-row drop
           .select(col("file"), col("value").as("url"))
         val (ranked, _) = graft.util.Rank.withGlobalRank(
           lines, Seq(col("file"), col("url")), "seq", numParts = 8,
@@ -458,9 +458,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * because nothing bounds the input: a first ingest of 10^9 seeds
     * would otherwise collect them all. A batch past the cut stays
     * distributed: one aggregate reads n and the max seq, the seen insert
-    * co-partitions and the append is a Spark write. The shard snapshot
-    * is read only when the driver insert will run, i.e. for
-    * 1..`maxLocal` survivors.
+    * co-partitions and the append is a Spark write. The shard filters
+    * are loaded only when the driver insert will run, i.e. for
+    * 1..`maxLocal` survivors, and not at all when the seen memo is
+    * already at the table's version.
     *
     * Only a batch past the cut caches the gate output: only it has
     * more than one reader (the aggregate, the seen insert, the append).
@@ -487,10 +488,10 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
       fresh.as[FrontierEntry].limit(maxLocal + 1).collect())
     if (survivors.length <= maxLocal) {
       if (survivors.nonEmpty) {
-        // read the driver insert's shard snapshot in its own phase
-        // (ONE collect per table version), so insertLocal finds it
+        // load the driver insert's shard filters in their own phase
+        // (ONE collect per table version), so insertLocal finds them
         // memoized
-        phase("enqueue-probe")(seen.snapshotBytes())
+        phase("enqueue-probe")(seen.probeLocal())
         commitFresh(Right(survivors.toSeq), batchNo)
       }
       survivors.length.toLong
@@ -532,15 +533,15 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * cache (Frontier.verifyHits) — the key table is never shuffled or
     * broadcast, and a batch with no positive runs no gate job at all.
     * The survivors commit from the driver as they are: their fps go to
-    * the driver seen insert, which builds on the snapshot the tier-1
-    * verdict already read, and their rows to a driver-written append —
+    * the driver seen insert, which copies the touched shard filters the
+    * tier-1 verdict probed, and their rows to a driver-written append —
     * a batch with no positive runs no Spark job at all.
     * Output (fresh rows, seen-shard bytes) is identical to
     * `enqueue(toEntries(...))` — GatePathSpec feeds both the same
     * adversarial list. */
   private[graft] def enqueueLocal(seeds: Seq[SeedUrl], batchNo: Long): Long = {
     val (cands, positives) = phase("enqueue-probe") {
-      val maybeSeen = seen.probeLocal(seen.snapshotBytes())
+      val maybeSeen = seen.probeLocal()
       val cs = Frontier.firstOccurrenceLocal(Frontier.toEntriesLocal(seeds, batchNo, cfg.seed))
       (cs, cs.iterator.map(_.fp).filter(maybeSeen).toArray)
     }
@@ -1134,6 +1135,10 @@ object CrawlEngine {
   /** Manifest prop: the batch number the next drain() starts at (1 +
     * the last batch committed terminal). */
   val NextBatchProp = "next_batch"
+  /** F1 blank-row drop of both seed readers (files and streams): a line
+    * is a seed iff `String.trim` — the trim `Hashing.canonicalize` does,
+    * every char ≤ U+0020 — leaves something. */
+  val isSeedLine: String => Boolean = _.trim.nonEmpty
   /** The most rows a claim may hold: `CrawlConfig` rejects a larger
     * `batchSize`. The process job collects each ok row's (seq,
     * outlinks), and ranking, entries, first occurrence and the cuckoo

@@ -65,7 +65,7 @@ class CommitJobsSpec extends AnyFunSuite {
     val (n0, jobs0) = jobsRunBy(scoped = true)(eng.enqueueLocal(seeds(0, 150), 0L))
     assert(n0 === 150L)
     assert(jobs0.isEmpty, s"the first enqueueLocal ran ${jobs0.mkString(", ")}")
-    val maybeSeen = eng.seen.probeLocal(eng.seen.snapshotBytes())
+    val maybeSeen = eng.seen.probeLocal()
     assert(!seeds(150, 300).exists(s => maybeSeen(Hashing.fp(s.url))), "pick other seeds")
     val (n1, jobs1) = jobsRunBy(scoped = true)(eng.enqueueLocal(seeds(150, 300), 1L))
     assert(n1 === 150L)

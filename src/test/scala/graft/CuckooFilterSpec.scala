@@ -45,12 +45,36 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("serialize/deserialize roundtrip preserves membership") {
-    val f = sized(1000)
-    val keys = (0L until 1000L).map(_ * 31L + 7L)
-    keys.foreach(f.insert)
-    val g = CuckooFilter.deserialize(f.serialize())
-    keys.foreach(k => assert(g.mightContain(k)))
-    assert(g.count === f.count)
+    // a filter at design load, and one whose overflow holds most keys
+    Seq((sized(1000), 1000L), (CuckooFilter.withBuckets(16), 200L)).foreach { case (f, n) =>
+      val keys = (0L until n).map(_ * 31L + 7L)
+      keys.foreach(f.insert)
+      val b = f.serialize()
+      val g = CuckooFilter.deserialize(b)
+      keys.foreach(k => assert(g.mightContain(k)))
+      assert(g.count === f.count)
+      assert(g.serialize() sameElements b, "bytes changed across a round trip")
+    }
+  }
+
+  test("deserialize rejects the old Java-serialized layout and truncated arrays") {
+    // the layout shards had before the plain one: an object stream
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bos)
+    out.writeInt(16)
+    out.writeObject(new Array[Short](16 * CuckooFilter.SlotsPerBucket))
+    out.writeObject(Set.empty[Long])
+    out.writeObject(Set.empty[(Int, Short)])
+    out.writeLong(0L)
+    out.close()
+    val f = CuckooFilter.withBuckets(16)
+    (0L until 200L).foreach(k => f.insert(k * 7919L))
+    val b = f.serialize()
+    Seq("java-serialized" -> bos.toByteArray, "no header" -> b.take(10),
+      "one byte short" -> b.dropRight(1), "one byte long" -> (b :+ 0.toByte)).foreach {
+      case (what, bytes) =>
+        withClue(what)(assertThrows[IllegalArgumentException](CuckooFilter.deserialize(bytes)))
+    }
   }
 
   test("sorted build is byte-deterministic regardless of input order") {

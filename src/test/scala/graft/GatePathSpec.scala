@@ -50,7 +50,7 @@ class GatePathSpec extends AnyFunSuite {
       .filter(h => Synth.hostPolicy(h, cfg.seed).disallowPrefixes.nonEmpty).take(2).toSeq
     val robots = robotsHosts.flatMap(h =>
       Seq(s"http://$h/v/r1", s"http://$h/v/r2", s"http://$h/about", s"HTTP://${h.toUpperCase}/v/r1"))
-    val maybe = eng.seen.probeLocal(eng.seen.snapshotBytes())
+    val maybe = eng.seen.probeLocal()
     val falsePositives = Iterator.iterate(nSeeds + 1000L)(_ + 1).map(url)
       .filter(u => maybe(Hashing.fp(u))).take(6).toSeq
     val urls = known ++ known.take(8).flatMap(variants) ++ fresh ++

@@ -47,7 +47,7 @@ class SeenShardsPathSpec extends AnyFunSuite {
       val r = new SeenShards(spark, tbl, 6, 1 << 8)
       val candidates = inserted.take(50) ++ fps(900 + trial, 100)
       def verdicts(s: SeenShards) = {
-        val maybe = s.probeLocal(s.snapshotBytes())
+        val maybe = s.probeLocal()
         candidates.map(fp => fp -> maybe(fp)).toMap
       }
       val vw = verdicts(w)
@@ -116,6 +116,37 @@ class SeenShardsPathSpec extends AnyFunSuite {
           assert(memo === shardMap(cTbl), s"trial $trial wave $i: driver insert != co-partitioned insert")
         }
     }
+  }
+
+  test("a driver insert whose commit fails publishes nothing; a retry commits") {
+    val (w, tbl) = mk(4, 1 << 8)
+    w.insertLocal(fps(61, 300).toArray)
+    val batch = fps(62, 200)
+    val candidates = fps(61, 300).take(50) ++ batch
+    def verdicts(probe: Long => Boolean) = candidates.map(probe)
+    val held = w.probeLocal()
+    val before = verdicts(held)
+    assert(!batch.forall(held), "every fp of the batch is already a filter positive")
+    val current = tbl.currentId
+    // a regular file in place of data/: the commit's move into it throws
+    val data = java.nio.file.Paths.get(tbl.tableRoot, "data")
+    val aside = java.nio.file.Paths.get(tbl.tableRoot, "data-aside")
+    Files.move(data, aside)
+    Files.createFile(data)
+    try {
+      intercept[java.io.IOException](w.insertLocal(batch.toArray))
+      assert(verdicts(w.probeLocal()) === before, "the failed insert was published")
+      assert(verdicts(held) === before, "the failed insert changed a probe taken before it")
+      assert(tbl.currentId === current, "CURRENT moved")
+    } finally {
+      Files.delete(data)
+      Files.move(aside, data)
+    }
+    assert(verdicts(new SeenShards(spark, tbl, 4, 1 << 8).probeLocal()) === before)
+    w.insertLocal(batch.toArray)
+    assert(tbl.currentId === current.map(_ + 1), "the retry did not commit")
+    assert(batch.forall(w.probeLocal()), "the retry's fps are not in the filter")
+    assert(verdicts(new SeenShards(spark, tbl, 4, 1 << 8).probeLocal()) === verdicts(w.probeLocal()))
   }
 
   test("bulk ingests run seen-table hygiene: after 8 ingests <= 6 delta commits, <= 8 snapshots, same seen set") {

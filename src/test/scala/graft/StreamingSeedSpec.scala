@@ -27,9 +27,10 @@ class StreamingSeedSpec extends AnyFunSuite {
     val eb = new CrawlEngine(spark, Files.createTempDirectory("batcheng").toString, cfg)
 
     def urlOf(i: Long) = Synth.seedUrl(i, cfg.nHosts, cfg.seed).url
-    // wave 1: 20 urls + an in-file duplicate + blank lines
+    // wave 1: 20 urls + an in-file duplicate + blank lines, two of them
+    // control whitespace only (blank to `String.trim`, not to SQL trim)
     val wave1 = (0L until 20L).map(urlOf) :+ urlOf(3L)
-    Files.writeString(Paths.get(watch, "f1.txt"), wave1.mkString("\n") + "\n\n\n")
+    Files.writeString(Paths.get(watch, "f1.txt"), wave1.mkString("\n") + "\n\n\t\n\f\n\n")
     val q = es.streamSeeds(watch)
     q.processAllAvailable()
     // wave 2: overlaps wave 1 (gate work) + fresh urls
