@@ -75,15 +75,15 @@ final case class CrawlConfig(
   * insert into copies of the memoized shard filters, published as the
   * next version once committed: no shuffle, and no job re-reads the
   * shards after it (the filters cost one collect and decode per table
-  * version the engine did not build itself, i.e. after a compaction or
-  * an over-bound insert). The bulk paths (init, seed
-  * files and streams, executor-side keyword expansion) run the Spark
-  * gate — one action that also collects the survivors' rows, up to
-  * `LocalCommitMaxRows` of them, so their seen insert and append are
-  * driver commits too (a bigger batch aggregates, inserts
-  * co-partitioned and appends with a Spark write instead; a batch with
-  * no survivor reads no shards) — then the seen table's hygiene check
-  * (a manifest read; compaction once more than 6 seen deltas pile up).
+  * version the engine did not build itself, i.e. after a compaction).
+  * The bulk paths (init, seed files and streams, executor-side keyword
+  * expansion) run the Spark gate — one action that also collects the
+  * survivors' rows, up to `LocalCommitMaxRows` of them, so their seen
+  * insert and append are driver commits too (a bigger batch collects
+  * only its survivors' (fp, seq) for the same seen insert and appends
+  * with a Spark write; a batch with no survivor reads no shards) — then
+  * the seen table's hygiene check (a manifest read; compaction once
+  * more than 6 seen deltas pile up).
   * The batch's WALL time is the critical path,
   * not the sum: commits ride a single-thread commit lane that overlaps
   * compute wherever the crash-safety order allows. Per batch:
@@ -450,28 +450,32 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * (every drain's discovery wave, `searchBatch`) take `enqueueLocal`.
     *
     * The gate's one action collects the survivors' full rows: n, the
-    * max seq, the driver's seen insert (`SeenShards.insertLocal`) and
-    * the append all come from that array, so both commits are
-    * driver-written files (`commitLocal`) and the gate is the call's
-    * only job. The collect is cut at `maxLocal` + 1 rows (default
-    * `CrawlEngine.LocalCommitMaxRows`, 64 MB of rows on the driver),
-    * because nothing bounds the input: a first ingest of 10^9 seeds
-    * would otherwise collect them all. A batch past the cut stays
-    * distributed: one aggregate reads n and the max seq, the seen insert
-    * co-partitions and the append is a Spark write. The shard filters
-    * are loaded only when the driver insert will run, i.e. for
-    * 1..`maxLocal` survivors, and not at all when the seen memo is
-    * already at the table's version.
+    * max seq, the seen insert (`SeenShards.insertLocal`) and the append
+    * all come from that array, so both commits are driver-written files
+    * (`commitLocal`) and the gate is the call's only job. The collect is
+    * cut at `maxLocal` + 1 rows (default `CrawlEngine.LocalCommitMaxRows`,
+    * 64 MB of rows on the driver), because nothing bounds the input: a
+    * first ingest of 10^9 seeds would otherwise collect them all. Past
+    * the cut the rows stay distributed and the append is a Spark write,
+    * but the seen insert is the same driver insert: one more collect
+    * brings the survivors' (fp, seq) pairs, for n, the max seq and the
+    * fps. They cost 84 B per survivor on the driver at the collect and
+    * 8 B while the insert runs (`SizeEstimator` over 131,072 collected
+    * pairs: 76 B a pair, 8 B a fp; 4-core box), and the seen set brings
+    * as much to the driver anyway: the probe that follows reads every
+    * shard filter, i.e. the 2 MB of slots at the defaults while the fps
+    * fit them (~1M), and 8 B of exact overflow per fp past that.
     *
-    * Only a batch past the cut caches the gate output: only it has
-    * more than one reader (the aggregate, the seen insert, the append).
-    * A batch within the cut, i.e. every bulk call with up to 2^17 new
-    * urls, skips a columnar cache build its one collect never reads. A
-    * batch past it pays a second pass of the gate, which grows like the
-    * co-partitioned insert and the Spark append that follow it: on a
-    * 4-core box, one `initFromTextFile` of 300k distinct urls took
-    * 5.8 s, against 5.2 s with the gate cached before the collect
-    * (median of 15 each), i.e. ~2 µs per new url. */
+    * Only a batch past the cut caches the gate output: only it has two
+    * readers (the pair collect and the append). A batch within the
+    * cut, i.e. every bulk call with up to 2^17 new urls, skips a
+    * columnar cache build its one collect never reads. A batch past it
+    * pays a second pass of the gate, inside `enqueue-gate`: on a 4-core
+    * box one `initFromTextFile` of 300k distinct urls into a fresh
+    * engine takes 2.84 s (quartiles 2.72–2.96 s, 18 calls after
+    * warm-ups), 1.84 s of it in the gate's two passes, and runs 8 Spark
+    * jobs; with the co-partitioned insert this path replaced it took
+    * 3.02 s (2.84–3.18 s) and 11 jobs. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long,
                              maxLocal: Int = CrawlEngine.LocalCommitMaxRows): Long = {
     // exact anti-join against the cache-resident key set (seenSet): all
@@ -487,24 +491,22 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val survivors = phase("enqueue-gate")(
       fresh.as[FrontierEntry].limit(maxLocal + 1).collect())
     if (survivors.length <= maxLocal) {
-      if (survivors.nonEmpty) {
-        // load the driver insert's shard filters in their own phase
-        // (ONE collect per table version), so insertLocal finds them
-        // memoized
-        phase("enqueue-probe")(seen.probeLocal())
-        commitFresh(Right(survivors.toSeq), batchNo)
-      }
+      if (survivors.nonEmpty) commitRows(survivors.toSeq, batchNo)
       survivors.length.toLong
     } else {
-      // past the bound the gate runs once more, into the cache its three
-      // readers share: this aggregate, the seen insert and the append
+      // past the bound the gate runs once more, into the cache its two
+      // readers share: the pair collect and the append
       fresh.cache()
       try {
-        val stats = phase("enqueue-gate")(
-          fresh.agg(count(lit(1)), max("seq")).head())
-        val n = stats.getLong(0)
-        commitFresh(Left((fresh, n, stats.getLong(1))), batchNo)
-        n
+        val (fps, maxSeq) = phase("enqueue-gate") {
+          val pairs = fresh.select("fp", "seq").as[(Long, Long)].collect()
+          (pairs.map(_._1), pairs.iterator.map(_._2).max)
+        }
+        // coalesce(1): an append across 32 shuffle partitions would
+        // write 32 files whose footers the manifest then reads; one
+        // writer task is cheaper than the per-file fixed costs it saves
+        commitFresh(fps, maxSeq, batchNo)(frontier.commitAppend(fresh.coalesce(1), _, _))
+        fps.length.toLong
       } finally fresh.unpersist()
     }
   }
@@ -556,41 +558,35 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         cands.filterNot(e => hits.contains(e.fp))
       }
     }
-    if (fresh.nonEmpty) commitFresh(Right(fresh), batchNo)
+    if (fresh.nonEmpty) commitRows(fresh, batchNo)
     fresh.size.toLong
   }
 
   /** Commit the gate survivors: seen-insert strictly BEFORE the
     * frontier append — the filter must be a superset of frontier keys,
     * or a crash between the two turns the driver gate's tier-1 fast path
-    * into duplicate appends. Survivors on the driver (`Right`: every
-    * driver-gate batch, and a Spark-gate batch of at most `maxLocal`)
-    * commit from the driver, with no Spark job: the driver seen insert,
-    * then a driver-written append. A Spark-gate batch past the bound
-    * (`Left`: the cached survivors, their count and max seq) inserts
-    * co-partitioned and appends with a Spark write. */
-  private def commitFresh(fresh: Either[(DataFrame, Long, Long), Seq[FrontierEntry]],
-                          batchNo: Long): Unit = {
-    val (n, freshMaxSeq) = fresh match {
-      case Left((_, n, maxSeq)) => (n, maxSeq)
-      case Right(rows)          => (rows.size.toLong, rows.iterator.map(_.seq).max)
-    }
+    * into duplicate appends. The seen insert is always the driver's
+    * (`insertLocal` of the survivors' `fps`); `append` writes the rows
+    * with the given metrics and props: a driver-written `commitLocal`
+    * for survivors on the driver (`commitRows`), a Spark `commitAppend`
+    * for a Spark-gate batch past the driver bound. */
+  private def commitFresh(fps: Array[Long], freshMaxSeq: Long, batchNo: Long)(
+      append: (Map[String, Double], Map[String, String]) => Long): Unit = {
+    // load the insert's shard filters in their own phase (ONE collect
+    // per table version), so insertLocal finds them memoized
+    phase("enqueue-probe")(seen.probeLocal())
     val seenMetrics = Map("batch" -> batchNo.toDouble)
-    val metrics = seenMetrics + ("enqueued" -> n.toDouble)
+    val metrics = seenMetrics + ("enqueued" -> fps.length.toDouble)
     val props = Map(CrawlEngine.MaxSeqProp -> math.max(currentMaxSeq, freshMaxSeq).toString)
-    fresh match {
-      case Right(rows) =>
-        phase("seen-commit")(seen.insertLocal(rows.iterator.map(_.fp).toArray, seenMetrics))
-        phase("append-commit")(frontier.commitLocal(entryRows(rows),
-          metrics = metrics, props = props))
-      case Left((df, _, _)) =>
-        phase("seen-commit")(seen.insert(df.select("fp"), seenMetrics))
-        // coalesce(1): an append across 32 shuffle partitions would
-        // write 32 files whose footers the manifest then reads; one
-        // writer task is cheaper than the per-file fixed costs it saves
-        phase("append-commit")(frontier.commitAppend(df.coalesce(1), metrics, props))
-    }
+    phase("seen-commit")(seen.insertLocal(fps, seenMetrics))
+    phase("append-commit")(append(metrics, props))
   }
+
+  /** `commitFresh` of survivors held on the driver, appended as a
+    * driver-written file: no Spark job. */
+  private def commitRows(rows: Seq[FrontierEntry], batchNo: Long): Unit =
+    commitFresh(rows.iterator.map(_.fp).toArray, rows.iterator.map(_.seq).max, batchNo)(
+      frontier.commitLocal(entryRows(rows), upsert = false, _, _))
 
   private val phaseSums =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.DoubleAdder]()
@@ -1161,14 +1157,17 @@ object CrawlEngine {
   /** Most survivors a Spark-gate batch commits from the driver
     * (`enqueue`'s default `maxLocal`; the gate collects at most one
     * more): its seen insert and append are then driver writes with no
-    * Spark job. A bigger batch inserts co-partitioned and appends with a
-    * Spark write. The driver holds each survivor twice while it commits,
+    * Spark job. The driver holds each survivor twice while it commits,
     * as the collected `FrontierEntry` and as its encoded row: 477 B per
     * survivor (`SizeEstimator` over 65,536 seed-list rows, 4-core box),
     * so the 64 MB driver budget holds ~140k; rounded down to 2^17 =
     * 131,072 (62.5 MB). A seed-ingest batch (~40k survivors) fits; a
-    * first bulk ingest of 10^9 seeds does not. Below it a commit is cheaper on the driver at every measured
-    * size: 512 rows 28 ms against 193 ms for the Spark write, 40k rows
-    * 94 ms against 274 ms (CHANGES.md). */
+    * first bulk ingest of 10^9 seeds does not. Below it a commit is
+    * cheaper on the driver at every measured size: 512 rows 28 ms
+    * against 193 ms for the Spark write, 40k rows 94 ms against 274 ms
+    * (CHANGES.md). A bigger batch appends with a Spark write and
+    * collects only its survivors' (fp, seq) pairs for the same seen
+    * insert: 84 B per survivor at the collect, 8 B while the insert
+    * runs (see `enqueue`). */
   val LocalCommitMaxRows: Int = 1 << 17
 }

@@ -2,7 +2,7 @@ package graft.frontier
 
 import graft.filter.CuckooFilter
 import graft.table.SnapshotTable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Partitioned cuckoo-filter URL-seen set (north rule; SURVEY.md §4.2).
@@ -15,22 +15,18 @@ import org.apache.spark.sql.functions._
   * The driver holds the set as ONE memo: the table version and its
   * live shard filters, `nShards × shardBuckets × 8 B` plus each shard's
   * overflow (2 MB at the engine defaults). No workload runs past that.
-  * A version this instance did not build (a compaction, a co-partitioned
-  * insert) is read and decoded once. One probe, `probeLocal`, answers
-  * the driver gate's tier-1 verdict from the memo, so only filter
-  * positives go to the exact verify; the Spark gate needs no probe —
-  * its exact anti-join reads every candidate anyway. One insert,
-  * `insertLocal`, merges a batch's fps into copies of the touched
-  * filters, commits their bytes as one small driver-written file and
-  * only then publishes the copies as the next version: a failed commit
-  * publishes nothing, and no job writes or re-reads what the driver
-  * just built. `snapshotBytes()` is the memo serialized.
-  *
-  * The one fallback: a Spark-gate batch of more than
-  * `CrawlEngine.LocalCommitMaxRows` survivors, too many to collect,
-  * inserts through `insert`, which co-partitions the fps with the shard
-  * rows on the executors. Both inserts run the same `merge`, so their
-  * shard bytes are identical by construction.
+  * A version this instance did not build (a compaction) is read and
+  * decoded once. One probe, `probeLocal`, answers the driver gate's
+  * tier-1 verdict from the memo, so only filter positives go to the
+  * exact verify; the Spark gate needs no probe — its exact anti-join
+  * reads every candidate anyway. One insert, `insertLocal`, merges a
+  * batch's fps into copies of the touched filters, commits their bytes
+  * as one small driver-written file and only then publishes the copies
+  * as the next version: a failed commit publishes nothing, and no job
+  * writes or re-reads what the driver just built. Every gate's
+  * survivors reach it on the driver, a Spark-gate batch past
+  * `CrawlEngine.LocalCommitMaxRows` too (see `CrawlEngine.enqueue`).
+  * `snapshotBytes()` is the memo serialized.
   */
 final class SeenShards(spark: SparkSession, table: SnapshotTable,
                        nShards: Int, shardBuckets: Int) {
@@ -76,31 +72,13 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     fp => fs.get(java.lang.Math.floorMod(fp, n).toInt).exists(_.mightContain(fp))
   }
 
-  /** Merge new fingerprints into the shard filters (upsert commit) on
-    * the executors, for a batch too big to collect: the fps cogroup
-    * with the shard rows on `shard`, and only touched shards are
-    * rewritten. Nothing reaches the driver, and the memo stays at the
-    * version before, so the next probe re-reads the table. */
-  def insert(newFps: DataFrame, metrics: Map[String, Double] = Map.empty): Unit = {
-    val buckets = shardBuckets
-    val nS = nShards
-    val fps = newFps.select(col("fp")).as[Long]
-      .groupByKey(fp => java.lang.Math.floorMod(fp, nS.toLong).toInt)
-    val shards = shardRows.groupByKey(_._1)
-    commit(fps.cogroup(shards) { (shard, fpIt, existing) =>
-      val arr = fpIt.toArray
-      if (arr.isEmpty) Iterator.empty // untouched shard: no rewrite
-      else Iterator(SeenShards.row(shard, SeenShards.merge(existing.nextOption()
-        .fold(CuckooFilter.withBuckets(buckets))(r => CuckooFilter.deserialize(r._2)), arr)))
-    }.toDF("shard", "bytes", "count"), metrics)
-  }
-
-  /** The driver insert, for batches whose fps are on the driver: a copy
-    * of each touched shard's filter takes its fps. Only the touched rows
-    * commit, as one driver-written file (`commitLocal`, no job); once it
-    * returns, the memo moves to the committed version holding the
-    * current filters with the copies in place, so the next probe runs no
-    * job either. */
+  /** The insert: a copy of each touched shard's filter takes its fps
+    * in sorted order, so the result depends only on the shard's content
+    * and the fps, not on their order. Only the touched rows commit, as
+    * one driver-written file (`commitLocal`, no job); once it returns,
+    * the memo moves to the committed version holding the current
+    * filters with the copies in place, so the next probe runs no job
+    * either. */
   def insertLocal(fps: Array[Long], metrics: Map[String, Double] = Map.empty): Unit = {
     if (fps.isEmpty) return
     val current = filters()
@@ -108,12 +86,14 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
     val touched = fps.groupBy(fp => java.lang.Math.floorMod(fp, n).toInt).toSeq.sortBy(_._1)
       .map { case (shard, shardFps) =>
         val f = current.get(shard).fold(CuckooFilter.withBuckets(shardBuckets))(_.copy())
-        shard -> SeenShards.merge(f, shardFps)
+        java.util.Arrays.sort(shardFps)
+        shardFps.foreach(f.insert)
+        shard -> f
       }
     val m = memo
     // the memo may only advance from the version the commit builds on
     val base = !hasState || (m != null && (m._2 eq current) && table.currentId.contains(m._1))
-    val id = table.commitLocal(localShardRows(touched.map { case (s, f) => SeenShards.row(s, f) }),
+    val id = table.commitLocal(localShardRows(touched.map { case (s, f) => (s, f.serialize(), f.count) }),
       upsert = table.currentId.nonEmpty, metrics)
     memo = if (base) (id, current ++ touched) else null
   }
@@ -121,22 +101,4 @@ final class SeenShards(spark: SparkSession, table: SnapshotTable,
   private def shardRows: org.apache.spark.sql.Dataset[(Int, Array[Byte])] =
     if (!hasState) spark.emptyDataset[(Int, Array[Byte])]
     else table.read().select(col("shard"), col("bytes")).as[(Int, Array[Byte])]
-
-  private def commit(rows: DataFrame, metrics: Map[String, Double]): Long =
-    if (table.currentId.isEmpty) table.commitAppend(rows, metrics)
-    else table.commitUpsert(rows, metrics)
-}
-
-object SeenShards {
-  /** The shard merge both inserts run: `f` (the shard's filter, a
-    * private copy, or an empty one) takes `fps` in sorted order, so the
-    * result depends only on the shard's content and the fps, not on
-    * their order. Sorts `fps` in place. */
-  private def merge(f: CuckooFilter, fps: Array[Long]): CuckooFilter = {
-    java.util.Arrays.sort(fps)
-    fps.foreach(f.insert)
-    f
-  }
-
-  private def row(shard: Int, f: CuckooFilter): (Int, Array[Byte], Long) = (shard, f.serialize(), f.count)
 }

@@ -74,6 +74,46 @@ class CommitJobsSpec extends AnyFunSuite {
     assert(eng.seenSet.as[Long].collect().sorted.toSeq === expected)
   }
 
+  test("a Spark-gate enqueue past the driver bound inserts on the driver: one table-layer job, no cogroup") {
+    import spark.implicits._
+    val cfg = CrawlConfig(seed = 53L, nHosts = 30, nShards = 4, shardBuckets = 1 << 8)
+    val eng = new CrawlEngine(spark, Files.createTempDirectory("jobs_bound").toString, cfg)
+    val seeds = spark.createDataset((0 until 300).map(k => Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed)))
+    // the physical operators (RDD scopes) of each job this thread runs,
+    // told apart from other threads' jobs by a local property: under
+    // adaptive execution a write job's call site is the stage thread's,
+    // so a table-layer write is the job that runs `WriteFiles`
+    val sc = spark.sparkContext
+    val tag = s"bound-${System.nanoTime()}"
+    val operators = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
+          operators.add(e.stageInfos.flatMap(_.rddInfos).flatMap(_.scope).map(_.name).distinct)
+    }
+    sc.addSparkListener(listener)
+    val (n, sites) =
+      try {
+        sc.setLocalProperty("graft.test.tag", tag)
+        jobsRunBy(scoped = true)(eng.enqueue(
+          graft.frontier.Frontier.toEntries(spark, seeds, batchNo = 0L, cfg.seed), 0L, maxLocal = 100))
+      } finally {
+        sc.setLocalProperty("graft.test.tag", null)
+        sc.removeSparkListener(listener)
+      }
+    assert(n === 300L)
+    val jobs = operators.asScala.toSeq
+    assert(jobs.exists(_.nonEmpty), "no operator scope was recorded")
+    val writes = jobs.filter(_.contains("WriteFiles"))
+    assert(writes.size === 1, s"table-layer jobs: ${writes.map(_.mkString(", ")).mkString("; ")}")
+    val reads = sites.filter(_.contains("SeenShards.scala"))
+    assert(reads.isEmpty, s"seen-set jobs: ${reads.mkString(", ")}")
+    val cogroups = jobs.filter(_.exists(_.contains("CoGroup")))
+    assert(cogroups.isEmpty, s"cogroup jobs: ${cogroups.map(_.mkString(", ")).mkString("; ")}")
+    assert(eng.seenSet.as[Long].collect().sorted.toSeq ===
+      (0 until 300).map(k => Hashing.fp(Synth.seedUrl(k.toLong, cfg.nHosts, cfg.seed).url)).sorted)
+  }
+
   test("a drain without compaction writes only the payload with Spark jobs") {
     val cfg = CrawlConfig(seed = 47L, nHosts = 30, batchSize = 64, compactEvery = 100,
       nShards = 4, shardBuckets = 1 << 8)
