@@ -36,7 +36,10 @@ final case class CrawlConfig(
                             // deltas only widen the bounded shadow-key
                             // broadcast, no longer a resolution window —
                             // so the O(active set) rewrite runs half as
-                            // often as the old window-path cadence (6)
+                            // often as the old window-path cadence (6).
+                            // An active set within the driver budget
+                            // compacts on the driver, with no Spark job
+                            // (SnapshotTable.compactIfNeeded)
     claimMode: String = "window", // window | bucketed (host-bucketed files,
                                   // exchange-free claim — the multi-executor
                                   // layout; costs more files/commit, so the
@@ -68,7 +71,11 @@ final case class CrawlConfig(
   * (seq, outlinks): discovery ranking, entries, first occurrence and the
   * cuckoo tier then run on the driver), the payload write, and the
   * enqueue's verify job over the filter positives (none when there are
-  * none) ≈ 3–4 Spark jobs plus hygiene (compaction). Every other commit
+  * none) ≈ 3–4 Spark jobs. Hygiene adds none while a table's active set
+  * is within the driver budget (`SnapshotTable.LocalCommitMaxRows` rows,
+  * `LocalCommitMaxBytes` on disk): its compaction is then resolved and
+  * written on the driver, and only a bigger active set compacts with a
+  * Spark resolve and write. Every other commit
   * of the batch — processing, terminal, seen and append — writes rows
   * the driver already holds with `SnapshotTable.commitLocal`: no job.
   * maxSeq and next-batch are prop reads. The seen commit is a driver
@@ -78,10 +85,10 @@ final case class CrawlConfig(
   * version the engine did not build itself, i.e. after a compaction).
   * The bulk paths (init, seed files and streams, executor-side keyword
   * expansion) run the Spark gate — one action that also collects the
-  * survivors' rows, up to `LocalCommitMaxRows` of them, so their seen
-  * insert and append are driver commits too (a bigger batch collects
-  * only its survivors' (fp, seq) for the same seen insert and appends
-  * with a Spark write; a batch with no survivor reads no shards) — then
+  * survivors' rows, up to `SnapshotTable.LocalCommitMaxRows` of them, so
+  * their seen insert and append are driver commits too (a bigger batch
+  * collects only its survivors' (fp, seq) for the same seen insert and
+  * appends with a Spark write; a batch with no survivor reads no shards) — then
   * the seen table's hygiene check (a manifest read; compaction once
   * more than 6 seen deltas pile up).
   * The batch's WALL time is the critical path,
@@ -453,7 +460,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * max seq, the seen insert (`SeenShards.insertLocal`) and the append
     * all come from that array, so both commits are driver-written files
     * (`commitLocal`) and the gate is the call's only job. The collect is
-    * cut at `maxLocal` + 1 rows (default `CrawlEngine.LocalCommitMaxRows`,
+    * cut at `maxLocal` + 1 rows (default `SnapshotTable.LocalCommitMaxRows`,
     * 64 MB of rows on the driver), because nothing bounds the input: a
     * first ingest of 10^9 seeds would otherwise collect them all. Past
     * the cut the rows stay distributed and the append is a Spark write,
@@ -477,7 +484,7 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * jobs; with the co-partitioned insert this path replaced it took
     * 3.02 s (2.84–3.18 s) and 11 jobs. */
   private[graft] def enqueue(entries: DataFrame, batchNo: Long,
-                             maxLocal: Int = CrawlEngine.LocalCommitMaxRows): Long = {
+                             maxLocal: Int = SnapshotTable.LocalCommitMaxRows): Long = {
     // exact anti-join against the cache-resident key set (seenSet): all
     // keys live in base files (appends introduce every key; deltas only
     // revise them), and the base-file set only changes on an append or
@@ -603,7 +610,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     * commit, hygiene) since construction — the drain's fixed-cost
     * decomposition Bench reports. Phases on the overlap lane
     * (processing/payload/terminal commits, hygiene) accumulate their
-    * own wall time even when hidden behind compute. */
+    * own wall time even when hidden behind compute; `drain-tail` is the
+    * wait at the end of `drain` for the last batch's tail, the one tail
+    * no batch overlaps. */
   def phaseTotals: Map[String, Double] = {
     import scala.jdk.CollectionConverters._
     phaseSums.asScala.map { case (k, v) => k -> v.sum() }.toMap
@@ -1033,7 +1042,8 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
         if (n > 0) { total += n; batchNo += 1; batches += 1 }
       }
     } finally {
-      try quiesce()
+      // the last batch's tail, the one no later batch overlaps
+      try phase("drain-tail")(quiesce())
       finally aqeBefore.foreach(v => spark.conf.set("spark.sql.adaptive.enabled", v))
     }
     (batches, total)
@@ -1151,23 +1161,8 @@ object CrawlEngine {
     * takes 8–12 minutes, so the driver's wave work stays about 1 % of
     * the batch at the bound. The claim's rows are collected as well,
     * for the driver-written processing and terminal commits: ~0.5 KB
-    * per row while they commit (see `LocalCommitMaxRows`), 62 MB at the
-    * 131,072-url batches of `graft.Bench`, ~0.5 GB at the bound. */
+    * per row while they commit (see `SnapshotTable.LocalCommitMaxRows`),
+    * 62 MB at the 131,072-url batches of `graft.Bench`, ~0.5 GB at the
+    * bound. */
   val DriverRankMaxRows: Long = 1L << 20
-  /** Most survivors a Spark-gate batch commits from the driver
-    * (`enqueue`'s default `maxLocal`; the gate collects at most one
-    * more): its seen insert and append are then driver writes with no
-    * Spark job. The driver holds each survivor twice while it commits,
-    * as the collected `FrontierEntry` and as its encoded row: 477 B per
-    * survivor (`SizeEstimator` over 65,536 seed-list rows, 4-core box),
-    * so the 64 MB driver budget holds ~140k; rounded down to 2^17 =
-    * 131,072 (62.5 MB). A seed-ingest batch (~40k survivors) fits; a
-    * first bulk ingest of 10^9 seeds does not. Below it a commit is
-    * cheaper on the driver at every measured size: 512 rows 28 ms
-    * against 193 ms for the Spark write, 40k rows 94 ms against 274 ms
-    * (CHANGES.md). A bigger batch appends with a Spark write and
-    * collects only its survivors' (fp, seq) pairs for the same seen
-    * insert: 84 B per survivor at the collect, 8 B while the insert
-    * runs (see `enqueue`). */
-  val LocalCommitMaxRows: Int = 1 << 17
 }

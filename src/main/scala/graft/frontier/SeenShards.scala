@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * as the next version: a failed commit publishes nothing, and no job
   * writes or re-reads what the driver just built. Every gate's
   * survivors reach it on the driver, a Spark-gate batch past
-  * `CrawlEngine.LocalCommitMaxRows` too (see `CrawlEngine.enqueue`).
+  * `SnapshotTable.LocalCommitMaxRows` too (see `CrawlEngine.enqueue`).
   * `snapshotBytes()` is the memo serialized.
   */
 final class SeenShards(spark: SparkSession, table: SnapshotTable,

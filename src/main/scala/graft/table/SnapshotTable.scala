@@ -3,10 +3,12 @@ package graft.table
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Murmur3Hash, Pmod}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,15 +85,17 @@ import scala.jdk.CollectionConverters._
   * Two writers stage the data files, under that one protocol, with
   * the same file names, (tag, bucket) split, manifest entries and
   * parquet encoding (SnapshotTableSpec reads both back identically):
-  *  - `writeData` (`commitAppend`/`commitUpsert`, compaction): a Spark
-  *    write job, for rows that are distributed; its entries' row
-  *    counts and key ranges come from the written footers;
-  *  - `writeLocal` (`commitLocal`): Spark's parquet writer run on the
-  *    driver over rows the driver holds, one file per (tag, bucket),
-  *    no job; its entries' stats come from the rows. Every
-  *    batch-bounded engine commit takes it: at batch sizes the job
-  *    round trip, not the encoding, is most of a commit (512 rows:
-  *    193 ms as a job, 28 ms on the driver; CHANGES.md).
+  *  - `writeData` (`commitAppend`/`commitUpsert`, compaction past the
+  *    driver budget): a Spark write job, for rows that are distributed;
+  *    its entries' row counts and key ranges come from the written
+  *    footers;
+  *  - `writeLocal` (`commitLocal`, compaction within the driver
+  *    budget): Spark's parquet writer run on the driver over rows the
+  *    driver holds, one file per (tag, bucket), no job; its entries'
+  *    stats come from the rows. Every batch-bounded engine commit takes
+  *    it: at batch sizes the job round trip, not the encoding, is most
+  *    of a commit (512 rows: 193 ms as a job, 28 ms on the driver;
+  *    CHANGES.md).
   *
   * Replaces: whole-file CSV sync (utils/csv_utils.py:83-101).
   */
@@ -472,9 +476,26 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * rewrite the active set each time). Frozen-tag base files
     * (terminal lifecycle states — never upserted again) carry over
     * UNTOUCHED: compaction cost is O(active set), not O(table), over a
-    * long drain. */
+    * long drain.
+    *
+    * The rewrite takes one of two paths, with the same files, manifest
+    * entries (all but `bytes`) and reads (SnapshotTableSpec):
+    *  - an active set (active bases, deltas, folded small frozen files)
+    *    within the driver budget — at most `LocalCommitMaxRows` rows and
+    *    `LocalCommitMaxBytes` on disk by the manifest's own counts — is
+    *    read, resolved and written on the driver (`resolveLocal`, then
+    *    `writeLocal`): no Spark job (timings at `LocalCommitMaxRows`);
+    *  - a bigger one is resolved by `resolveAll` and written by a Spark
+    *    write job sized by its bytes, the only path that scales to a
+    *    design-size active set. */
   def compactIfNeeded(maxDeltaCommits: Int = 8,
                       metrics: Map[String, Double] = Map.empty): Option[Long] =
+    compactIfNeeded(maxDeltaCommits, metrics, LocalCommitMaxRows)
+
+  /** `compactIfNeeded` with the driver path's row bound as a parameter
+    * (0 sends every non-empty active set to the Spark path). */
+  private[graft] def compactIfNeeded(maxDeltaCommits: Int, metrics: Map[String, Double],
+                                     maxLocalRows: Int): Option[Long] =
     currentManifest match {
       case Some(m) if {
         val deltas = m.files.filter(_.kind == "delta")
@@ -511,21 +532,29 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
           .groupBy(_.tag).filter(_._2.size >= 4).values.flatten.toSet
         val frozen = frozen0.filterNot(foldable)
         val active = active0 ++ foldable
-        val resolved = resolveAll(m.copy(files = active))
+        val schema = StructType.fromDDL(m.schemaDdl)
         val nextId = m.id + 1
-        // output files sized by the rewrite's bytes (~128 MB target):
-        // the resolution plan ends in O(shuffle partitions) tasks, so an
-        // unsized write emits ~32 files per tag per compaction and the
-        // claim/readKeys scans then reopen O(compactions × 32) files per
-        // batch — the measured growth term of the 300k-seed drain.
-        // repartition, NOT coalesce: coalesce(1) collapsed the whole
-        // resolve (scan + anti-join + delta window) into one task —
-        // measured 2.5-4.5 s lane stalls per compaction at 300k fill;
-        // the round-robin exchange moves O(active) small rows and keeps
-        // the resolve at full width with only the write narrow.
-        val nOut = math.max(1L, math.min(1024L,
-          active.map(_.bytes).sum / TargetFileBytes + 1)).toInt
-        val files = frozen ++ writeData(resolved.repartition(nOut), nextId, "base", 0L)
+        val activeBytes = active.map(_.bytes).sum
+        val rewritten =
+          if (active.map(_.rows).sum <= maxLocalRows && activeBytes <= LocalCommitMaxBytes &&
+              LocalKeyTypes(schema(keyCol).dataType))
+            writeLocal(resolveLocal(schema, active), nextId, "base", 0L)
+          else {
+            // output files sized by the rewrite's bytes (~128 MB target):
+            // the resolution plan ends in O(shuffle partitions) tasks, so
+            // an unsized write emits ~32 files per tag per compaction and
+            // the claim/readKeys scans then reopen O(compactions × 32)
+            // files per batch — the measured growth term of the 300k-seed
+            // drain. repartition, NOT coalesce: coalesce(1) collapsed the
+            // whole resolve (scan + anti-join + delta window) into one
+            // task — measured 2.5-4.5 s lane stalls per compaction at
+            // 300k fill; the round-robin exchange moves O(active) small
+            // rows and keeps the resolve at full width with only the
+            // write narrow.
+            val nOut = math.max(1L, math.min(1024L, activeBytes / TargetFileBytes + 1)).toInt
+            writeData(resolveAll(m.copy(files = active)).repartition(nOut), nextId, "base", 0L)
+          }
+        val files = frozen ++ rewritten
         val man = Manifest(nextId, Some(m.id), m.schemaDdl, files,
           metrics + ("compacted" -> 1.0), m.props ++ layoutProps)
         publish(man)
@@ -643,6 +672,37 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     } finally clearStage(tmp)
   }
 
+  private def sessionState =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+
+  /** The merge-on-read rule of `resolve`, applied on the driver to
+    * `files` (one manifest's bases and deltas): each file is read by
+    * Spark's parquet reader as a scan task reads it, a base row survives
+    * iff no delta holds its key (a null key never matches, as in the
+    * anti-join), and the highest-`deltaSeq` version of a delta key wins.
+    * The rows are laid out by `schema` with every column nullable, as
+    * `resolveAll`'s frame holds them. */
+  private def resolveLocal(schema: StructType, files: Seq[FileEntry]): LocalRows = {
+    val out = StructType(schema.fields.map(_.copy(nullable = true)))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, out, new StructType(),
+      out, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), sessionState.newHadoopConf())
+    // the reader reuses its row: each one is copied before it is kept
+    def rows(f: FileEntry): Iterator[InternalRow] = {
+      val p = root.resolve(f.path)
+      val size = Files.size(p)
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p.toString), 0L, size,
+        fileSize = size)).map(_.copy())
+    }
+    val k = out.fieldIndex(keyCol)
+    val kt = out(k).dataType
+    val (bases, deltas) = files.partition(_.kind == "base")
+    val latest = new java.util.HashMap[Any, InternalRow]()
+    deltas.sortBy(_.deltaSeq).foreach(rows(_).foreach(r => latest.put(r.get(k, kt), r)))
+    val survivors = bases.iterator.flatMap(rows)
+      .filter(r => r.isNullAt(k) || !latest.containsKey(r.get(k, kt)))
+    LocalRows(out, survivors.toVector ++ latest.values.asScala)
+  }
+
   /** The driver writer behind `commitLocal`: one file per (tag, bucket)
     * group — the groups `writeData` splits by, with the bucket from the
     * same `pmod(hash(col), n)` expression evaluated on the row — encoded
@@ -681,8 +741,7 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     val groups = data.rows.groupBy(r => (tagOf(r), bucketOf(r))).toSeq.sortBy(_._1)
     val tmp = Files.createTempDirectory(root, s".stage-$snapId-")
     try {
-      val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.newHadoopConfWithOptions(writeOptions)
+      val conf = sessionState.newHadoopConfWithOptions(writeOptions)
       val job = org.apache.hadoop.mapreduce.Job.getInstance(conf)
       job.setOutputKeyClass(classOf[Void])
       job.setOutputValueClass(classOf[InternalRow])
@@ -726,16 +785,24 @@ final class SnapshotTable(spark: SparkSession, dir: String, keyCol: String,
     * under its snapshot name, numbered in (tag, bucket, staged name)
     * order. Returns (staged, name, moved path) in that order. */
   private def place(staged: Seq[Staged], snapId: Long,
-                    kind: String, deltaSeq: Long): Seq[(Staged, String, Path)] =
-    staged.sortBy(s => (s.tag, s.bucket, s.file.getFileName.toString)).zipWithIndex.map {
+                    kind: String, deltaSeq: Long): Seq[(Staged, String, Path)] = {
+    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try staged.sortBy(s => (s.tag, s.bucket, s.file.getFileName.toString)).zipWithIndex.map {
       case (s, i) =>
         val tagPart = if (s.tag.isEmpty) "" else "-" + s.tag.filter(_.isLetterOrDigit)
         val bucketPart = if (s.bucket < 0) "" else s"-b${s.bucket}"
         val name = f"snap-$snapId%06d-$kind$tagPart$bucketPart-part-$i%05d.parquet"
         val dest = dataDir.resolve(name)
         Files.move(s.file, dest, StandardCopyOption.ATOMIC_MOVE)
+        moved += dest
         (s, name, dest)
+    } catch { case t: Throwable =>
+      // a failed move takes back the files already moved: no manifest
+      // will list them, and `expire` only deletes listed files
+      moved.foreach(p => try Files.deleteIfExists(p) catch { case c: Throwable => t.addSuppressed(c) })
+      throw t
     }
+  }
 
   private def entry(s: Staged, name: String, dest: Path, kind: String, deltaSeq: Long,
                     stats: (Long, String, String)): FileEntry =
@@ -803,6 +870,35 @@ object SnapshotTable {
     * ceil(bytes/target) files so scans open O(bytes/target) files, not
     * O(compactions × shuffle partitions). */
   val TargetFileBytes: Long = 128L << 20
+
+  /** The table layer's driver budget in rows: the most rows a
+    * batch-bounded write holds on the driver — `CrawlEngine.enqueue`'s
+    * Spark-gate survivors committed by `commitLocal`, and the active set
+    * a compaction resolves and writes on the driver (`compactIfNeeded`,
+    * which also caps its bytes at `LocalCommitMaxBytes`). The driver
+    * holds each enqueue survivor twice while it commits, as the
+    * collected `FrontierEntry` and as its encoded row: 477 B per
+    * survivor (`SizeEstimator` over 65,536 seed-list rows, 4-core box),
+    * so the 64 MB driver budget holds ~140k; rounded down to 2^17 =
+    * 131,072 (62.5 MB). A seed-ingest batch (~40k survivors) fits; a
+    * first bulk ingest of 10^9 seeds does not. Below it a commit is
+    * cheaper on the driver at every measured size: 512 rows 28 ms
+    * against 193 ms for the Spark write, 40k rows 94 ms against 274 ms
+    * (CHANGES.md). A compaction within the bound holds its active set
+    * on the driver once, as resolved rows: 373 B a row (`SizeEstimator`
+    * over the resolved rows of a frontier active set: one pending base
+    * and two 512-row deltas, ~40-char urls; 4-core box), 48.5 MB at
+    * 2^17 rows. It is the faster path at every measured size (median
+    * of 7 alternating reps after 2 warm-ups, adaptive execution off as
+    * in a drain): 100 ms against 444 ms for the Spark resolve and write
+    * at 30,000 active rows (drain-deep's frontier), 237 ms against
+    * 592 ms at 2^17. */
+  val LocalCommitMaxRows: Int = 1 << 17
+
+  /** The driver budget in on-disk bytes of a compaction's active set:
+    * 64 MB, so a payload compaction (~64 KB PNG rows, ~1k rows to the
+    * budget) stays a Spark job. */
+  val LocalCommitMaxBytes: Long = 64L << 20
 
   /** Manifest-bytes bound under which a pruned state read broadcasts
     * the since-compaction shadow keys (full-row bytes — conservative

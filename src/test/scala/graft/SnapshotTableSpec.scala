@@ -276,7 +276,9 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("fuzz: 40 random commit/compact/expire interleavings match a model map (3 seeds)") {
     import spark.implicits._
-    (0 until 3).foreach { trial =>
+    // each trial runs with both compaction paths: the driver's within
+    // the default bound, Spark's with a bound of 0 rows
+    for (maxLocal <- Seq(SnapshotTable.LocalCommitMaxRows, 0); trial <- 0 until 3) {
       val r = new scala.util.Random(trial * 7 + 1)
       val t = new SnapshotTable(spark, freshDir(), "k")
       val model = scala.collection.mutable.HashMap.empty[Long, String]
@@ -299,13 +301,13 @@ class SnapshotTableSpec extends AnyFunSuite {
           rows.foreach { case (k, v) => model(k) = v }
           t.commitUpsert(rows.toDF("k", "v"))
         } else if (op < 9) {
-          t.compactIfNeeded(maxDeltaCommits = 3)
+          t.compactIfNeeded(3, Map.empty, maxLocal)
         } else {
           t.expire(keepLast = 4)
         }
       }
       val got = t.read().as[(Long, String)].collect().sortBy(_._1).toSeq
-      assert(got === model.toSeq.sortBy(_._1), s"trial $trial diverged")
+      assert(got === model.toSeq.sortBy(_._1), s"trial $trial (bound $maxLocal) diverged")
       // the raw dump re-derivation must agree too (oracle contract)
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
@@ -313,7 +315,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       val raw = t.readRaw().withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).select("k", "v")
         .as[(Long, String)].collect().sortBy(_._1).toSeq
-      assert(raw === got, s"trial $trial raw re-derivation diverged")
+      assert(raw === got, s"trial $trial (bound $maxLocal) raw re-derivation diverged")
     }
   }
 
@@ -420,5 +422,79 @@ class SnapshotTableSpec extends AnyFunSuite {
       .map(p => s"data/${p.getFileName}").toSet
     assert(onDisk.diff(listed).isEmpty, s"orphan data files: ${onDisk.diff(listed)}")
     assert(rowsOf(t.read()) === before)
+
+    // a driver compaction that fails mid-write: its "b" file cannot move
+    // into place (a directory holds its name) after the "a" file has
+    t.commitLocal(LocalRows(schema, Seq(row(2L, "b", UTF8String.fromString("w2")),
+      row(3L, "a", UTF8String.fromString("w3")))), upsert = true)
+    val upserted = rowsOf(t.read())
+    val compactId = t.currentId.get + 1
+    val blocker = root.resolve("data").resolve(f"snap-$compactId%06d-base-b-part-00001.parquet")
+    Files.createDirectory(blocker)
+    intercept[java.nio.file.FileSystemException](t.compactIfNeeded(maxDeltaCommits = 0))
+    assert(t.currentId === Some(compactId - 1))
+    assert(Files.list(root).iterator().asScala.forall(!_.getFileName.toString.startsWith(".stage-")),
+      "a stage dir was left")
+    val afterFail = Files.list(root.resolve("data")).iterator().asScala
+      .filterNot(_ == blocker).map(p => s"data/${p.getFileName}").toSet
+    assert(afterFail === onDisk ++ t.currentManifest.get.files.map(_.path),
+      s"new data files: ${afterFail.diff(onDisk)}")
+    assert(rowsOf(t.read()) === upserted)
+    // the same compaction commits once the name is free
+    Files.delete(blocker)
+    assert(t.compactIfNeeded(maxDeltaCommits = 0) === Some(compactId))
+    assert(t.currentManifest.get.files.forall(_.kind == "base"))
+    assert(rowsOf(t.read()) === upserted)
+  }
+
+  test("driver and Spark compaction of the same manifest give the same table") {
+    import spark.implicits._
+    val dir = freshDir()
+    def open(d: String) = new SnapshotTable(spark, d, "k", tagCol = Some("st"),
+      frozenTags = Set("done"), bucketBy = Some(("h", 4)))
+    val t = open(dir)
+    def rows(vs: (Long, String, String)*) =
+      vs.map { case (k, st, v) => (k, s"host${k % 5}", st, v) }.toDF("k", "h", "st", "v")
+    t.commitAppend(rows((1L to 30L).map(k => (k, "todo", s"a$k")): _*))
+    // four appends of terminal rows: ≥ 4 small frozen files of one tag,
+    // which the compaction folds into its rewrite
+    (0 until 4).foreach { i =>
+      t.commitAppend(rows((31L + 4 * i to 34L + 4 * i).map(k => (k, "done", s"a$k")): _*))
+    }
+    t.commitUpsert(rows((1L, "done", "u1"), (2L, "todo", "u2"), (3L, "gone", "u3")))
+    // deltas override bases and each other; key 99 exists only in deltas
+    t.commitUpsert(rows((1L, "todo", "w1"), (2L, "done", "w2"), (99L, "todo", "x99")))
+    t.commitUpsert(rows((3L, "done", "z3"), (99L, "done", "y99")))
+    val m = t.currentManifest.get
+    assert(m.files.count(f => f.kind == "base" && f.tag == "done") >= 4)
+    // the same manifest twice: the table copied file by file
+    val copy = freshDir()
+    Files.walk(Paths.get(dir)).iterator().asScala.toSeq.foreach { p =>
+      val to = Paths.get(copy).resolve(Paths.get(dir).relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    val (local, viaSpark) = (open(dir), open(copy))
+    assert(local.compactIfNeeded(0, Map("m" -> 1.0), SnapshotTable.LocalCommitMaxRows).isDefined)
+    assert(viaSpark.compactIfNeeded(0, Map("m" -> 1.0), 0).isDefined)
+    val (ml, ms) = (local.currentManifest.get, viaSpark.currentManifest.get)
+    assert(ml.copy(files = Nil) === ms.copy(files = Nil))
+    assert(ml.files.map(_.copy(bytes = 0L)) === ms.files.map(_.copy(bytes = 0L)))
+    // every file rewritten: the small frozen files folded, no delta left
+    assert(ml.files.forall(_.kind == "base"))
+    assert(ml.files.map(_.path).intersect(m.files.map(_.path)).isEmpty)
+    assert(rowsOf(local.read()) === rowsOf(viaSpark.read()))
+    assert(rowsOf(local.readRaw()) === rowsOf(viaSpark.readRaw()))
+    Seq(Set("todo"), Set("done"), Set("gone")).foreach { want =>
+      assert(rowsOf(local.readStates(want)) === rowsOf(viaSpark.readStates(want)), s"readStates($want)")
+    }
+    def byBucket(tbl: SnapshotTable) =
+      tbl.bucketedStateScan(Set("todo")).map { case (b, df) => b -> rowsOf(df) }
+    assert(byBucket(local) === byBucket(viaSpark))
+    val resolved = local.read().select("k", "st", "v").as[(Long, String, String)].collect()
+      .map { case (k, st, v) => k -> (st, v) }.toMap
+    assert(resolved(1L) === (("todo", "w1")) && resolved(2L) === (("done", "w2")) &&
+      resolved(3L) === (("done", "z3")) && resolved(99L) === (("done", "y99")) &&
+      resolved(4L) === (("todo", "a4")) && resolved(31L) === (("done", "a31")))
+    assert(resolved.size === 47)
   }
 }
